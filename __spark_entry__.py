@@ -59,7 +59,7 @@ def grid_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     The band derivations keep every value ≥ 1 so no nodata collisions and
     no zero denominators exist anywhere downstream.
     """
-    d = _spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    d = _read(spark, sf_dir, "documents")
     d = d.withColumns(
         {
             "col": (F.col("doc_id") % NCOLS).cast("long"),
@@ -155,12 +155,24 @@ def _spread(df: DataFrame) -> DataFrame:
     return dedup.spread_small_input(df)
 
 
+def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """One testdata table, spread. The schema comes from the parquet
+    footer on the driver: Spark's own schema inference runs a job per
+    read, and building a query plan should start none."""
+    import pyarrow.parquet as papq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    path = f"{sf_dir}/{table}.parquet"
+    schema = from_arrow_schema(papq.read_schema(path))
+    return _spread(spark.read.schema(schema).parquet(path))
+
+
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    return _read(spark, sf_dir, "documents")
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _spread(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
+    return _read(spark, sf_dir, "embeddings")
 
 
 # ---------------------------------------------------------------------------
@@ -183,8 +195,13 @@ def entry(spark: SparkSession) -> DataFrame:
         bands=("blue", "green", "red"),
         keep_doc_columns=["doc_id", "span_hash"],
     )
-    # union of information: points extraction + clip row count as a column
-    return out.withColumn("clip_rows", F.lit(clipped.count()).cast("long"))
+    # union of information: points extraction + clip row count as a column.
+    # The count is a one-row aggregate folded into the plan as a scalar
+    # subquery (evaluated once, its value shipped to every task), so
+    # building this query runs no Spark job. A join against it would do
+    # the same but lets the optimizer drop the extract's row order.
+    clip_rows = clipped.agg(F.count(F.lit(1))).scalar()
+    return out.withColumn("clip_rows", clip_rows.cast("long"))
 
 
 # ---------------------------------------------------------------------------

@@ -2,7 +2,8 @@
 
 This is the single source of truth for all spatial math in the engine:
 affine encode/decode, Z-order cell ids, tile keys, k-ring neighborhoods,
-bbox→tile cover, ray-casting point-in-polygon over Arrow-packed rings, and
+bbox→tile cover, ray-casting point-in-polygon over Arrow-packed rings, the
+scanline polygon cover kernel every polygon → cells operator uses, and
 the grid-alignment arithmetic the reference pins in its tests.
 
 Reference parity notes (all paths cite /root/reference):
@@ -19,8 +20,8 @@ Reference parity notes (all paths cite /root/reference):
   sample order is row-major (``np.where`` order,
   ``src/geowombat/core/util.py:533-536``).
 
-Everything here is vectorized numpy so it can run unchanged inside
-Arrow-batched pandas UDFs on executors — no per-row Python.
+Everything here is vectorized numpy so it runs unchanged on the driver or
+inside Arrow-batched pandas UDFs on executors — no per-row Python.
 """
 
 from __future__ import annotations
@@ -45,6 +46,9 @@ __all__ = [
     "kring_cells",
     "point_in_rings",
     "polygon_local_grid",
+    "polygon_cover_runs",
+    "merge_runs",
+    "runs_to_cells",
     "polygon_sample_centers",
     "align_bounds",
     "window_from_bounds",
@@ -304,6 +308,17 @@ def kring_cells(
 # ---------------------------------------------------------------------------
 
 
+def _ring_edges(rings: list[np.ndarray]) -> tuple[np.ndarray, ...]:
+    """``(x1, y1, x2, y2)`` of every edge of every ring, each ring closed."""
+    edges = [np.empty((0, 4))]
+    for ring in rings:
+        r = np.asarray(ring, dtype=np.float64).reshape(-1, 2)
+        if r.shape[0] and (r[0] != r[-1]).any():
+            r = np.vstack([r, r[:1]])
+        edges.append(np.hstack([r[:-1], r[1:]]))
+    return tuple(np.concatenate(edges).T)
+
+
 def point_in_rings(
     px: np.ndarray, py: np.ndarray, rings: list[np.ndarray]
 ) -> np.ndarray:
@@ -319,37 +334,21 @@ def point_in_rings(
     rule; holes naturally flip parity. Fully vectorized (N × E broadcast).
 
     The identical arithmetic is used in the SQL oracles (see
-    ``__spark_entry__.py``) so Spark and DuckDB agree bit-for-bit.
+    ``__spark_entry__.py``) and in :func:`polygon_cover_runs`, so all
+    three agree bit-for-bit; this per-point form is the kernel's test
+    reference.
     """
-    px = np.asarray(px, dtype=np.float64)
-    py = np.asarray(py, dtype=np.float64)
-    inside = np.zeros(px.shape[0], dtype=bool)
-    for ring in rings:
-        r = np.asarray(ring, dtype=np.float64)
-        xs, ys = r[0::2], r[1::2]
-        # close the ring if not closed
-        if xs.shape[0] == 0:
-            continue
-        if xs[0] != xs[-1] or ys[0] != ys[-1]:
-            xs = np.concatenate([xs, xs[:1]])
-            ys = np.concatenate([ys, ys[:1]])
-        x1, y1 = xs[:-1], ys[:-1]
-        x2, y2 = xs[1:], ys[1:]
-        # broadcast: points (N,1) vs edges (1,E)
-        pyc = py[:, None]
-        pxc = px[:, None]
-        straddle = (y1[None, :] > pyc) != (y2[None, :] > pyc)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            xint = (x2 - x1)[None, :] * (pyc - y1[None, :]) / (y2 - y1)[
-                None, :
-            ] + x1[None, :]
-        crossings = (straddle & (pxc < xint)).sum(axis=1)
-        inside ^= (crossings % 2).astype(bool)
-    return inside
+    px = np.asarray(px, dtype=np.float64)[:, None]
+    py = np.asarray(py, dtype=np.float64)[:, None]
+    x1, y1, x2, y2 = _ring_edges(rings)
+    straddle = (y1 > py) != (y2 > py)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        xint = (x2 - x1) * (py - y1) / (y2 - y1) + x1
+    return ((straddle & (px < xint)).sum(axis=1) % 2).astype(bool)
 
 
 # ---------------------------------------------------------------------------
-# Polygon-local sampling grid (gw.extract polygon semantics)
+# Polygon → cells: local grid, any-touch tests, the scanline cover kernel
 # ---------------------------------------------------------------------------
 
 
@@ -364,6 +363,19 @@ def polygon_local_grid(
     return int((maxy - miny) / resy), int((maxx - minx) / resx)
 
 
+def _segment_touches_rect(cx, cy, hx, hy, x1, y1, x2, y2) -> np.ndarray:
+    """Separating-axis test, elementwise: the closed segment meets the closed
+    rect iff x-extents overlap, y-extents overlap, and the rect straddles
+    the support line (``|n·(c-p1)| ≤ hx·|nx| + hy·|ny|``, n the normal)."""
+    ox = (np.minimum(x1, x2) <= cx + hx) & (np.maximum(x1, x2) >= cx - hx)
+    oy = (np.minimum(y1, y2) <= cy + hy) & (np.maximum(y1, y2) >= cy - hy)
+    nx, ny = -(y2 - y1), x2 - x1
+    straddle = np.abs(nx * (cx - x1) + ny * (cy - y1)) <= (
+        hx * np.abs(nx) + hy * np.abs(ny)
+    )
+    return ox & oy & straddle
+
+
 def rects_touch_rings(
     cx: np.ndarray,
     cy: np.ndarray,
@@ -371,34 +383,14 @@ def rects_touch_rings(
     hy: float,
     rings: list[np.ndarray],
 ) -> np.ndarray:
-    """Exact per-cell "boundary touches cell rect" mask (vectorized SAT).
-
-    A segment overlaps an axis-aligned rect iff the x-extents overlap, the
-    y-extents overlap, and the rect straddles the segment's support line
-    (``|n·(c-p1)| ≤ hx·|nx| + hy·|ny|`` for the edge normal n) — the
-    separating-axis test. Broadcast cells × edges; callers bbox-prefilter
-    cells so the product stays small.
-    """
+    """Per-cell "boundary touches cell rect" mask, brute force over cells ×
+    edges. ``point_in_rings | rects_touch_rings`` over a whole lattice is
+    the reference definition of ``all_touched`` that
+    :func:`polygon_cover_runs` is tested against; no operator calls it."""
+    x1, y1, x2, y2 = _ring_edges(rings)
     cx = np.asarray(cx, dtype=np.float64)[:, None]
     cy = np.asarray(cy, dtype=np.float64)[:, None]
-    out = np.zeros(cx.shape[0], dtype=bool)
-    for ring in rings:
-        r = np.asarray(ring, dtype=np.float64)
-        xs, ys = r[0::2], r[1::2]
-        if xs.shape[0] < 2:
-            continue
-        if xs[0] != xs[-1] or ys[0] != ys[-1]:
-            xs = np.concatenate([xs, xs[:1]])
-            ys = np.concatenate([ys, ys[:1]])
-        x1, y1, x2, y2 = xs[:-1][None], ys[:-1][None], xs[1:][None], ys[1:][None]
-        ox = (np.minimum(x1, x2) <= cx + hx) & (np.maximum(x1, x2) >= cx - hx)
-        oy = (np.minimum(y1, y2) <= cy + hy) & (np.maximum(y1, y2) >= cy - hy)
-        nx, ny = -(y2 - y1), x2 - x1
-        straddle = np.abs(nx * (cx - x1) + ny * (cy - y1)) <= (
-            hx * np.abs(nx) + hy * np.abs(ny)
-        )
-        out |= (ox & oy & straddle).any(axis=1)
-    return out
+    return _segment_touches_rect(cx, cy, hx, hy, x1, y1, x2, y2).any(axis=1)
 
 
 def segment_supercover(
@@ -409,7 +401,8 @@ def segment_supercover(
     Coordinates are continuous local cell units: cell (row, col) spans
     ``col ≤ c < col+1``, ``row ≤ r < row+1``. Exact lattice-corner
     crossings conservatively include both side-adjacent cells (GDAL's
-    any-touch counts a corner graze as touched).
+    any-touch counts a corner graze as touched). The ``all_touched``
+    candidate generator of :func:`polygon_cover_runs`.
     """
     cc, cr = math.floor(c0), math.floor(r0)
     ec, er = math.floor(c1), math.floor(r1)
@@ -459,6 +452,127 @@ def segment_supercover(
     return cells
 
 
+def _ramp(start: np.ndarray, n: np.ndarray) -> np.ndarray:
+    """Concatenation of ``arange(start[i], start[i] + n[i])`` over i."""
+    n = np.asarray(n, dtype=np.int64)
+    offs = np.arange(int(n.sum()), dtype=np.int64) - np.repeat(np.cumsum(n) - n, n)
+    return np.repeat(np.asarray(start, dtype=np.int64), n) + offs
+
+
+def merge_runs(runs: np.ndarray) -> np.ndarray:
+    """Union of half-open ``(row, col_start, col_end)`` runs → disjoint,
+    row-major runs, touching runs fused."""
+    runs = np.asarray(runs, dtype=np.int64).reshape(-1, 3)
+    runs = runs[runs[:, 1] < runs[:, 2]]
+    if runs.shape[0] == 0:
+        return runs
+    # each row owns a band of width w on one key line, so a running max
+    # of run ends never leaks into the next row
+    w = runs[:, 2].max() - runs[:, 1].min() + 1
+    base = (runs[:, 0] - runs[:, 0].min()) * w - runs[:, 1].min()
+    order = np.argsort(base + runs[:, 1], kind="stable")
+    runs, base = runs[order], base[order]
+    reach = np.maximum.accumulate(base + runs[:, 2])
+    head = np.flatnonzero(np.r_[True, base[1:] + runs[1:, 1] > reach[:-1]])
+    last = np.r_[head[1:], runs.shape[0]] - 1
+    return np.stack([runs[head, 0], runs[head, 1], reach[last] - base[last]], axis=1)
+
+
+def runs_to_cells(runs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Expand runs to (row, col) arrays, in run order."""
+    runs = np.asarray(runs, dtype=np.int64).reshape(-1, 3)
+    n = runs[:, 2] - runs[:, 1]
+    return np.repeat(runs[:, 0], n), _ramp(runs[:, 1], n)
+
+
+def polygon_cover_runs(
+    rings: list[np.ndarray],
+    resx: float,
+    resy: float,
+    all_touched: bool = False,
+    anchor: tuple[float, float] | None = None,
+) -> tuple[float, float, np.ndarray]:
+    """The one polygon → cells kernel (Raptor-style scanline, VLDB 2019)
+    behind clip(mask_data), mask, recode, polygon extract and rasterize.
+
+    Returns ``(ox, oy, runs)``: the lattice origin and disjoint row-major
+    half-open int64 runs ``(row, col_start, col_end)``; cell (row, col) has
+    centre ``(ox + (col+0.5)·resx, oy - (row+0.5)·resy)``. ``anchor=None``
+    is the bbox-local ``sample_feature`` lattice (origin (minx, maxy),
+    truncated shape, runs clipped to it); ``anchor=(grid.left, grid.top)``
+    is the reference grid itself (rows/cols are grid indices, unclipped).
+
+    Centre-in (GDAL default): each row's centre y is crossed with every
+    edge by the exact :func:`point_in_rings` arithmetic, and the paired
+    crossings are ``searchsorted`` against the column centres — equal to
+    ``point_in_rings`` at every centre. ``all_touched`` adds each cell
+    whose closed rect meets an edge (the edge's :func:`segment_supercover`
+    cells dilated by one, kept by that edge's separating-axis test) —
+    equal to ``point_in_rings | rects_touch_rings``. Cost O(crossings +
+    boundary cells), no cells × edges product.
+    """
+    x1, y1, x2, y2 = _ring_edges(rings)
+    empty = np.empty((0, 3), dtype=np.int64)
+    if x1.shape[0] == 0:
+        return 0.0, 0.0, empty
+    minx, maxx = float(x1.min()), float(x1.max())
+    miny, maxy = float(y1.min()), float(y1.max())
+    if anchor is None:
+        ox, oy = minx, maxy
+        nrows, ncols = polygon_local_grid(minx, miny, maxx, maxy, resx, resy)
+        r0, r1, c0, c1 = 0, nrows, 0, ncols
+    else:
+        ox, oy = float(anchor[0]), float(anchor[1])
+        pad = int(all_touched)  # any-touch reaches one cell past the bbox
+        c0 = math.floor((minx - ox) / resx) - pad
+        c1 = math.floor((maxx - ox) / resx) + 1 + pad
+        r0 = math.floor((oy - maxy) / resy) - pad
+        r1 = math.floor((oy - miny) / resy) + 1 + pad
+    if r1 <= r0 or c1 <= c0:
+        return ox, oy, empty
+    row_cy = oy - (np.arange(r0, r1) + 0.5) * resy
+    col_cx = ox + (np.arange(c0, c1) + 0.5) * resx
+
+    # (edge, row) pairs over each edge's row span plus one row of slack
+    # either side; the exact straddle test decides
+    lr1, lr2 = (oy - y1) / resy - 0.5, (oy - y2) / resy - 0.5
+    lo = np.clip(np.floor(np.minimum(lr1, lr2)).astype(np.int64), r0, r1)
+    n = np.clip(np.floor(np.maximum(lr1, lr2)).astype(np.int64) + 2, r0, r1) - lo
+    e = np.repeat(np.arange(x1.shape[0]), n)
+    row = _ramp(lo, n)
+    py = row_cy[row - r0]
+    hit = (y1[e] > py) != (y2[e] > py)
+    e, row, py = e[hit], row[hit], py[hit]
+    xint = (x2 - x1)[e] * (py - y1[e]) / (y2 - y1)[e] + x1[e]
+    # closed rings straddle each row an even number of times, so the sorted
+    # crossings pair as (enter, leave): px inside iff enter <= px < leave
+    order = np.lexsort((xint, row))
+    first = np.searchsorted(col_cx, xint[order]) + c0  # first col at/after
+    runs = np.stack([row[order][0::2], first[0::2], first[1::2]], axis=1)
+    if not all_touched:
+        return ox, oy, runs[runs[:, 1] < runs[:, 2]]
+
+    lc1, lc2 = (x1 - ox) / resx, (x2 - ox) / resx
+    lr1, lr2 = (oy - y1) / resy, (oy - y2) / resy
+    walk = np.array(
+        [(i, r, c) for i in range(x1.shape[0])
+         for r, c in segment_supercover(lc1[i], lr1[i], lc2[i], lr2[i])]
+    )
+    # dilate by one cell: the 3x3 block around every walked cell
+    offs = np.tile(kring_offsets(1), (walk.shape[0], 1))
+    e = np.repeat(walk[:, 0], 9)
+    r = np.repeat(walk[:, 1], 9) + offs[:, 0]
+    c = np.repeat(walk[:, 2], 9) + offs[:, 1]
+    ok = (r >= r0) & (r < r1) & (c >= c0) & (c < c1)
+    e, r, c = e[ok], r[ok], c[ok]
+    hit = _segment_touches_rect(
+        ox + (c + 0.5) * resx, oy - (r + 0.5) * resy, resx / 2.0, resy / 2.0,
+        x1[e], y1[e], x2[e], y2[e],
+    )
+    touched = np.stack([r[hit], c[hit], c[hit] + 1], axis=1)
+    return ox, oy, merge_runs(np.concatenate([runs, touched]))
+
+
 def polygon_sample_centers(
     rings: list[np.ndarray],
     resx: float,
@@ -466,75 +580,20 @@ def polygon_sample_centers(
     all_touched: bool = False,
     anchor: tuple[float, float] | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Sample-point centers for a polygon, row-major order.
+    """Sample-point centers for a polygon, row-major order: the cells of
+    :func:`polygon_cover_runs`, expanded.
 
     ``anchor=None`` replicates ``sample_feature``
-    (``src/geowombat/core/util.py:472-573``): local grid anchored at the
-    polygon bbox (minx, maxy), truncated shape, rasterize-by-center
-    (all_touched=False ⇒ center-in-polygon, GDAL's default), centers at
-    local affine + half-cell shift, row-major emission — the EXTRACT
-    sampling semantics.
-
-    ``anchor=(grid.left, grid.top)`` snaps the local lattice onto the
-    reference grid instead: emitted centers ARE reference-grid cell
-    centers, which is what GDAL ``features.rasterize`` tests
-    (``conversion.py:570-833`` burns over the grid-aligned window) — the
-    RASTERIZE semantics. The bbox-local lattice diverges from it whenever
-    the polygon bbox is not grid-aligned.
-
+    (``src/geowombat/core/util.py:472-573``): bbox-local lattice, centre-in
+    (GDAL's default) — the EXTRACT sampling semantics.
+    ``anchor=(grid.left, grid.top)`` gives reference-grid cell centers, what
+    GDAL ``features.rasterize`` tests (``conversion.py:570-833``).
     ``all_touched=True`` is GDAL's exact any-touch predicate: a cell is in
-    iff the polygon intersects its rectangle. Decomposition — a cell whose
-    center is inside is touched; every other touched cell is crossed by
-    the polygon *boundary*, so the boundary edges are walked with a
-    supercover grid traversal (Amanatides–Woo DDA, corner crossings
-    conservatively include both neighbors). Cost O(interior cells +
-    boundary length) — no cells×edges product.
+    iff the polygon intersects its closed rectangle.
     """
-    allx = np.concatenate([np.asarray(r, dtype=np.float64)[0::2] for r in rings])
-    ally = np.concatenate([np.asarray(r, dtype=np.float64)[1::2] for r in rings])
-    minx, maxx = float(allx.min()), float(allx.max())
-    miny, maxy = float(ally.min()), float(ally.max())
-    if anchor is None:
-        ox, oy = minx, maxy
-        nrows, ncols = polygon_local_grid(minx, miny, maxx, maxy, resx, resy)
-    else:
-        ax, ay = float(anchor[0]), float(anchor[1])
-        ox = ax + math.floor((minx - ax) / resx) * resx
-        oy = ay - math.floor((ay - maxy) / resy) * resy
-        ncols = int(math.floor((maxx - ox) / resx)) + 1
-        nrows = int(math.floor((oy - miny) / resy)) + 1
-    if nrows <= 0 or ncols <= 0:
-        return np.empty(0, dtype=np.float64), np.empty(0, dtype=np.float64)
-    rr, cc = np.meshgrid(
-        np.arange(nrows, dtype=np.float64),
-        np.arange(ncols, dtype=np.float64),
-        indexing="ij",
-    )
-    cx = ox + (cc.ravel() + 0.5) * resx
-    cy = oy - (rr.ravel() + 0.5) * resy
-    if all_touched:
-        hit = point_in_rings(cx, cy, rings).reshape(nrows, ncols)
-        for ring in rings:
-            r = np.asarray(ring, dtype=np.float64)
-            xs, ys = r[0::2], r[1::2]
-            if xs.shape[0] == 0:
-                continue
-            if xs[0] != xs[-1] or ys[0] != ys[-1]:
-                xs = np.concatenate([xs, xs[:1]])
-                ys = np.concatenate([ys, ys[:1]])
-            # to local continuous cell coords: col along +x, row along -y
-            lc = (xs - ox) / resx
-            lr = (oy - ys) / resy
-            for i in range(lc.shape[0] - 1):
-                for rr_i, cc_i in segment_supercover(
-                    lc[i], lr[i], lc[i + 1], lr[i + 1]
-                ):
-                    if 0 <= rr_i < nrows and 0 <= cc_i < ncols:
-                        hit[rr_i, cc_i] = True
-        hit = hit.ravel()
-    else:
-        hit = point_in_rings(cx, cy, rings)
-    return cx[hit], cy[hit]
+    ox, oy, runs = polygon_cover_runs(rings, resx, resy, all_touched, anchor)
+    row, col = runs_to_cells(runs)
+    return ox + (col + 0.5) * resx, oy - (row + 0.5) * resy
 
 
 # ---------------------------------------------------------------------------

@@ -14,11 +14,15 @@ scan(pruned tiles) → broadcast-hash-join → partial agg.
 
 Polygon extract replicates ``sample_feature``
 (``src/geowombat/core/util.py:472-573``): polygon-local grid, rasterize-by-
-center parity via ray-cast PIP, row-major sample order — run per polygon in
-``applyInPandas`` so each polygon's sampling is one vectorized numpy kernel.
+center (or exact any-touch) membership, row-major sample order. The
+samples come from the driver-side scanline kernel
+(``grid.polygon_sample_centers``), are encoded like a point AOI and
+broadcast into the same ``cell_id`` join — no Python worker runs.
 """
 
 from __future__ import annotations
+
+import zlib
 
 import numpy as np
 import pandas as pd
@@ -42,8 +46,9 @@ def _band_col(name: str) -> str:
 def in_bounds_mask(x, y, grid: GridSpec) -> np.ndarray:
     """Boolean mask of points inside the grid extent — the ONE in-grid
     predicate (half-open right/bottom edges) shared by prepare_points,
-    extract_points, and the Column twin :func:`in_bounds_col`; a boundary
-    semantics change lands everywhere at once."""
+    extract_points, extract_polygons, and the Column twin
+    :func:`in_bounds_col`; a boundary semantics change lands everywhere
+    at once."""
     return (
         (x >= grid.left) & (x < grid.right) & (y <= grid.top) & (y > grid.bottom)
     )
@@ -287,8 +292,7 @@ def extract_points(
     return out.drop("_pt_order")
 
 
-def sample_polygons(
-    spark: SparkSession,
+def _polygon_samples(
     polygons: pd.DataFrame,
     grid: GridSpec,
     frac: float = 1.0,
@@ -296,47 +300,22 @@ def sample_polygons(
     all_touched: bool = False,
     seed: int = 42,
     id_column: str = "fid",
-    grid_aligned: bool = False,
-) -> DataFrame:
-    """Polygon → sample-point centers (``sample_feature`` parity).
-
-    ``grid_aligned=True`` anchors the sampling lattice on the reference
-    grid so the emitted centers ARE grid cell centers (the GDAL rasterize
-    containment test — used by ``polygon_to_array``); the default
-    bbox-local lattice is the reference's extract sampling.
-
-    ``polygons`` columns: ``fid`` plus ``rings`` (list of flat
-    ``[x0,y0,x1,y1,...]`` arrays) and any attribute columns. Runs one
-    vectorized kernel per polygon via ``applyInPandas`` (the Spark analogue
-    of the reference's per-feature ``multiprocessing.Pool``,
-    ``conversion.py:438-493``). ``frac``/``min_frac_area`` follow
-    ``util.py:538-551`` (subsample only when above the area floor); the rng
-    is seeded per polygon for determinism.
-    """
-    res_x, res_y = grid.cellx, grid.celly
-    anchor = (grid.left, grid.top) if grid_aligned else None
-    pdf = polygons.copy()
-    pdf["rings"] = pdf["rings"].apply(lambda rs: [list(map(float, r)) for r in rs])
-    if len(pdf) == 0:
-        # an AOI prefilter can legitimately drop every feature; the
-        # reference returns an empty frame (sops.py:836-844) — Spark
-        # cannot infer a schema from the empty object-typed rings column
-        return spark.createDataFrame(
-            [], f"{id_column} bigint, point bigint, x double, y double"
-        )
-    pdf_spark = spark.createDataFrame(pdf)
-
+) -> pd.DataFrame:
+    """:func:`sample_polygons` as a driver-side pandas frame."""
+    ids = polygons[id_column]
     # id type follows the input with the reference's int-FIRST fallback
-    # (util.py:553-559: try int(fid), fall back to str on ValueError) —
-    # so a float64 fid column (pandas merge/NaN promotion of ints) stays
-    # numeric (int(1.0) == 1, not the string '1.0'), while a genuinely
-    # non-numeric GeoDataFrame-style fid survives as string rather than
-    # int()-crashing the job. Column-level dispatch: the int path only
-    # when EVERY value round-trips through int() LOSSLESSLY and fits
-    # int64 — a non-integral float (7.2) must not truncate onto another
-    # feature's id/seed, and an integral float beyond int64 (1e19) must
-    # not pass the probe only to overflow the kernel's int64 column.
+    # (util.py:553-559: try int(fid), fall back to str on ValueError): a
+    # float64 fid (pandas NaN promotion of ints) stays numeric, a
+    # non-numeric fid stays string. Column-level: the int path only when
+    # EVERY value round-trips through int() LOSSLESSLY and fits int64 (7.2
+    # must not truncate onto fid 7; 1e19 must not overflow). An EMPTY
+    # column has no values to probe, so its dtype decides — an empty
+    # string-fid result still unions with a non-empty one.
     def _all_int_convertible(col) -> bool:
+        if len(col) == 0:
+            return not (
+                pd.api.types.is_object_dtype(col) or pd.api.types.is_string_dtype(col)
+            )
         try:
             for v in col:
                 iv = int(v)
@@ -346,64 +325,71 @@ def sample_polygons(
             return False
         return True
 
-    id_is_str = not _all_int_convertible(pdf[id_column])
-    id_sql_type = "string" if id_is_str else "bigint"
-    out_schema = f"{id_column} {id_sql_type}, point bigint, x double, y double"
-
-    def _sample(key, g: pd.DataFrame) -> pd.DataFrame:
-        # deterministic per-feature rng offset: identity for int fids
-        # (preserves historical sampled outputs), crc32 for strings
+    id_is_str = not _all_int_convertible(ids)
+    # EVERY row is a polygon: duplicate fids (a multipart feature exploded
+    # without renumbering) are real inputs and are all sampled — the
+    # reference's per-feature pool samples each row (conversion.py:
+    # 438-493). Point ids continue across a fid's parts so they stay
+    # unique within the fid; the rng is seeded per (fid, part).
+    id_dtype = object if id_is_str else np.int64
+    frames = [
+        pd.DataFrame(columns=[id_column, "point", "x", "y"]).astype(
+            {id_column: id_dtype, "point": np.int64, "x": float, "y": float}
+        )
+    ]
+    parts: dict = {}
+    for key, rs in zip(ids, polygons["rings"]):
         if id_is_str:
-            import zlib
-
-            fid = str(key[0])
+            fid = str(key)
             fid_seed = zlib.crc32(fid.encode("utf-8"))
         else:
-            fid = int(key[0])
-            fid_seed = fid
-        # EVERY row of the group is a polygon: duplicate fids (a multipart
-        # feature exploded without renumbering) are real inputs, and
-        # sampling only g.iloc[0] would silently drop the rest — the
-        # reference's per-feature pool samples each row (conversion.py:
-        # 438-493). Point ids continue across parts so they stay unique
-        # within the fid.
-        xs, ys = [], []
-        for ri in range(len(g)):
-            rings = [
-                np.asarray(r, dtype=np.float64) for r in g.iloc[ri]["rings"]
-            ]
-            cx, cy = polygon_sample_centers(
-                rings, res_x, res_y, all_touched=all_touched, anchor=anchor
+            fid = fid_seed = int(key)
+        ri, start = parts.get(fid, (0, 0))
+        cx, cy = polygon_sample_centers(rs, grid.cellx, grid.celly, all_touched)
+        # util.py:538-551: subsample only when above the area floor
+        if frac < 1.0 and (min_frac_area is None or cx.shape[0] > min_frac_area):
+            rng = np.random.default_rng(seed + fid_seed + 7919 * ri)
+            idx = rng.choice(cx.shape[0], size=int(cx.shape[0] * frac), replace=False)
+            idx.sort()
+            cx, cy = cx[idx], cy[idx]
+        parts[fid] = (ri + 1, start + cx.shape[0])
+        frames.append(
+            pd.DataFrame(
+                {id_column: np.full(cx.shape[0], fid, dtype=id_dtype),
+                 "point": np.arange(start, start + cx.shape[0], dtype=np.int64),
+                 "x": cx, "y": cy}
             )
-            if frac < 1.0:
-                take = True
-                if min_frac_area is not None and cx.shape[0] <= min_frac_area:
-                    take = False
-                if take:
-                    rng = np.random.default_rng(seed + fid_seed + 7919 * ri)
-                    idx = rng.choice(
-                        cx.shape[0], size=int(cx.shape[0] * frac), replace=False
-                    )
-                    idx.sort()
-                    cx, cy = cx[idx], cy[idx]
-            xs.append(cx)
-            ys.append(cy)
-        cx = np.concatenate(xs) if xs else np.array([], dtype=np.float64)
-        cy = np.concatenate(ys) if ys else np.array([], dtype=np.float64)
-        return pd.DataFrame(
-            {
-                id_column: (
-                    np.full(cx.shape[0], fid, dtype=object)
-                    if id_is_str
-                    else np.full(cx.shape[0], fid, dtype=np.int64)
-                ),
-                "point": np.arange(cx.shape[0], dtype=np.int64),
-                "x": cx,
-                "y": cy,
-            }
         )
+    return pd.concat(frames, ignore_index=True)
 
-    return pdf_spark.groupBy(id_column).applyInPandas(_sample, out_schema)
+
+def sample_polygons(
+    spark: SparkSession,
+    polygons: pd.DataFrame,
+    grid: GridSpec,
+    frac: float = 1.0,
+    min_frac_area: float | None = None,
+    all_touched: bool = False,
+    seed: int = 42,
+    id_column: str = "fid",
+) -> DataFrame:
+    """Polygon → sample-point centers (``sample_feature`` parity) on each
+    polygon's bbox-local lattice.
+
+    ``polygons`` columns: ``fid`` plus ``rings`` (list of flat
+    ``[x0,y0,x1,y1,...]`` arrays) and any attribute columns. The frame is
+    driver-resident, so the samples are computed on the driver and
+    returned as one local DataFrame. ``frac``/``min_frac_area`` follow
+    ``util.py:538-551`` (subsample only when above the area floor); the
+    rng is seeded per polygon for determinism.
+    """
+    return _pdf_to_sdf(
+        spark,
+        _polygon_samples(
+            polygons, grid, frac=frac, min_frac_area=min_frac_area,
+            all_touched=all_touched, seed=seed, id_column=id_column,
+        ),
+    )
 
 
 def extract_polygons(
@@ -421,8 +407,7 @@ def extract_polygons(
 ) -> DataFrame:
     """Sample band values for every cell whose center falls inside each
     polygon — ``gw.extract(polygons)`` (``sops.py:689-909`` polygon path)."""
-    samples = sample_polygons(
-        spark,
+    samples = _polygon_samples(
         polygons,
         grid,
         frac=frac,
@@ -434,19 +419,11 @@ def extract_polygons(
     # DROP sample centers outside the grid (reference ``sops.py:836-844``
     # filters out-of-image indices; clamping would gather edge-cell values
     # for the overhanging part of a polygon that extends past the bounds)
-    samples = samples.filter(in_bounds_col(grid))
-    samples = encode_cells(samples, grid)
-    # tile pruning from the polygons' bboxes (driver-side, bbox arithmetic)
-    from ..grid import bbox_cover_tiles
-
-    tiles: set[int] = set()
-    for rs in polygons["rings"]:
-        xs = np.concatenate([np.asarray(r)[0::2] for r in rs])
-        ys = np.concatenate([np.asarray(r)[1::2] for r in rs])
-        tiles.update(
-            bbox_cover_tiles(grid, xs.min(), ys.min(), xs.max(), ys.max())
-        )
-    pruned = _prune_tiles(docs, tiles)
+    samples = samples[
+        in_bounds_mask(samples["x"].values, samples["y"].values, grid)
+    ].reset_index(drop=True)
+    enc = encode_points_pdf(samples, grid)
+    pruned = _prune_tiles(docs, enc["tile_id"].unique())
     band_cols = [_band_col(b) for b in bands]
     # carry the time column when the corpus is a stack: every sample point
     # legitimately matches one row per time step, and 't' is what makes
@@ -456,7 +433,9 @@ def extract_polygons(
         "cell_id", *t_cols, *band_cols, *keep_doc_columns
     )
     joined = doc_side.join(
-        F.broadcast(samples.select(id_column, "point", "x", "y", "cell_id")),
+        F.broadcast(
+            _pdf_to_sdf(spark, enc[[id_column, "point", "x", "y", "cell_id"]])
+        ),
         "cell_id",
         "inner",
     )

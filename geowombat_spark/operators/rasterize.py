@@ -5,13 +5,11 @@ Reference: ``/root/reference/src/geowombat/core/conversion.py:570-833``
 GDAL ``features.rasterize`` semantics; ``all_touched`` toggles
 center-containment vs cell-intersects).
 
-Spark shape: per-polygon cover cells from the ray-cast PIP kernel
-(``applyInPandas``, one vectorized kernel per polygon) → burn-value map
-(broadcast) → ``max_by(burn, feature_order)`` resolves overlaps exactly like
-GDAL's later-feature-wins → right join onto the window's cell lattice
-(generated with ``spark.range`` — pure codegen) with ``fill`` elsewhere.
-The lattice join is an equi-join on (row, col); at 100 TB the window is
-tile-pruned and the burned side is small → broadcast."""
+Spark shape: each feature's cells on the reference grid come from the
+driver-side scanline kernel ``grid.polygon_cover_runs``; overlaps resolve
+there (later feature wins, like GDAL). The burned cells are broadcast into
+a left join with the window's cell lattice (``spark.range`` — pure
+codegen), ``fill`` elsewhere: no shuffle, no Python worker."""
 
 from __future__ import annotations
 
@@ -20,8 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..grid import GridSpec, round_window
-from .extract import encode_cells, in_bounds_col, sample_polygons
+from ..grid import GridSpec, polygon_cover_runs, round_window, runs_to_cells
 
 
 def polygon_to_array(
@@ -42,9 +39,9 @@ def polygon_to_array(
     (``conversion.py:570-833``). Feature order resolves overlaps: the last
     ROW in ``polygons`` wins on overlap cells (GDAL rasterize parity —
     each row is one feature, so duplicate-``fid`` multipart rows burn
-    their own values). Burn membership is the reference-grid cell-center
-    test (``grid_aligned`` sampling), matching ``features.rasterize``
-    over the grid-aligned window. ``id_column`` is accepted for API
+    their own values). Burn membership is the reference-grid cell test
+    (grid-anchored cover runs), matching ``features.rasterize`` over the
+    grid-aligned window. ``id_column`` is accepted for API
     compatibility but unused (features are identified by row position).
     """
     if window is None:
@@ -68,50 +65,28 @@ def polygon_to_array(
             [], "row long, col long, x double, y double, value double"
         )
 
-    # each input ROW is one GDAL feature: key sampling and the burn join
-    # on a per-row id (_pfid), not the user fid — duplicate fids
-    # (multipart explode, or fid collisions carrying different burn
-    # values) must burn each part with ITS OWN row's value, with
-    # later-row-wins only on genuinely overlapping cells
-    pdf = polygons.reset_index(drop=True)[["rings"]].copy()
-    pdf["_pfid"] = np.arange(len(pdf), dtype=np.int64)
-    if len(pdf) == 0:
-        burned = spark.createDataFrame([], "row long, col long, value double")
-    else:
-        # grid_aligned: burn membership is the REFERENCE-grid center test
-        # (GDAL features.rasterize over the grid-aligned window,
-        # conversion.py:570-833) — the bbox-local extract lattice diverges
-        # whenever a polygon bbox is not grid-aligned
-        samples = sample_polygons(
-            spark,
-            pdf,
-            grid,
-            all_touched=all_touched,
-            id_column="_pfid",
-            grid_aligned=True,
+    # each input ROW is one GDAL feature: duplicate fids (multipart
+    # explode, or fid collisions carrying different burn values) burn each
+    # part with ITS OWN row's value, later-row-wins only on overlap cells
+    polys = polygons.reset_index(drop=True)
+    burn = polys[col].astype(float) if col else [float(default_value)] * len(polys)
+    empty = np.empty(0, dtype=np.int64)
+    cover = [pd.DataFrame({"row": empty, "col": empty, "value": empty * 0.0})]
+    for rs, v in zip(polys["rings"], burn):
+        _, _, runs = polygon_cover_runs(
+            rs, grid.cellx, grid.celly, all_touched, anchor=(grid.left, grid.top)
         )
-        # DROP sample centers outside the grid BEFORE encoding (same
-        # contract as extract_polygons, reference sops.py:836-844):
-        # encode_cells clamps out-of-grid centers onto border cells, so a
-        # polygon arm overhanging the grid would otherwise burn the
-        # border cells it snaps onto — GDAL rasterize leaves those at
-        # fill
-        samples = samples.filter(in_bounds_col(grid))
-        enc = encode_cells(samples, grid).select("_pfid", "row", "col")
-
-        burn = pd.DataFrame({"_pfid": pdf["_pfid"]})
-        burn["burn"] = (
-            polygons.reset_index(drop=True)[col].astype(float)
-            if col
-            else float(default_value)
-        )
-        burn_df = spark.createDataFrame(burn)
-
-        burned = (
-            enc.join(F.broadcast(burn_df), "_pfid")
-            .groupBy("row", "col")
-            .agg(F.max_by("burn", "_pfid").alias("value"))
-        )
+        r, c = runs_to_cells(runs)
+        cover.append(pd.DataFrame({"row": r, "col": c, "value": v}))
+    cover = pd.concat(cover, ignore_index=True)
+    # DROP off-grid cells (same contract as extract_polygons, reference
+    # sops.py:836-844): GDAL rasterize leaves nothing outside the grid
+    on_grid = (
+        (cover["row"] >= 0) & (cover["row"] < grid.nrows)
+        & (cover["col"] >= 0) & (cover["col"] < grid.ncols)
+    )
+    cover = cover[on_grid].drop_duplicates(["row", "col"], keep="last")
+    burned = spark.createDataFrame(cover, "row long, col long, value double")
 
     from .transform import _with_centers
 

@@ -1,9 +1,12 @@
 """Raster↔vector spatial operators (the ``gw.sops`` family), Spark-first.
 
 Each operator is a *planner function*: it composes a declarative DataFrame
-plan (tile-pruned scan → predicate/when-chain → optional vectorized PIP UDF)
-and lets Catalyst pick the physical strategy. The only Python that runs on
-executors is Arrow-batched numpy inside pandas UDFs.
+plan (tile-pruned scan → predicate/when-chain → optional polygon cover
+join) and lets Catalyst pick the physical strategy. Polygon membership
+(clip ``mask_data``, ``mask``, ``recode``) comes from the driver-side
+scanline kernel ``grid.polygon_cover_runs``: the documents are left-joined
+against the broadcast ``(row, col_start, col_end)`` runs — no Python
+worker touches a document.
 
 Reference semantics, cited per function, from
 ``/root/reference/src/geowombat/core/sops.py``.
@@ -19,18 +22,12 @@ from pyspark.sql import functions as F
 from ..grid import (
     GridSpec,
     bbox_cover_tiles,
-    point_in_rings,
-    rects_touch_rings,
+    merge_runs,
+    polygon_cover_runs,
     round_window,
 )
 
 BAND_COLS = ("band_blue", "band_green", "band_red")
-
-
-def _rings_arrays(polygons: pd.DataFrame) -> list[list[np.ndarray]]:
-    return [
-        [np.asarray(r, dtype=np.float64) for r in rs] for rs in polygons["rings"]
-    ]
 
 
 def _total_bounds(polygons: pd.DataFrame) -> tuple[float, float, float, float]:
@@ -39,46 +36,39 @@ def _total_bounds(polygons: pd.DataFrame) -> tuple[float, float, float, float]:
     return float(xs.min()), float(ys.min()), float(xs.max()), float(ys.max())
 
 
-def pip_flag(polygons: pd.DataFrame, all_touched: bool = False, cellx: float = 0.0, celly: float = 0.0):
-    """Column factory: boolean "center inside any polygon" via one vectorized
-    ray-cast pandas UDF (the rasterize stand-in,
-    ``src/geowombat/core/conversion.py:570-833``).
+def _with_cover_flag(
+    docs: DataFrame, polygons: pd.DataFrame, grid: GridSpec, all_touched: bool = False
+) -> DataFrame:
+    """``docs`` plus a boolean ``_pip``: the document's grid cell is covered
+    by any polygon (GDAL rasterize membership, ``conversion.py:570-833``).
 
-    The kernel bbox-prefilters candidates in numpy before edge tests, so the
-    UDF stays cheap even when applied to a whole tile. ``all_touched=True``
-    is GDAL's exact any-touch: center-in-polygon OR the polygon boundary
-    overlaps the cell rect (separating-axis segment-vs-rect test,
-    ``grid.rects_touch_rings`` — a cell intersecting the polygon either
-    contains its center inside or is crossed by the boundary).
+    The features' grid-anchored runs are merged per row, so no document
+    matches two runs; the broadcast join keys on ``row`` with the column
+    range as its condition. Decisions equal ``point_in_rings`` (and
+    ``rects_touch_rings``) at ``(left + (col+0.5)·cellx, top -
+    (row+0.5)·celly)`` — the convention every corpus's ``x``/``y`` uses.
     """
-    ring_sets = _rings_arrays(polygons)
-    minx, miny, maxx, maxy = _total_bounds(polygons)
-
-    @F.pandas_udf("boolean")
-    def _pip(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        px = xs.values.astype(np.float64)
-        py = ys.values.astype(np.float64)
-        out = np.zeros(px.shape[0], dtype=bool)
-        pad = max(abs(cellx), abs(celly)) if all_touched else 0.0
-        cand = (
-            (px >= minx - pad)
-            & (px <= maxx + pad)
-            & (py >= miny - pad)
-            & (py <= maxy + pad)
-        )
-        if cand.any():
-            cx, cy = px[cand], py[cand]
-            hit = np.zeros(cx.shape[0], dtype=bool)
-            for rings in ring_sets:
-                hit |= point_in_rings(cx, cy, rings)
-                if all_touched:
-                    hit |= rects_touch_rings(
-                        cx, cy, abs(cellx) / 2.0, abs(celly) / 2.0, rings
-                    )
-            out[cand] = hit
-        return pd.Series(out)
-
-    return _pip
+    anchor = (grid.left, grid.top)
+    runs = [np.empty((0, 3), dtype=np.int64)] + [
+        polygon_cover_runs(rs, grid.cellx, grid.celly, all_touched, anchor)[2]
+        for rs in polygons["rings"]
+    ]
+    run_df = docs.sparkSession.createDataFrame(
+        pd.DataFrame(
+            merge_runs(np.concatenate(runs)), columns=["_run_row", "_run_c0", "_run_c1"]
+        ),
+        "_run_row long, _run_c0 long, _run_c1 long",
+    )
+    on = (
+        (F.col("row") == F.col("_run_row"))
+        & (F.col("col") >= F.col("_run_c0"))
+        & (F.col("col") < F.col("_run_c1"))
+    )
+    return (
+        docs.join(F.broadcast(run_df), on, "left")
+        .withColumn("_pip", F.col("_run_row").isNotNull())
+        .drop("_run_row", "_run_c0", "_run_c1")
+    )
 
 
 def clip_by_polygon(
@@ -111,8 +101,7 @@ def clip_by_polygon(
         & (F.col("col") < col1)
     )
     if mask_data:
-        flag = pip_flag(polygons)(F.col("x"), F.col("y"))
-        out = out.withColumn("_pip", flag)
+        out = _with_cover_flag(out, polygons, grid)
         for b in bands:
             out = out.withColumn(
                 b, F.when(F.col("_pip"), F.col(b)).otherwise(F.lit(grid.nodata))
@@ -132,10 +121,7 @@ def mask(
     """Keep values inside ('in') or outside ('out') the geometry, others →
     NULL (the NaN of the reference, ``sops.py:1099-1160``; reference
     rasterizes with all_touched=True, hence the default here)."""
-    flag = pip_flag(polygons, all_touched=all_touched, cellx=grid.cellx, celly=grid.celly)(
-        F.col("x"), F.col("y")
-    )
-    out = docs.withColumn("_pip", flag)
+    out = _with_cover_flag(docs, polygons, grid, all_touched=all_touched)
     keep_in = keep == "in"
     for b in bands:
         out = out.withColumn(
@@ -198,8 +184,7 @@ def recode(
     """Replace values **within polygons** (``sops.py:1208-1269``), including
     ``{k: 'mode'}`` → the modal value of the band inside the region (computed
     distributed via ``F.mode``, then folded back as a literal)."""
-    flag_udf = pip_flag(polygons)
-    out = docs.withColumn("_pip", flag_udf(F.col("x"), F.col("y")))
+    out = _with_cover_flag(docs, polygons, grid)
     # every 'mode' entry resolves to the same polygon-modal band value, so
     # one distributed agg + one collect serves them all (k 'mode' entries
     # used to serialize into k driver actions over the same plan)

@@ -350,3 +350,19 @@ def test_sample_polygons_empty_frame_returns_empty(spark):
     out = sample_polygons(spark, empty, L8_GRID)
     assert out.count() == 0
     assert set(out.columns) == {"fid", "point", "x", "y"}
+
+    # an empty STRING-fid frame keeps the string id type, so it unions
+    # with a non-empty string-fid result (a hardcoded bigint id did not)
+    sq = [[717585.0, -2776995.0, 717645.0, -2776995.0, 717645.0,
+           -2777055.0, 717585.0, -2777055.0]]
+    named = sample_polygons(
+        spark, pd.DataFrame({"fid": ["field_A"], "rings": [sq]}), L8_GRID
+    )
+    empty_s = sample_polygons(
+        spark, pd.DataFrame({"fid": pd.Series([], dtype=object), "rings": []}),
+        L8_GRID,
+    )
+    assert dict(empty_s.dtypes)["fid"] == "string"
+    both = empty_s.unionByName(named)
+    assert dict(both.dtypes)["fid"] == "string"
+    assert sorted(r["fid"] for r in both.collect()) == ["field_A"] * 4

@@ -196,47 +196,116 @@ def test_round_window_and_tile_cover():
     assert len(tiles) == 16
 
 
-def test_all_touched_exact_matches_sat_bruteforce():
-    """polygon_sample_centers(all_touched=True) — supercover DDA over
-    boundary edges — must equal the independent separating-axis
-    rect-vs-polygon test on every cell of the bbox grid (exact GDAL
-    any-touch semantics, replacing the old corner-sample approximation)."""
+def _holed_polygon(rng, res, snap):
+    """Random concave star polygon with a triangular hole, in units of
+    ``res``; ``snap='corner'`` rounds every vertex onto a lattice corner
+    (edges then run along lattice lines — the any-touch edge case)."""
+    ang = np.sort(rng.uniform(0.0, 2.0 * np.pi, 9))
+    rad = res * rng.uniform(2.5, 9.0, 9)
+    cx, cy = res * rng.uniform(-5.0, 5.0, 2)
+    a = np.array([0.0, 2.1, 4.2]) + rng.uniform(0.0, 1.0)
+    rings = [
+        np.stack([cx + rad * np.cos(ang), cy + rad * np.sin(ang)], axis=1),
+        np.stack([cx + 1.5 * res * np.cos(a), cy + 1.5 * res * np.sin(a)], axis=1),
+    ]
+    if snap == "corner":
+        rings = [np.round(r / res) * res for r in rings]
+    return [r.ravel() for r in rings]
+
+
+@pytest.mark.parametrize(
+    "res,snap,lattice",
+    [(1.0, "fixed", "local")]
+    + [
+        (res, snap, lattice)
+        for res in (1.0, 0.7, 30.0)
+        for snap in ("free", "corner")
+        for lattice in ("local", "anchored")
+    ],
+)
+def test_all_touched_exact_matches_sat_bruteforce(res, snap, lattice):
+    """The scanline cover kernel against brute force over EVERY cell of the
+    lattice: centre-in runs == ``point_in_rings`` at the cell centres, and
+    all_touched runs == ``point_in_rings | rects_touch_rings`` (the
+    independent separating-axis rect-vs-polygon test — exact GDAL
+    any-touch). Bbox-local (extract) and grid-anchored (rasterize, mask)
+    lattices; free vertices and vertices snapped onto cell corners."""
     import numpy as np
     from geowombat_spark.grid import (
         point_in_rings,
+        polygon_cover_runs,
         polygon_local_grid,
         polygon_sample_centers,
         rects_touch_rings,
+        runs_to_cells,
     )
 
-    # concave polygon with a hole, vertices off-lattice
-    exterior = np.array(
-        [0.3, 0.2, 9.7, 0.6, 9.1, 8.8, 5.2, 4.1, 1.1, 9.3, 0.3, 0.2]
-    )
-    hole = np.array([2.1, 2.2, 3.9, 2.4, 3.1, 3.8, 2.1, 2.2])
-    rings = [exterior, hole]
-    resx = resy = 1.0
+    resx = resy = res
+    anchor = None if lattice == "local" else (-7.0 * res, 5.0 * res)
+    if snap == "fixed":
+        # concave polygon with a hole, vertices off-lattice
+        exterior = np.array(
+            [0.3, 0.2, 9.7, 0.6, 9.1, 8.8, 5.2, 4.1, 1.1, 9.3, 0.3, 0.2]
+        )
+        hole = np.array([2.1, 2.2, 3.9, 2.4, 3.1, 3.8, 2.1, 2.2])
+        rings = [exterior, hole]
 
-    cx, cy = polygon_sample_centers(rings, resx, resy, all_touched=True)
-    got = set(zip(np.round(cx, 9), np.round(cy, 9)))
+        cx, cy = polygon_sample_centers(rings, resx, resy, all_touched=True)
+        got = set(zip(np.round(cx, 9), np.round(cy, 9)))
 
-    # brute force over the full bbox lattice
-    allx = np.concatenate([r[0::2] for r in rings])
-    ally = np.concatenate([r[1::2] for r in rings])
-    minx, maxx = allx.min(), allx.max()
-    miny, maxy = ally.min(), ally.max()
-    nrows, ncols = polygon_local_grid(minx, miny, maxx, maxy, resx, resy)
-    rr, cc = np.meshgrid(np.arange(nrows), np.arange(ncols), indexing="ij")
-    px = minx + (cc.ravel() + 0.5) * resx
-    py = maxy - (rr.ravel() + 0.5) * resy
-    hit = point_in_rings(px, py, rings) | rects_touch_rings(
-        px, py, resx / 2.0, resy / 2.0, rings
-    )
-    want = set(zip(np.round(px[hit], 9), np.round(py[hit], 9)))
-    assert got == want
-    # sanity: any-touch strictly grows the center-only set
-    cx0, cy0 = polygon_sample_centers(rings, resx, resy, all_touched=False)
-    assert len(got) > len(cx0)
+        # brute force over the full bbox lattice
+        allx = np.concatenate([r[0::2] for r in rings])
+        ally = np.concatenate([r[1::2] for r in rings])
+        minx, maxx = allx.min(), allx.max()
+        miny, maxy = ally.min(), ally.max()
+        nrows, ncols = polygon_local_grid(minx, miny, maxx, maxy, resx, resy)
+        rr, cc = np.meshgrid(np.arange(nrows), np.arange(ncols), indexing="ij")
+        px = minx + (cc.ravel() + 0.5) * resx
+        py = maxy - (rr.ravel() + 0.5) * resy
+        hit = point_in_rings(px, py, rings) | rects_touch_rings(
+            px, py, resx / 2.0, resy / 2.0, rings
+        )
+        want = set(zip(np.round(px[hit], 9), np.round(py[hit], 9)))
+        assert got == want
+        # sanity: any-touch strictly grows the center-only set
+        cx0, cy0 = polygon_sample_centers(rings, resx, resy, all_touched=False)
+        assert len(got) > len(cx0)
+        cases = [rings]
+    else:
+        rng = np.random.default_rng([int(res * 10), len(snap), len(lattice)])
+        cases = [_holed_polygon(rng, res, snap) for _ in range(12)]
+
+    for rings in cases:
+        allx = np.concatenate([r[0::2] for r in rings])
+        ally = np.concatenate([r[1::2] for r in rings])
+        if anchor is None:
+            ox, oy = allx.min(), ally.max()
+            nr, nc = polygon_local_grid(
+                allx.min(), ally.min(), allx.max(), ally.max(), resx, resy
+            )
+            rr, cc = np.meshgrid(np.arange(nr), np.arange(nc), indexing="ij")
+        else:
+            ox, oy = anchor
+            # the bbox's cells plus two rings of cells around them
+            c0 = int(np.floor((allx.min() - ox) / resx)) - 2
+            c1 = int(np.floor((allx.max() - ox) / resx)) + 3
+            r0 = int(np.floor((oy - ally.max()) / resy)) - 2
+            r1 = int(np.floor((oy - ally.min()) / resy)) + 3
+            rr, cc = np.meshgrid(
+                np.arange(r0, r1), np.arange(c0, c1), indexing="ij"
+            )
+        rr, cc = rr.ravel(), cc.ravel()
+        px = ox + (cc + 0.5) * resx
+        py = oy - (rr + 0.5) * resy
+        inside = point_in_rings(px, py, rings)
+        touched = inside | rects_touch_rings(px, py, resx / 2.0, resy / 2.0, rings)
+        for all_touched, want in ((False, inside), (True, touched)):
+            _, _, runs = polygon_cover_runs(rings, resx, resy, all_touched, anchor)
+            r, c = runs_to_cells(runs)
+            assert len(set(zip(r, c))) == len(r), "runs overlap"
+            assert set(zip(r.tolist(), c.tolist())) == set(
+                zip(rr[want].tolist(), cc[want].tolist())
+            ), (all_touched, rings)
 
 
 # ---------------------------------------------------------------------------

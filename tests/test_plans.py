@@ -145,3 +145,62 @@ def test_extract_plan_row_parity(spark, docs, aoi_points_pdf):
     out = extract_points(spark, docs, aoi_points_pdf, L8_GRID)
     assert out.count() == 6
     assert np.isfinite(out.toPandas()["blue"]).all()
+
+
+PYTHON_NODES = (
+    "ArrowEvalPython", "FlatMapGroupsInPandas", "MapInPandas", "BatchEvalPython",
+)
+UNBOUNDED_JOINS = ("SortMergeJoin", "BroadcastNestedLoopJoin", "CartesianProduct")
+POLYGON_OPERATORS = [
+    "clip_mask_data", "mask", "mask_all_touched", "recode",
+    "extract_polygons", "polygon_to_array",
+]
+
+
+@pytest.mark.parametrize("op", POLYGON_OPERATORS)
+def test_polygon_operators_broadcast_runs_without_python(spark, docs, op):
+    """Polygon membership is decided on the driver (scanline runs), so
+    the polygon operators' plans hold no Python-worker node, and the
+    runs/samples side reaches the corpus as a broadcast hash join (the
+    range condition rides on the row equi-key) — never a sort-merge or a
+    nested-loop join over the corpus."""
+    import pandas as pd
+
+    from geowombat_spark.fixtures import AOI_POLYGONS
+    from geowombat_spark.operators.extract import extract_polygons
+    from geowombat_spark.operators.rasterize import polygon_to_array
+
+    water = AOI_POLYGONS[0]
+    polys = pd.DataFrame([{"fid": water["fid"], "rings": water["rings"]}])
+    build = {
+        "clip_mask_data": lambda: sops.clip_by_polygon(
+            docs, polys, L8_GRID, mask_data=True),
+        "mask": lambda: sops.mask(docs, polys, L8_GRID, all_touched=False),
+        "mask_all_touched": lambda: sops.mask(docs, polys, L8_GRID, all_touched=True),
+        "recode": lambda: sops.recode(docs, polys, L8_GRID, {7994.0: 1.0}),
+        "extract_polygons": lambda: extract_polygons(spark, docs, polys, L8_GRID),
+        "polygon_to_array": lambda: polygon_to_array(spark, polys, L8_GRID),
+    }
+    plan = _plan(build[op]())
+    for node in PYTHON_NODES + UNBOUNDED_JOINS:
+        assert node not in plan, f"{op}: {node} in plan"
+    assert "BroadcastHashJoin" in plan, op
+
+
+def test_entry_builds_without_running_a_job(spark):
+    """Building the flagship plan starts no Spark job: the clip row count
+    is a broadcast one-row aggregate inside the returned plan, not an
+    eager count() on the driver."""
+    import __spark_entry__ as entry
+
+    sc = spark.sparkContext
+    group = "test-entry-build"
+    sc.setJobGroup(group, "build entry()")
+    try:
+        before = set(sc.statusTracker().getJobIdsForGroup(group))
+        entry.entry(spark)
+        after = set(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert after - before == set()

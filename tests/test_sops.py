@@ -177,3 +177,54 @@ def test_sample_stratified_deterministic_small_fractions(spark):
     assert 40 <= n <= 120, n  # ~80 expected from 200k at 0.0004
     # determinism: identical selection on a re-run
     assert out.count() == n
+
+
+def test_all_touched_lattice_aligned_same_cells_across_operators(spark):
+    """One all_touched rule for every polygon operator. A 2x2-cell square
+    whose corners sit on the lattice touches the 4x4 block of cells around
+    it (edge- and corner-adjacent neighbours on ALL sides), through mask,
+    polygon_to_array and extract_polygons alike; an L-shape adds a notch
+    whose cells touch the boundary only along lattice lines. extract
+    samples its bbox-local lattice (sample_feature parity), so it returns
+    the same rule restricted to the cells of that lattice."""
+    from geowombat_spark.grid import GridSpec, zorder_encode
+    from geowombat_spark.operators.extract import extract_polygons
+    from geowombat_spark.operators.rasterize import polygon_to_array
+
+    g = GridSpec(left=0.0, top=10.0, cellx=1.0, celly=1.0, nrows=10,
+                 ncols=10, tile_rows=10, tile_cols=10)
+    rr, cc = np.meshgrid(np.arange(10), np.arange(10), indexing="ij")
+    rr, cc = rr.ravel(), cc.ravel()
+    x, y = rowcol_to_center_coords(g, rr, cc)
+    docs = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "row": rr, "col": cc, "x": x, "y": y,
+                "cell_id": zorder_encode(rr, cc), "tile_id": g.tile_id(rr, cc),
+                "band_blue": (rr * 10 + cc + 1).astype(float),
+            }
+        )
+    )
+    square = [[3.0, 5.0, 5.0, 5.0, 5.0, 3.0, 3.0, 3.0, 3.0, 5.0]]
+    ell = [[2.0, 2.0, 5.0, 2.0, 5.0, 3.0, 3.0, 3.0, 3.0, 5.0, 2.0, 5.0]]
+    for rings, n_cells in ((square, 16), (ell, None)):
+        polys = pd.DataFrame([{"fid": 1, "rings": rings}])
+        masked = mask(docs, polys, g, keep="in", bands=("band_blue",),
+                      all_touched=True).filter(F.col("band_blue").isNotNull())
+        m = {(r["row"], r["col"]) for r in masked.select("row", "col").collect()}
+        burned = polygon_to_array(spark, polys, g, all_touched=True,
+                                  window=(0, 10, 0, 10))
+        b = {(r["row"], r["col"])
+             for r in burned.filter(F.col("value") == 1.0).collect()}
+        ext = extract_polygons(spark, docs, polys, g, all_touched=True)
+        e = {(int(10.0 - r["y"]), int(r["x"])) for r in ext.collect()}
+        xs, ys = np.asarray(rings[0])[0::2], np.asarray(rings[0])[1::2]
+        lattice = {
+            (r, c) for r, c in m
+            if xs.min() <= c < xs.max() and 10.0 - ys.max() <= r < 10.0 - ys.min()
+        }
+        if n_cells is not None:
+            assert len(m) == n_cells
+            assert m == {(r, c) for r in range(4, 8) for c in range(2, 6)}
+        assert b == m
+        assert e == lattice
