@@ -279,38 +279,37 @@ def open(  # noqa: A001  (mirrors the reference's gw.open name)
         raise ValueError(
             f"stack_dim must be 'time' or 'band', got {stack_dim!r}"
         )
-    if isinstance(path, (list, tuple)):
-        sources = [_one(p) for p in path]
-        bands = tuple(
-            c for c in sources[0].columns if c.startswith("band_")
-        )
-        if len(sources) == 1:
-            # same semantics as the N-source stack, minus the union:
-            # nodata still nulls and the time label still lands — a
-            # list-of-one must not silently skip both (load() rescales
-            # raw nodata into 'valid' data otherwise)
-            from pyspark.sql import functions as _F
+    # a single path is a list of one: both must null nodata the same way
+    if not isinstance(path, (list, tuple)):
+        path = [path]
+    sources = [_one(p) for p in path]
+    bands = tuple(c for c in sources[0].columns if c.startswith("band_"))
+    if len(sources) == 1:
+        # same semantics as the N-source stack, minus the union: nodata
+        # still nulls and the time label still lands — a single source
+        # must not silently skip both (load() rescales raw nodata into
+        # 'valid' data otherwise)
+        from pyspark.sql import functions as _F
 
-            s = _mosaic._nullify(sources[0], nodata, bands)
-            if time_names is not None:
-                s = s.withColumn("t", _F.lit(time_names[0]))
-            return s
-        if mosaic:
-            return _mosaic.mosaic(
-                sources, overlap=overlap, nodata=nodata, bands=bands
-            )
-        if stack_dim == "band":
-            # band-axis concat, NOT a spatial mosaic: each source keeps
-            # its bands (suffixed per source) joined on the cell key
-            return _mosaic.stack_bands(sources, nodata=nodata, bands=bands)
-        return _mosaic.concat(
-            sources,
-            time_names=time_names,
-            overlap=overlap,
-            nodata=nodata,
-            bands=bands,
+        s = _mosaic._nullify(sources[0], nodata, bands)
+        if time_names is not None:
+            s = s.withColumn("t", _F.lit(time_names[0]))
+        return s
+    if mosaic:
+        return _mosaic.mosaic(
+            sources, overlap=overlap, nodata=nodata, bands=bands
         )
-    return _one(path)
+    if stack_dim == "band":
+        # band-axis concat, NOT a spatial mosaic: each source keeps its
+        # bands (suffixed per source) joined on the cell key
+        return _mosaic.stack_bands(sources, nodata=nodata, bands=bands)
+    return _mosaic.concat(
+        sources,
+        time_names=time_names,
+        overlap=overlap,
+        nodata=nodata,
+        bands=bands,
+    )
 
 
 def load(
@@ -364,6 +363,8 @@ def xy_to_lonlat(x, y, zone: int, south: bool = False):
     return utm_to_lonlat(x, y, zone, south=south)
 
 
+# reference-API parity only: no engine caller; the public API list in
+# tests/test_series_apply.py pins the name
 def bounds_to_coords(bounds, zone: int, south: bool = False):
     """lon/lat bounds → native map coordinates (left, bottom, right, top)
     (``conversion.py:36-59``)."""

@@ -14,6 +14,9 @@ module-level FIFO of live handles capped at ``MAX_LIVE`` — the oldest
 frame is unpersisted (non-blocking) when the cap is exceeded.
 Unpersisting early is always SAFE: a still-lazy downstream plan silently
 recomputes. Callers wanting a hard reset can ``spark.catalog.clearCache()``.
+Frames of a stopped SparkContext are dropped from the registry without an
+unpersist: their blocks died with that context, and unpersisting through
+it fails.
 """
 
 from __future__ import annotations
@@ -39,6 +42,8 @@ def bounded_persist(
     # handle would double-count it against the cap — so lock + dedupe by
     # identity
     with _LOCK:
+        # stopped contexts clear their Python handle (_jsc = None)
+        _LIVE[:] = [d for d in _LIVE if d.sparkSession.sparkContext._jsc]
         if not any(d is df for d in _LIVE):
             _LIVE.append(df)
         evict = []

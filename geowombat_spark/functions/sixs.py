@@ -371,6 +371,8 @@ def toar_to_sr_sixs(
     return df
 
 
+# reference-API parity only (``SixS.rad_to_sr``): no engine caller;
+# tests/test_sixs.py pins it against the TOAR path
 def rad_to_sr_sixs(
     df: DataFrame,
     bands: dict[str, tuple[float, float]],

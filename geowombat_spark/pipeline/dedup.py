@@ -855,7 +855,8 @@ def embedding_neardup_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs ≥ threshold.
 
-    Three plans, all distributed (pick by regime):
+    Three plans, all distributed, none collects the corpus (pick by
+    regime):
 
     - ``method='lsh'`` (default, the 100-TB path for *high* thresholds):
       SRP-LSH buckets candidates (``ann.hyperplane_lsh_pairs``), then an
@@ -872,12 +873,13 @@ def embedding_neardup_pairs(
       2·N/n_blocks vectors, compute O(N²/ n_blocks²) per task across
       n_blocks·(n_blocks+1)/2 tasks — exact, no driver collect, no
       full-corpus broadcast.
-    - ``method='broadcast'`` (explicit small-corpus opt-in only): collects
-      the corpus to the driver and broadcasts the dense matrix — O(N·dim)
-      driver memory, so never the default.
+    - ``method='cluster'`` (SemDeDup-style blocking, any id type):
+      each vector joins its nearest spherical k-means cells, then one
+      exact matmul per cell (:func:`_cluster_cosine_pairs`). Approximate:
+      a near pair is missed only when its two vectors share no cell.
     """
-    if method in ("lsh", "block", "broadcast"):
-        # these three kernels pack ids into int64 numpy arrays; string ids
+    if method in ("lsh", "block"):
+        # these two kernels pack ids into int64 numpy arrays; string ids
         # would die with an opaque ValueError in every executor task. Fail
         # at plan time with the fix instead ('cluster' derives id/vec
         # types from the schema and takes any id type).
@@ -904,11 +906,7 @@ def embedding_neardup_pairs(
         return _blocked_cosine_pairs(df, id_col, vec_col, threshold, n_blocks)
     if method == "cluster":
         return _cluster_cosine_pairs(df, id_col, vec_col, threshold)
-    if method == "broadcast":
-        return _broadcast_cosine_pairs(df, id_col, vec_col, threshold)
-    raise ValueError(
-        f"method must be lsh|block|cluster|broadcast, got {method!r}"
-    )
+    raise ValueError(f"method must be lsh|block|cluster, got {method!r}")
 
 
 def _cluster_cosine_pairs(
@@ -1022,7 +1020,7 @@ def _blocked_cosine_pairs(
         blks = pdf["_blk"].values
         ai, aj = blks == bi, blks == bj
         # filter on the ROUNDED cosine — the value the pair displays —
-        # so every pair path (this one, broadcast, SemDeDup cells,
+        # so every pair path (this one, SemDeDup cells,
         # ann.hyperplane_lsh_pairs' Column-fold verify) shares one
         # boundary semantics: emitted iff round(cos, 6) >= threshold.
         # A raw-value filter disagrees with the rounded LSH verify in a
@@ -1047,45 +1045,6 @@ def _blocked_cosine_pairs(
 
     return rep.groupBy("_pair").applyInPandas(
         compute, "vec_a bigint, vec_b bigint, cosine double"
-    )
-
-
-def _broadcast_cosine_pairs(
-    df: DataFrame, id_col: str, vec_col: str, threshold: float
-) -> DataFrame:
-    """Small-corpus path: driver collect + broadcast matmul (opt-in only)."""
-    spark = df.sparkSession
-    rows = df.select(id_col, vec_col).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
-    norms = np.linalg.norm(mat, axis=1)
-    norms[norms == 0] = 1.0
-    matn = mat / norms[:, None]
-    bmat = spark.sparkContext.broadcast((ids, matn))
-
-    def _score(it):
-        b_ids, b_mat = bmat.value
-        for pdf in it:
-            q = np.array(list(pdf[vec_col]), dtype=np.float64)
-            qn = np.linalg.norm(q, axis=1)
-            qn[qn == 0] = 1.0
-            q = q / qn[:, None]
-            # rounded-threshold semantics shared by all pair paths (see
-            # _blocked_cosine_pairs)
-            sims = round6(q @ b_mat.T)
-            qi = pdf[id_col].values.astype(np.int64)
-            ii, jj = np.nonzero(sims >= threshold)
-            keep = qi[ii] < b_ids[jj]
-            yield pd.DataFrame(
-                {
-                    "vec_a": qi[ii][keep],
-                    "vec_b": b_ids[jj][keep],
-                    "cosine": sims[ii, jj][keep],
-                }
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(
-        _score, "vec_a bigint, vec_b bigint, cosine double"
     )
 
 

@@ -533,38 +533,17 @@ def decode_media(media_df: DataFrame) -> DataFrame:
     def _decode(it):
         for pdf in it:
             raws = list(pdf["media_bytes"])
-            has_null = any(r is None for r in raws)
-            magics = {bytes(r[:2]) for r in raws if r}
-            if has_null or (magics & {b"P6", b"BM", b"\x89P"}):
-                # REAL decode path (pure-numpy PPM/BMP/PNG): per-item by
-                # nature, the Arrow batch amortizes the boundary. Items
-                # in the batch without a known container fall back to
-                # the stub; undecodable ones to NULL features.
-                meta = [_meta(raw) for raw in raws]
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "media_ref": pdf["media_ref"],
-                        "width": pd.array(
-                            [m[0] for m in meta], dtype="Int32"
-                        ),
-                        "height": pd.array(
-                            [m[1] for m in meta], dtype="Int32"
-                        ),
-                        "n_frames": pd.array(
-                            [m[2] for m in meta], dtype="Int32"
-                        ),
-                        "mean_intensity": pd.array(
-                            [m[3] for m in meta], dtype="Float64"
-                        ),
-                    }
-                )
-                continue
-            lens = np.fromiter((len(r) for r in raws), dtype=np.int64, count=len(raws))
-            if len(raws) and lens.min() >= 5 and (lens == lens[0]).all():
-                # fixed-size payloads (the md5 fake): one vectorized pass
+            if (
+                raws
+                and None not in raws
+                and len({len(r) for r in raws}) == 1
+                and len(raws[0]) >= 5
+                and not any(r[:2] in (b"P6", b"BM", b"\x89P") for r in raws)
+            ):
+                # fixed-size unknown payloads (the md5 fake): one
+                # vectorized pass of the stub
                 m = np.frombuffer(b"".join(raws), dtype=np.uint8).reshape(
-                    len(raws), lens[0]
+                    len(raws), -1
                 )
                 w = 1 + ((m[:, 0].astype(np.int64) << 8) | m[:, 1]) % 2048
                 h = 1 + ((m[:, 2].astype(np.int64) << 8) | m[:, 3]) % 2048
@@ -581,8 +560,11 @@ def decode_media(media_df: DataFrame) -> DataFrame:
                     }
                 )
                 continue
-            # mixed-length unknown payloads: per-item stub with NULL
-            # degradation (a < 5-byte blob must not kill the batch)
+            # everything else — NULLs, known containers (pure-numpy
+            # PPM/BMP/PNG decode), mixed lengths, < 5-byte blobs — goes
+            # per item: codecs are per-item by nature and the Arrow batch
+            # amortizes the boundary; a bad item degrades to NULL
+            # features instead of killing the batch
             meta = [_meta(raw) for raw in raws]
             yield pd.DataFrame(
                 {
@@ -607,12 +589,6 @@ def decode_media(media_df: DataFrame) -> DataFrame:
             "n_frames int, mean_intensity double",
         ),
     )
-
-
-AUDIO_SCHEMA = (
-    "doc_id bigint, media_ref string, sample_rate int, n_channels int, "
-    "n_samples bigint, rms double"
-)
 
 
 def decode_audio(media_df: DataFrame) -> DataFrame:
@@ -653,11 +629,6 @@ def decode_audio(media_df: DataFrame) -> DataFrame:
             "n_samples bigint, rms double",
         ),
     )
-
-
-FRAME_SCHEMA = (
-    "doc_id bigint, media_ref string, frame_idx int, media_bytes binary"
-)
 
 
 def extract_frames(media_df: DataFrame, every: int = 2) -> DataFrame:
@@ -704,12 +675,6 @@ def extract_frames(media_df: DataFrame, every: int = 2) -> DataFrame:
             media_df, "media_ref string, frame_idx int, media_bytes binary"
         ),
     )
-
-
-RESIZE_SCHEMA = (
-    "doc_id bigint, media_ref string, width int, height int, "
-    "media_bytes binary"
-)
 
 
 def resize_media(

@@ -36,7 +36,6 @@ import numpy as np
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 #: hash-unit modulus (largest 30-bit prime) — see tile_metrics
 CHECKSUM_PRIME = 1_073_741_789
@@ -173,7 +172,6 @@ def write_tiled_checkpointed(
     fail_after_batches: int | None = None,
     tile_order: str = "id",
     tiles_x: int | None = None,
-    metrics_from: str = "files",
 ) -> DataFrame:
     """Write ``df`` as a tile-partitioned dataset in resumable batches;
     returns the manifest DataFrame. Required columns: ``tile_id`` (the
@@ -287,58 +285,36 @@ def write_tiled_checkpointed(
         # Metrics must describe the rows actually committed — never a fresh
         # re-execution of the upstream plan (a nondeterministic upstream,
         # e.g. partition-seeded sampling, would let the manifest disagree
-        # with the data). Two modes, both one upstream scan per batch:
-        #   'files' (default, the only audit-grade mode): read the
-        #     just-written parquet back — the metrics round-trip the
-        #     committed bytes themselves, at the cost of re-reading the
-        #     batch from disk.
-        #   'cache': persist the batch so the write and the metrics agg
-        #     observe the same materialized rows. DISK_ONLY, not MEMORY:
-        #     a memory-cached partition can be evicted and silently
-        #     recomputed from the (possibly nondeterministic) upstream
-        #     between the write and the metrics pass. Disk-persisted
-        #     blocks don't evict under memory pressure, but a lost
-        #     executor still recomputes — 'cache' is therefore
-        #     best-effort; use 'files' when the manifest must be proof.
-        if metrics_from == "cache":
-            sub = sub.persist(StorageLevel.DISK_ONLY)
-        try:
-            # Dynamic partition overwrite: the batch replaces exactly the
-            # tile directories it touches. A job killed between the data
-            # commit and the manifest commit leaves orphan tile files — the
-            # resumed run re-executes that batch and the overwrite replaces
-            # them, so the manifest row (written after the data) is the one
-            # true commit.
-            (
-                sub.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("tile_id")
-                .parquet(path)
-            )
-            if metrics_from == "cache":
-                metrics = tile_metrics(sub, id_col, content_cols)
-            else:
-                written = spark.read.option("basePath", path).parquet(
-                    *[os.path.join(path, f"tile_id={t}") for t in batch]
-                )
-                metrics = tile_metrics(written, id_col, content_cols)
-            wall = time.time() - t0
-            manifest_rows = metrics.select(
-                "tile_id",
-                F.lit(bi).alias("batch_id"),
-                "row_count",
-                "checksum",
-                "lineage",
-                F.lit(round(wall, 3)).alias("wall_s"),
-                F.lit("ok").alias("status"),
-                F.lit(time.time()).alias("ts"),
-            )
-            manifest_rows.coalesce(1).write.mode("append").parquet(mp)
-        finally:
-            # unpersist even when the write/metrics/manifest step throws —
-            # a retry loop must not accumulate leaked DISK_ONLY blocks
-            if metrics_from == "cache":
-                sub.unpersist()
+        # with the data) — so they are read back from the just-written
+        # parquet: the manifest round-trips the committed bytes themselves.
+        #
+        # Dynamic partition overwrite: the batch replaces exactly the tile
+        # directories it touches. A job killed between the data commit and
+        # the manifest commit leaves orphan tile files — the resumed run
+        # re-executes that batch and the overwrite replaces them, so the
+        # manifest row (written after the data) is the one true commit.
+        (
+            sub.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("tile_id")
+            .parquet(path)
+        )
+        written = spark.read.option("basePath", path).parquet(
+            *[os.path.join(path, f"tile_id={t}") for t in batch]
+        )
+        metrics = tile_metrics(written, id_col, content_cols)
+        wall = time.time() - t0
+        manifest_rows = metrics.select(
+            "tile_id",
+            F.lit(bi).alias("batch_id"),
+            "row_count",
+            "checksum",
+            "lineage",
+            F.lit(round(wall, 3)).alias("wall_s"),
+            F.lit("ok").alias("status"),
+            F.lit(time.time()).alias("ts"),
+        )
+        manifest_rows.coalesce(1).write.mode("append").parquet(mp)
         if fail_after_batches is not None and bi + 1 >= fail_after_batches:
             raise RuntimeError(
                 f"fault injection: killed after batch {bi} "
@@ -355,10 +331,9 @@ def verify_against_manifest(
     with the manifest. Returns rows that disagree on any leg (empty ⇒ the
     dataset is complete and content-identical to the input).
 
-    The input leg is the non-circular one: in the default
-    ``metrics_from='files'`` mode the manifest derives from the stored
-    bytes, so stored-vs-manifest alone could never catch rows the write
-    dropped — input-vs-manifest can. Raises ValueError when ``path`` has
+    The input leg is the non-circular one: the manifest derives from the
+    stored bytes, so stored-vs-manifest alone could never catch rows the
+    write dropped — input-vs-manifest can. Raises ValueError when ``path`` has
     no manifest (it was not written by this sink)."""
     man_df = read_manifest(spark, path)
     if man_df is None:

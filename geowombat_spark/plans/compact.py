@@ -87,6 +87,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .checkpoint import (
+    MANIFEST_SCHEMA,
     _manifest_path,
     content_checksum_cols,
     next_batch_id,
@@ -484,7 +485,6 @@ def _compact_batch(
             )
             for t in batch
         ],
-        "tile_id bigint, batch_id int, row_count bigint, checksum bigint, "
-        "lineage bigint, wall_s double, status string, ts double",
+        MANIFEST_SCHEMA,
     )
     manifest_rows.coalesce(1).write.mode("append").parquet(_manifest_path(path))

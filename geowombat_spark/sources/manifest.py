@@ -76,10 +76,12 @@ def search_catalog(
         ):
             continue
         if date_range is not None and not (
-            # compare on the DATE part: an item datetime with a time
-            # component ('2020-01-31T10:00:00') must not fall off the
-            # inclusive end date by raw string comparison
-            date_range[0][:10] <= it["datetime"][:10] <= date_range[1][:10]
+            # the start keeps the caller's time component; the end is
+            # inclusive at its own precision: an item datetime
+            # ('2020-01-31T10:00:00') must not fall off an end DATE
+            # ('2020-01-31') by raw string comparison
+            date_range[0] <= it["datetime"]
+            and it["datetime"][: len(date_range[1])] <= date_range[1]
         ):
             continue
         out.append(it)

@@ -124,6 +124,3 @@ def corpus_df(spark: SparkSession, table: pa.Table, tmp_path: str) -> DataFrame:
     write_tiled_parquet(table, tmp_path)
     return load_documents(spark, tmp_path)
 
-
-def load_testdata(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")

@@ -125,3 +125,20 @@ def test_search_boundary_contact_and_datetime_items(catalog_dir):
     }
     got2 = search_catalog(cat2, "c", date_range=("2024-01-01", "2024-01-31"))
     assert [it["id"] for it in got2] == ["x"]
+    # a start with a time component keeps it: 10:00 falls before a 12:00
+    # start, 13:00 does not
+    item = cat2["collections"]["c"]["items"][0]
+    cat3 = {
+        "collections": {
+            "c": {
+                "items": [
+                    dict(item, id="early", datetime="2020-01-31T10:00"),
+                    dict(item, id="late", datetime="2020-01-31T13:00"),
+                ]
+            }
+        }
+    }
+    got3 = search_catalog(
+        cat3, "c", date_range=("2020-01-31T12:00", "2020-01-31")
+    )
+    assert [it["id"] for it in got3] == ["late"]

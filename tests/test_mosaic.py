@@ -117,6 +117,18 @@ def test_open_config_nodata_and_single_source(spark, docs, tmp_path):
     vals = one.select("band_blue").distinct().collect()
     assert all(r["band_blue"] != 1.0 for r in vals), "nodata not nulled"
 
+    # a scalar path is a list of one: nodata from the kwarg or from
+    # config() must null the same cells
+    def rows(df):
+        return df.orderBy("cell_id").collect()
+
+    assert d.filter(F.col("band_blue") == 0.0).count() > 0
+    listed = rows(gw.open(spark, [p1], nodata=0))
+    assert rows(gw.open(spark, p1, nodata=0)) == listed
+    with gw.config(nodata=0):
+        assert rows(gw.open(spark, p1)) == listed
+        assert rows(gw.open(spark, [p1])) == listed
+
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="stack_dim"):

@@ -416,19 +416,20 @@ def test_ivf_recall_at_nprobe4(spark):
     assert sum(recalls) / len(recalls) >= 0.9, recalls
 
 
-def test_blocked_cosine_matches_broadcast(spark, emb_df):
+def test_blocked_cosine_matches_numpy(spark, emb_df):
     """method='block' (distributed block-pair matmul) is exact: identical
-    pair set and scores to the broadcast matmul at any threshold."""
+    pair set and scores to a dense numpy matmul at any threshold."""
     df, mat = emb_df
     blk = dedup.embedding_neardup_pairs(
         df, threshold=0.3, method="block", n_blocks=4
     ).collect()
-    brd = dedup.embedding_neardup_pairs(
-        df, threshold=0.3, method="broadcast"
-    ).collect()
+    norm = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+    sims = dedup.round6(norm @ norm.T)
+    ii, jj = np.nonzero(np.triu(sims >= 0.3, k=1))
+    ref = {(int(i), int(j)): sims[i, j] for i, j in zip(ii, jj)}
     key = lambda r: (r["vec_a"], r["vec_b"])  # noqa: E731
-    assert sorted(map(key, blk)) == sorted(map(key, brd))
-    assert {key(r): r["cosine"] for r in blk} == {key(r): r["cosine"] for r in brd}
+    assert sorted(map(key, blk)) == sorted(ref)
+    assert {key(r): r["cosine"] for r in blk} == ref
 
 
 def test_dedup_groups_and_deduplicate(spark):
@@ -1093,6 +1094,23 @@ def test_decode_media_null_and_tiny_payloads(spark):
     for ref in ("media://null", "media://tiny"):
         assert out[ref]["width"] is None
         assert out[ref]["mean_intensity"] is None
+
+    # unknown containers of different lengths, no NULL, one under 5
+    # bytes, in one batch: the long ones get the stub, the tiny one NULL
+    blobs = {"media://a": b"\x01\x02\x03\x04\x05\x06",
+             "media://b": b"\xff\x00\x10\x20\x30\x40\x50\x60\x70",
+             "media://c": b"\x07\x08"}
+    df2 = spark.createDataFrame(
+        [(i, ref, bytearray(b)) for i, (ref, b) in enumerate(blobs.items())],
+        "doc_id long, media_ref string, media_bytes binary",
+    ).coalesce(1)
+    out2 = {r["media_ref"]: r for r in multimodal.decode_media(df2).collect()}
+    for ref in ("media://a", "media://b"):
+        got = out2[ref]
+        assert (got["width"], got["height"], got["n_frames"],
+                got["mean_intensity"]) == multimodal._fake_decode(blobs[ref])
+    assert out2["media://c"]["width"] is None
+    assert out2["media://c"]["mean_intensity"] is None
 
 
 def test_scan_parallelism_handles_size_suffixes(spark, tmp_path):
