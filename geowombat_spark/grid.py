@@ -48,6 +48,7 @@ __all__ = [
     "polygon_local_grid",
     "polygon_cover_runs",
     "merge_runs",
+    "paint_runs",
     "runs_to_cells",
     "polygon_sample_centers",
     "align_bounds",
@@ -476,6 +477,37 @@ def merge_runs(runs: np.ndarray) -> np.ndarray:
     head = np.flatnonzero(np.r_[True, base[1:] + runs[1:, 1] > reach[:-1]])
     last = np.r_[head[1:], runs.shape[0]] - 1
     return np.stack([runs[head, 0], runs[head, 1], reach[last] - base[last]], axis=1)
+
+
+def paint_runs(features: list[np.ndarray]) -> np.ndarray:
+    """Overlay of the features' half-open ``(row, col_start, col_end)``
+    runs in which the later feature wins each cell (GDAL rasterize
+    semantics) → disjoint row-major ``(row, col_start, col_end, feature)``
+    runs, ``feature`` the index into ``features``.
+
+    The run boundaries, keyed on one line as in :func:`merge_runs`, cut
+    each row into elementary segments; every run paints its segments
+    with ``np.maximum.at`` of the feature index, so no cell is expanded.
+    A segment holds at least one cell, so the work never exceeds that of
+    expanding the cells."""
+    owner = np.repeat(np.arange(len(features)), [f.shape[0] for f in features])
+    runs = np.concatenate([np.empty((0, 3), dtype=np.int64), *features])
+    if runs.shape[0] == 0:
+        return np.empty((0, 4), dtype=np.int64)
+    rmin, cmin = runs[:, 0].min(), runs[:, 1].min()
+    w = runs[:, 2].max() - cmin + 1
+    base = (runs[:, 0] - rmin) * w - cmin
+    keys = np.unique(np.concatenate([base + runs[:, 1], base + runs[:, 2]]))
+    lo = np.searchsorted(keys, base + runs[:, 1])
+    n = np.searchsorted(keys, base + runs[:, 2]) - lo
+    # segment i spans keys[i]..keys[i+1]; only a row's own runs paint it
+    top = np.full(keys.shape[0] - 1, -1, dtype=np.int64)
+    np.maximum.at(top, _ramp(lo, n), np.repeat(owner, n))
+    seg = np.flatnonzero(top >= 0)
+    row, c0 = np.divmod(keys[seg], w)
+    return np.stack(
+        [row + rmin, c0 + cmin, c0 + cmin + keys[seg + 1] - keys[seg], top[seg]], axis=1
+    )
 
 
 def runs_to_cells(runs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:

@@ -7,9 +7,9 @@ sklearn-xarray; ``predict`` maps the fitted pipeline back over the chunks.
 The torch variants (``ml/dl_classifiers.py``) are external-model wrappers,
 out of scope.
 
-Spark shape: labels burn onto the grid with the same
-``operators/rasterize.polygon_to_array`` kernel, the (small) labeled cell
-set **broadcast-joins** to the corpus — no corpus shuffle — and the
+Spark shape: labels burn onto the grid as the painted run table of
+``operators/rasterize.polygon_to_array``, which **broadcast-joins** to the
+corpus through ``sops.join_runs`` — no corpus shuffle — and the
 estimator is any ``pyspark.ml`` estimator, trained distributed by MLlib
 inside a ``Pipeline(VectorAssembler → estimator)``. ``predict`` is pure
 ``model.transform`` (Column pipeline), so inference runs as one map stage
@@ -21,9 +21,9 @@ dispatch (``classifiers.py:16-56``).
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .grid import GridSpec
 
@@ -74,20 +74,14 @@ def fit(
     else:
         if labels is None:
             raise ValueError("supervised estimator requires label polygons")
-        from .operators.rasterize import polygon_to_array
+        from .operators.rasterize import burn_runs
+        from .operators.sops import join_runs
 
-        # burn with a NaN fill, NOT the default 0.0: filtering the fill
-        # by `value != 0` conflated background with a legitimate class 0
-        # (binary {0,1} labelings silently lost every class-0 polygon)
-        burned = polygon_to_array(
-            spark, labels, grid, col=col, fill=float("nan"),
-            all_touched=all_touched,
-        )
-        lab = (
-            burned.filter(~F.isnan(F.col("value")))
-            .select("row", "col", F.col("value").alias(targ_name))
-        )
-        train = docs.join(F.broadcast(lab), ["row", "col"])
+        # a NaN burn value is no label: its runs drop AFTER the overlap is
+        # resolved, so a later NaN feature still unlabels what it covers
+        lab, _ = burn_runs(labels, grid, col=col, all_touched=all_touched)
+        lab = lab[~np.isnan(lab["value"])].rename(columns={"value": targ_name})
+        train = join_runs(docs, lab, f"`{targ_name}` double", "inner")
         if not train.limit(1).count():
             # an empty label∩corpus join otherwise dies deep inside MLlib
             # ("Nothing has been added to this summarizer") with no hint

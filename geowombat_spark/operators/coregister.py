@@ -194,13 +194,13 @@ def detect_shifts(
         # partial-coverage corpus (1,000 populated tiles on a 10,000-tile
         # grid) would otherwise get a keep_mod sized for the empty grid
         # and sample ~10x fewer tie points than the caller bounded. The
-        # distinct is a column-pruned row/col scan — cheap next to the
-        # per-tile FFTs it gates.
-        n_tiles = src.select("_tile").distinct().count()
+        # count is a column-pruned row/col scan folded into the plan as a
+        # scalar subquery, so building the plan runs no Spark job.
+        n_tiles = src.agg(F.count_distinct("_tile")).scalar()
         # ceil, not floor: floor keeps up to 2x the requested tile count
         # (n_tiles=1999, max_tiles=1000 → keep_mod=1 → ALL tiles sampled),
         # doubling the detection shuffle the caller bounded
-        keep_mod = max(1, -(-n_tiles // int(max_tiles)))
+        keep_mod = F.greatest(F.lit(1), F.ceil(n_tiles / F.lit(int(max_tiles))))
         src = src.filter(F.xxhash64("_tile") % keep_mod == 0)
 
     schema = "tile long, n_valid long, peak double, dy double, dx double"

@@ -15,9 +15,11 @@ scan(pruned tiles) → broadcast-hash-join → partial agg.
 Polygon extract replicates ``sample_feature``
 (``src/geowombat/core/util.py:472-573``): polygon-local grid, rasterize-by-
 center (or exact any-touch) membership, row-major sample order. The
-samples come from the driver-side scanline kernel
-(``grid.polygon_sample_centers``), are encoded like a point AOI and
-broadcast into the same ``cell_id`` join — no Python worker runs.
+samples stay runs from the driver-side scanline kernel
+(``grid.polygon_cover_runs``), mapped exactly onto grid runs and broadcast
+into ``sops.join_runs`` (``row`` key, column-range condition); each
+sample's ``point`` and ``x`` derive from the matched ``col`` on the
+executors. No cell list is built on the driver and no Python worker runs.
 """
 
 from __future__ import annotations
@@ -31,10 +33,12 @@ from pyspark.sql import functions as F
 
 from ..grid import (
     GridSpec,
+    _ramp,
     coords_to_rowcol,
-    polygon_sample_centers,
+    polygon_cover_runs,
     zorder_encode,
 )
+from .sops import RUN_COLS, RUN_DDL, join_runs
 
 BAND_COLS = ("band_blue", "band_green", "band_red")
 
@@ -292,7 +296,45 @@ def extract_points(
     return out.drop("_pt_order")
 
 
-def _polygon_samples(
+def _grid_pieces(grid: GridSpec, ox: float, oy: float, runs: np.ndarray, p0: np.ndarray):
+    """One polygon's bbox-local runs ``(row, col_start, col_end)`` (first
+    point numbers ``p0``) cut into grid runs: ``(row, c0, c1, _p0, _lc, _ox,
+    y, in_grid)`` with a cell's point ``_p0 + col`` and local column
+    ``_lc + col``.
+
+    A sample's grid cell is ``coords_to_rowcol(clamp=True)`` of its centre
+    and it is in the grid by ``in_bounds_mask`` — the reference
+    (``sops.py:836-844``) drops out-of-image indices; clamping would gather
+    edge-cell values for a polygon's overhang. The map is separable (x
+    depends on the local column only, y on the local row only), so each
+    local column and each run's row map once, and a run is cut wherever
+    the in-grid test flips or an in-grid column does not step by one — not
+    a constant shift: half-cell-snapped vertices and non-binary
+    resolutions step by 0 or 2 in places. Out-of-grid pieces keep their
+    clamped start column; only their local columns matter.
+    """
+    lo = runs[:, 1].min(initial=0)
+    xs = ox + (np.arange(lo, runs[:, 2].max(initial=0)) + 0.5) * grid.cellx
+    y = oy - (runs[:, 0] + 0.5) * grid.celly
+    grow, gcol = coords_to_rowcol(grid, xs, y, clamp=True)
+    x_in = in_bounds_mask(xs, grid.top, grid)
+    cut = np.ones(xs.shape[0], dtype=bool)
+    cut[1:] = (x_in[1:] != x_in[:-1]) | (x_in[1:] & (gcol[1:] != gcol[:-1] + 1))
+    seg = np.flatnonzero(cut)
+    sid = np.cumsum(cut) - 1
+    a, b = runs[:, 1] - lo, runs[:, 2] - lo
+    m = sid[b - 1] - sid[a] + 1
+    r, t = np.repeat(np.arange(runs.shape[0]), m), _ramp(sid[a], m)
+    s = np.maximum(a[r], seg[t])
+    e = np.minimum(b[r], np.r_[seg[1:], xs.shape[0]][t])
+    c0 = gcol[s]
+    return (
+        grow[r], c0, c0 + e - s, p0[r] + s - a[r] - c0, lo + s - c0,
+        np.full(r.shape[0], ox), y[r], x_in[s] & in_bounds_mask(grid.left, y, grid)[r],
+    )
+
+
+def _polygon_runs(
     polygons: pd.DataFrame,
     grid: GridSpec,
     frac: float = 1.0,
@@ -300,8 +342,12 @@ def _polygon_samples(
     all_touched: bool = False,
     seed: int = 42,
     id_column: str = "fid",
-) -> pd.DataFrame:
-    """:func:`sample_polygons` as a driver-side pandas frame."""
+) -> tuple[pd.DataFrame, str]:
+    """:func:`sample_polygons` as a driver-side run table, one row per
+    :func:`_grid_pieces` piece of each polygon's sampled runs:
+    :data:`~.sops.RUN_COLS`, ``_p0``, ``_lc``, ``_ox``, ``y``, ``_in`` (in
+    the grid) and ``id_column``. Also returns the payload DDL (all but the
+    run columns and ``_in``) that :func:`~.sops.join_runs` takes."""
     ids = polygons[id_column]
     # id type follows the input with the reference's int-FIRST fallback
     # (util.py:553-559: try int(fid), fall back to str on ValueError): a
@@ -332,10 +378,9 @@ def _polygon_samples(
     # 438-493). Point ids continue across a fid's parts so they stay
     # unique within the fid; the rng is seeded per (fid, part).
     id_dtype = object if id_is_str else np.int64
-    frames = [
-        pd.DataFrame(columns=[id_column, "point", "x", "y"]).astype(
-            {id_column: id_dtype, "point": np.int64, "x": float, "y": float}
-        )
+    none = np.empty((0, 3), dtype=np.int64)  # types the table when no run
+    pieces = [
+        (*_grid_pieces(grid, 0.0, 0.0, none, none[:, 0]), np.empty(0, dtype=id_dtype))
     ]
     parts: dict = {}
     for key, rs in zip(ids, polygons["rings"]):
@@ -345,22 +390,33 @@ def _polygon_samples(
         else:
             fid = fid_seed = int(key)
         ri, start = parts.get(fid, (0, 0))
-        cx, cy = polygon_sample_centers(rs, grid.cellx, grid.celly, all_touched)
+        ox, oy, runs = polygon_cover_runs(rs, grid.cellx, grid.celly, all_touched)
+        n = runs[:, 2] - runs[:, 1]
         # util.py:538-551: subsample only when above the area floor
-        if frac < 1.0 and (min_frac_area is None or cx.shape[0] > min_frac_area):
+        if frac < 1.0 and (min_frac_area is None or n.sum() > min_frac_area):
             rng = np.random.default_rng(seed + fid_seed + 7919 * ri)
-            idx = rng.choice(cx.shape[0], size=int(cx.shape[0] * frac), replace=False)
+            idx = rng.choice(int(n.sum()), size=int(n.sum() * frac), replace=False)
             idx.sort()
-            cx, cy = cx[idx], cy[idx]
-        parts[fid] = (ri + 1, start + cx.shape[0])
-        frames.append(
-            pd.DataFrame(
-                {id_column: np.full(cx.shape[0], fid, dtype=id_dtype),
-                 "point": np.arange(start, start + cx.shape[0], dtype=np.int64),
-                 "x": cx, "y": cy}
-            )
-        )
-    return pd.concat(frames, ignore_index=True)
+            # the i-th cell lies in the first run whose prefix sum passes i
+            ends = np.cumsum(n)
+            j = np.searchsorted(ends, idx, side="right")
+            lc = runs[j, 1] + idx - (ends - n)[j]
+            runs, n = np.stack([runs[j, 0], lc, lc + 1], axis=1), np.ones_like(lc)
+        parts[fid] = (ri + 1, start + int(n.sum()))
+        p = _grid_pieces(grid, ox, oy, runs, start + np.cumsum(n) - n)
+        pieces.append((*p, np.full(p[0].shape[0], fid, dtype=id_dtype)))
+    names = [*RUN_COLS, "_p0", "_lc", "_ox", "y", "_in", id_column]
+    runs = pd.DataFrame(dict(zip(names, map(np.concatenate, zip(*pieces)))))
+    id_ddl = "string" if id_is_str else "long"
+    return runs, f"_p0 long, _lc long, _ox double, y double, `{id_column}` {id_ddl}"
+
+
+def _samples(id_column: str, grid: GridSpec) -> list:
+    """A sample's ``(id, point, x, y)`` from the grid column ``col`` its
+    run matched — x by the same IEEE sequence as
+    ``grid.polygon_sample_centers``."""
+    x = f"_ox + ((col + _lc) + 0.5D) * {float(grid.cellx)!r}D AS x"
+    return [id_column, F.expr("_p0 + col AS point"), F.expr(x), "y"]
 
 
 def sample_polygons(
@@ -378,17 +434,20 @@ def sample_polygons(
 
     ``polygons`` columns: ``fid`` plus ``rings`` (list of flat
     ``[x0,y0,x1,y1,...]`` arrays) and any attribute columns. The frame is
-    driver-resident, so the samples are computed on the driver and
-    returned as one local DataFrame. ``frac``/``min_frac_area`` follow
+    driver-resident, so the sampled runs are computed on the driver and
+    expanded to points on the executors. ``frac``/``min_frac_area`` follow
     ``util.py:538-551`` (subsample only when above the area floor); the
     rng is seeded per polygon for determinism.
     """
-    return _pdf_to_sdf(
-        spark,
-        _polygon_samples(
-            polygons, grid, frac=frac, min_frac_area=min_frac_area,
-            all_touched=all_touched, seed=seed, id_column=id_column,
-        ),
+    runs, payload = _polygon_runs(
+        polygons, grid, frac=frac, min_frac_area=min_frac_area,
+        all_touched=all_touched, seed=seed, id_column=id_column,
+    )
+    cols = F.explode(F.sequence("_run_c0", F.col("_run_c1") - 1)).alias("col")
+    return (
+        spark.createDataFrame(runs.drop(columns="_in"), f"{RUN_DDL}, {payload}")
+        .select("*", cols)
+        .select(*_samples(id_column, grid))
     )
 
 
@@ -407,7 +466,7 @@ def extract_polygons(
 ) -> DataFrame:
     """Sample band values for every cell whose center falls inside each
     polygon — ``gw.extract(polygons)`` (``sops.py:689-909`` polygon path)."""
-    samples = _polygon_samples(
+    runs, payload = _polygon_runs(
         polygons,
         grid,
         frac=frac,
@@ -416,31 +475,24 @@ def extract_polygons(
         seed=seed,
         id_column=id_column,
     )
-    # DROP sample centers outside the grid (reference ``sops.py:836-844``
-    # filters out-of-image indices; clamping would gather edge-cell values
-    # for the overhanging part of a polygon that extends past the bounds)
-    samples = samples[
-        in_bounds_mask(samples["x"].values, samples["y"].values, grid)
-    ].reset_index(drop=True)
-    enc = encode_points_pdf(samples, grid)
-    pruned = _prune_tiles(docs, enc["tile_id"].unique())
+    runs = runs[runs.pop("_in")]
+    # the tiles of every run: its tile row, and each tile column it spans
+    c0 = runs["_run_c0"].to_numpy() // grid.tile_cols
+    n = (runs["_run_c1"].to_numpy() - 1) // grid.tile_cols - c0 + 1
+    tiles = np.repeat(runs["_run_row"].to_numpy() // grid.tile_rows * grid.tiles_x, n)
+    pruned = _prune_tiles(docs, tiles + _ramp(c0, n))
     band_cols = [_band_col(b) for b in bands]
     # carry the time column when the corpus is a stack: every sample point
     # legitimately matches one row per time step, and 't' is what makes
     # those rows distinguishable downstream
     t_cols = ["t"] if "t" in docs.columns else []
-    doc_side = pruned.select(
-        "cell_id", *t_cols, *band_cols, *keep_doc_columns
+    doc_cols = ["cell_id", *t_cols, *band_cols, *keep_doc_columns]
+    doc_side = pruned.select(*doc_cols, *(c for c in ("row", "col") if c not in doc_cols))
+    out = (
+        join_runs(doc_side, runs, payload, "inner")
+        .select(*doc_cols, *_samples(id_column, grid))
+        .withColumnsRenamed(dict(zip(band_cols, bands)))
     )
-    joined = doc_side.join(
-        F.broadcast(
-            _pdf_to_sdf(spark, enc[[id_column, "point", "x", "y", "cell_id"]])
-        ),
-        "cell_id",
-        "inner",
-    )
-    renames = dict(zip(band_cols, bands))
-    out = joined.withColumnsRenamed(renames)
     # polygon attribute columns ride back in via the (tiny) broadcast fid
     # table — ``sample_feature`` re-assigns other_cols the same way
     # one attribute row per fid: a multipart feature exploded into

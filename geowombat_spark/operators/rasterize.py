@@ -5,11 +5,12 @@ Reference: ``/root/reference/src/geowombat/core/conversion.py:570-833``
 GDAL ``features.rasterize`` semantics; ``all_touched`` toggles
 center-containment vs cell-intersects).
 
-Spark shape: each feature's cells on the reference grid come from the
+Spark shape: each feature's runs on the reference grid come from the
 driver-side scanline kernel ``grid.polygon_cover_runs``; overlaps resolve
-there (later feature wins, like GDAL). The burned cells are broadcast into
-a left join with the window's cell lattice (``spark.range`` — pure
-codegen), ``fill`` elsewhere: no shuffle, no Python worker."""
+there by ``grid.paint_runs`` (later feature wins, like GDAL) without
+expanding a cell. The window's cell lattice (``spark.range`` — pure
+codegen) left-joins the broadcast painted runs through ``sops.join_runs``
+(``fill`` elsewhere): no shuffle, no Python worker."""
 
 from __future__ import annotations
 
@@ -18,7 +19,44 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..grid import GridSpec, polygon_cover_runs, round_window, runs_to_cells
+from ..grid import GridSpec, paint_runs, round_window
+from .sops import RUN_COLS, _feature_runs, _total_bounds, join_runs
+
+
+def burn_runs(
+    polygons: pd.DataFrame,
+    grid: GridSpec,
+    col: str | None = None,
+    default_value: float = 1.0,
+    all_touched: bool = False,
+    window: tuple[int, int, int, int] | None = None,
+) -> tuple[pd.DataFrame, tuple[int, int, int, int]]:
+    """The burned cells as a run table — :data:`~.sops.RUN_COLS` plus
+    ``value``, the burn value of the last feature covering each cell — and
+    the window ``(row0, row1, col0, col1)`` it is clipped to (default: the
+    polygons' grid-aligned total bounds).
+
+    Each input ROW is one GDAL feature: duplicate fids (multipart explode,
+    or fid collisions carrying different burn values) burn each part with
+    ITS OWN row's value, later-row-wins only on overlap cells. Runs are
+    also clipped to the grid (GDAL rasterize leaves nothing outside it, the
+    same contract as extract_polygons, reference ``sops.py:836-844``).
+    """
+    if window is None and len(polygons):
+        window = round_window(grid, *_total_bounds(polygons))
+    row0, row1, col0, col1 = window = window or (0, 0, 0, 0)
+    burn = polygons[col].astype(float).to_numpy() if col else np.full(
+        len(polygons), float(default_value)
+    )
+    painted = paint_runs(_feature_runs(polygons, grid, all_touched))
+    painted[:, 1:3] = np.clip(painted[:, 1:3], max(col0, 0), min(col1, grid.ncols))
+    painted = painted[
+        (painted[:, 0] >= max(row0, 0))
+        & (painted[:, 0] < min(row1, grid.nrows))
+        & (painted[:, 1] < painted[:, 2])
+    ]
+    runs = pd.DataFrame(painted[:, :3], columns=RUN_COLS)
+    return runs.assign(value=burn[painted[:, 3]]), window
 
 
 def polygon_to_array(
@@ -44,49 +82,19 @@ def polygon_to_array(
     grid-aligned window. ``id_column`` is accepted for API
     compatibility but unused (features are identified by row position).
     """
-    if window is None:
-        if len(polygons) == 0:
-            # no features and no window: nothing defines an extent
-            return spark.createDataFrame(
-                [], "row long, col long, x double, y double, value double"
-            )
-        from .sops import _total_bounds
-
-        minx, miny, maxx, maxy = _total_bounds(polygons)
-        window = round_window(grid, minx, miny, maxx, maxy, expand_by=0)
-    row0, row1, col0, col1 = window
+    burned, (row0, row1, col0, col1) = burn_runs(
+        polygons, grid, col, default_value, all_touched, window
+    )
     nrows, ncols = max(0, row1 - row0), max(0, col1 - col0)
     if nrows == 0 or ncols == 0:
-        # bbox entirely off-grid: round_window clamps each bound
-        # independently, so row1 < row0 (or col1 < col0) here — a raw
-        # nrows*ncols product would be positive again and `id % ncols`
-        # with a negative ncols would fabricate out-of-grid lattice rows
+        # no features and no window, or a bbox entirely off-grid:
+        # round_window clamps each bound independently, so row1 < row0 (or
+        # col1 < col0) here — a raw nrows*ncols product would be positive
+        # again and `id % ncols` with a negative ncols would fabricate
+        # out-of-grid lattice rows
         return spark.createDataFrame(
             [], "row long, col long, x double, y double, value double"
         )
-
-    # each input ROW is one GDAL feature: duplicate fids (multipart
-    # explode, or fid collisions carrying different burn values) burn each
-    # part with ITS OWN row's value, later-row-wins only on overlap cells
-    polys = polygons.reset_index(drop=True)
-    burn = polys[col].astype(float) if col else [float(default_value)] * len(polys)
-    empty = np.empty(0, dtype=np.int64)
-    cover = [pd.DataFrame({"row": empty, "col": empty, "value": empty * 0.0})]
-    for rs, v in zip(polys["rings"], burn):
-        _, _, runs = polygon_cover_runs(
-            rs, grid.cellx, grid.celly, all_touched, anchor=(grid.left, grid.top)
-        )
-        r, c = runs_to_cells(runs)
-        cover.append(pd.DataFrame({"row": r, "col": c, "value": v}))
-    cover = pd.concat(cover, ignore_index=True)
-    # DROP off-grid cells (same contract as extract_polygons, reference
-    # sops.py:836-844): GDAL rasterize leaves nothing outside the grid
-    on_grid = (
-        (cover["row"] >= 0) & (cover["row"] < grid.nrows)
-        & (cover["col"] >= 0) & (cover["col"] < grid.ncols)
-    )
-    cover = cover[on_grid].drop_duplicates(["row", "col"], keep="last")
-    burned = spark.createDataFrame(cover, "row long, col long, value double")
 
     from .transform import _with_centers
 
@@ -97,5 +105,5 @@ def polygon_to_array(
         ),
         grid,
     )
-    out = cells.join(F.broadcast(burned), ["row", "col"], "left")
+    out = join_runs(cells, burned, "value double")
     return out.withColumn("value", F.coalesce(F.col("value"), F.lit(float(fill))))

@@ -6,7 +6,9 @@ join) and lets Catalyst pick the physical strategy. Polygon membership
 (clip ``mask_data``, ``mask``, ``recode``) comes from the driver-side
 scanline kernel ``grid.polygon_cover_runs``: the documents are left-joined
 against the broadcast ``(row, col_start, col_end)`` runs — no Python
-worker touches a document.
+worker touches a document. :func:`join_runs` is that join for every
+polygon operator: extract, rasterize and ``ml.fit`` ship their own run
+tables (with a payload) through it too.
 
 Reference semantics, cited per function, from
 ``/root/reference/src/geowombat/core/sops.py``.
@@ -36,6 +38,43 @@ def _total_bounds(polygons: pd.DataFrame) -> tuple[float, float, float, float]:
     return float(xs.min()), float(ys.min()), float(xs.max()), float(ys.max())
 
 
+RUN_COLS = ["_run_row", "_run_c0", "_run_c1"]
+RUN_DDL = "_run_row long, _run_c0 long, _run_c1 long"
+
+
+def join_runs(
+    frame: DataFrame, runs: pd.DataFrame, payload: str = "", how: str = "left"
+) -> DataFrame:
+    """``frame`` joined to the broadcast run table ``runs`` — the one
+    raster⋈vector join of every polygon operator (Raptor's scanline
+    interval join, VLDB 2019): a frame row matches a run when ``row ==
+    _run_row`` and ``_run_c0 <= col < _run_c1``.
+
+    ``runs`` holds :data:`RUN_COLS` and then the payload columns typed by
+    the DDL ``payload``; the payload columns are appended to ``frame``'s
+    and the run columns dropped. The join keys on ``row`` with the
+    column range as its condition, so it plans as a broadcast hash join.
+    """
+    schema = f"{RUN_DDL}, {payload}" if payload else RUN_DDL
+    run_df = frame.sparkSession.createDataFrame(runs, schema)
+    # one SQL string, not a Column tree: each Column node is a py4j round
+    # trip, and the plan is built on every request
+    on = F.expr("row = _run_row AND col >= _run_c0 AND col < _run_c1")
+    return frame.join(F.broadcast(run_df), on, how).drop(*RUN_COLS)
+
+
+def _feature_runs(
+    polygons: pd.DataFrame, grid: GridSpec, all_touched: bool
+) -> list[np.ndarray]:
+    """Each feature's grid-anchored :func:`~..grid.polygon_cover_runs`, in
+    input order."""
+    anchor = (grid.left, grid.top)
+    return [
+        polygon_cover_runs(rs, grid.cellx, grid.celly, all_touched, anchor)[2]
+        for rs in polygons["rings"]
+    ]
+
+
 def _with_cover_flag(
     docs: DataFrame, polygons: pd.DataFrame, grid: GridSpec, all_touched: bool = False
 ) -> DataFrame:
@@ -43,31 +82,14 @@ def _with_cover_flag(
     by any polygon (GDAL rasterize membership, ``conversion.py:570-833``).
 
     The features' grid-anchored runs are merged per row, so no document
-    matches two runs; the broadcast join keys on ``row`` with the column
-    range as its condition. Decisions equal ``point_in_rings`` (and
+    matches two runs. Decisions equal ``point_in_rings`` (and
     ``rects_touch_rings``) at ``(left + (col+0.5)·cellx, top -
     (row+0.5)·celly)`` — the convention every corpus's ``x``/``y`` uses.
     """
-    anchor = (grid.left, grid.top)
-    runs = [np.empty((0, 3), dtype=np.int64)] + [
-        polygon_cover_runs(rs, grid.cellx, grid.celly, all_touched, anchor)[2]
-        for rs in polygons["rings"]
-    ]
-    run_df = docs.sparkSession.createDataFrame(
-        pd.DataFrame(
-            merge_runs(np.concatenate(runs)), columns=["_run_row", "_run_c0", "_run_c1"]
-        ),
-        "_run_row long, _run_c0 long, _run_c1 long",
-    )
-    on = (
-        (F.col("row") == F.col("_run_row"))
-        & (F.col("col") >= F.col("_run_c0"))
-        & (F.col("col") < F.col("_run_c1"))
-    )
-    return (
-        docs.join(F.broadcast(run_df), on, "left")
-        .withColumn("_pip", F.col("_run_row").isNotNull())
-        .drop("_run_row", "_run_c0", "_run_c1")
+    runs = [np.empty((0, 3), dtype=np.int64), *_feature_runs(polygons, grid, all_touched)]
+    cover = pd.DataFrame(merge_runs(np.concatenate(runs)), columns=RUN_COLS)
+    return join_runs(docs, cover.assign(_pip=True), "_pip boolean").withColumn(
+        "_pip", F.col("_pip").isNotNull()
     )
 
 

@@ -215,6 +215,24 @@ def test_detect_shifts_max_tiles_prunes(spark):
     assert 0 < ties.count() < 4
 
 
+def test_detect_shifts_max_tiles_builds_without_a_job(spark):
+    """The tile count behind ``max_tiles`` is a scalar subquery inside the
+    returned plan, not an eager count while the plan is built (which ran
+    the input scan once more when the plan executed)."""
+    base = _noise(128, 128, seed=13)
+    df = _frame(spark, G128, base, _fourier_shift(base, 1.0, 0.0))
+    sc = spark.sparkContext
+    group = "test-detect-shifts-build"
+    sc.setJobGroup(group, "build detect_shifts(max_tiles=2)")
+    try:
+        detect_shifts(df, G128, "b_ref", "b_tar", max_shift=4, max_tiles=2)
+        jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == set(), sorted(jobs)
+
+
 def test_coregister_local_per_tile_field(spark):
     """COREG_LOCAL analogue: two tiles displaced by DIFFERENT vectors are
     each realigned by their own tie-point shift."""

@@ -199,7 +199,8 @@ def test_round_window_and_tile_cover():
 def _holed_polygon(rng, res, snap):
     """Random concave star polygon with a triangular hole, in units of
     ``res``; ``snap='corner'`` rounds every vertex onto a lattice corner
-    (edges then run along lattice lines — the any-touch edge case)."""
+    (edges then run along lattice lines — the any-touch edge case),
+    ``snap='half'`` onto the half-cell lattice."""
     ang = np.sort(rng.uniform(0.0, 2.0 * np.pi, 9))
     rad = res * rng.uniform(2.5, 9.0, 9)
     cx, cy = res * rng.uniform(-5.0, 5.0, 2)
@@ -210,6 +211,8 @@ def _holed_polygon(rng, res, snap):
     ]
     if snap == "corner":
         rings = [np.round(r / res) * res for r in rings]
+    elif snap == "half":
+        rings = [np.round(2.0 * r / res) * res / 2.0 for r in rings]
     return [r.ravel() for r in rings]
 
 
@@ -306,6 +309,118 @@ def test_all_touched_exact_matches_sat_bruteforce(res, snap, lattice):
             assert set(zip(r.tolist(), c.tolist())) == set(
                 zip(rr[want].tolist(), cc[want].tolist())
             ), (all_touched, rings)
+
+
+def _expand_runs(runs, cellx):
+    """What the executors derive per cell from the polygon run table."""
+    from geowombat_spark.grid import runs_to_cells
+
+    n = (runs["_run_c1"] - runs["_run_c0"]).to_numpy()
+    row, col = runs_to_cells(runs[["_run_row", "_run_c0", "_run_c1"]].to_numpy())
+    rep = {c: np.repeat(runs[c].to_numpy(), n) for c in ("fid", "_p0", "_lc", "_ox", "y")}
+    x = rep["_ox"] + ((col + rep["_lc"]) + 0.5) * cellx
+    return rep["fid"], rep["_p0"] + col, row, col, x, rep["y"]
+
+
+@pytest.mark.parametrize("frac", [1.0, 0.3])
+@pytest.mark.parametrize("all_touched", [False, True])
+@pytest.mark.parametrize(
+    "res,snap", [(res, snap) for res in (1.0, 0.7, 30.0) for snap in ("free", "half")]
+)
+def test_polygon_grid_runs_match_per_cell_samples(res, snap, all_touched, frac):
+    """The extract run table, expanded, equals the per-cell samples bit for
+    bit: ``polygon_sample_centers`` (subsampled by the same seeded draw),
+    in-grid by ``in_bounds_mask``, grid cell by ``coords_to_rowcol(clamp=
+    True)``. The grid sits on the cell lattice and the polygons overhang
+    it; half-cell-snapped vertices put sample centres on grid-cell edges,
+    where the local→grid column map steps by 0 or 2."""
+    import pandas as pd
+
+    from geowombat_spark.operators.extract import _polygon_runs, in_bounds_mask
+
+    grid = GridSpec(left=-6 * res, top=5 * res, cellx=res, celly=res, nrows=11, ncols=13)
+    rng = np.random.default_rng([int(res * 10), len(snap), int(all_touched)])
+    polys = pd.DataFrame(
+        {"fid": [3, 5, 3, 9, 5, 4],
+         "rings": [_holed_polygon(rng, res, snap) for _ in range(6)]}
+    )
+    runs, _ = _polygon_runs(polys, grid, frac=frac, all_touched=all_touched, seed=7)
+    got = _expand_runs(runs[runs["_in"]], grid.cellx)
+    every = _expand_runs(runs, grid.cellx)  # sample_polygons: off-grid too
+
+    want, everyw, parts = [], [], {}
+    for fid, rs in zip(polys["fid"], polys["rings"]):
+        ri, start = parts.get(fid, (0, 0))
+        cx, cy = polygon_sample_centers(rs, res, res, all_touched)
+        if frac < 1.0:
+            draw = np.random.default_rng(7 + fid + 7919 * ri)
+            idx = np.sort(draw.choice(cx.shape[0], int(cx.shape[0] * frac), replace=False))
+            cx, cy = cx[idx], cy[idx]
+        parts[fid] = (ri + 1, start + cx.shape[0])
+        everyw.append((np.full(cx.shape[0], fid), np.arange(start, start + cx.shape[0]), cx, cy))
+        ok = in_bounds_mask(cx, cy, grid)
+        row, col = coords_to_rowcol(grid, cx[ok], cy[ok], clamp=True)
+        point = np.arange(start, start + cx.shape[0])[ok]
+        want.append((np.full(row.shape[0], fid), point, row, col, cx[ok], cy[ok]))
+    want = [np.concatenate(a) for a in zip(*want)]
+    assert want[0].shape[0] > 0
+    order_g = np.lexsort((got[1], got[0]))
+    order_w = np.lexsort((want[1], want[0]))
+    for g, w in zip(got, want):
+        assert np.array_equal(g[order_g], w[order_w])
+    everyw = [np.concatenate(a) for a in zip(*everyw)]
+    assert everyw[0].shape[0] > want[0].shape[0]  # the polygons overhang
+    for g, w in zip(every[:2] + every[4:], everyw):  # in sample_polygons' order
+        assert np.array_equal(g, w)
+
+
+def test_paint_runs_later_feature_wins():
+    """The run painter equals expanding every feature's cells and keeping
+    the last feature per cell (``drop_duplicates(keep='last')``)."""
+    import pandas as pd
+
+    from geowombat_spark.grid import paint_runs, polygon_cover_runs, runs_to_cells
+
+    rng = np.random.default_rng(11)
+    for _ in range(30):
+        runs = [
+            polygon_cover_runs(_holed_polygon(rng, 1.0, "free"), 1.0, 1.0,
+                               bool(rng.integers(2)), (-7.0, 5.0))[2]
+            for _ in range(int(rng.integers(1, 6)))
+        ]
+        painted = paint_runs(runs)
+        row, col = runs_to_cells(painted[:, :3])
+        got = pd.DataFrame(
+            {"row": row, "col": col,
+             "f": np.repeat(painted[:, 3], painted[:, 2] - painted[:, 1])}
+        )
+        cells = [runs_to_cells(r) for r in runs]
+        want = pd.DataFrame(
+            {"row": np.concatenate([r for r, _ in cells]),
+             "col": np.concatenate([c for _, c in cells]),
+             "f": np.repeat(np.arange(len(runs)), [r.shape[0] for r, _ in cells])}
+        ).drop_duplicates(["row", "col"], keep="last")
+        key = ["row", "col"]
+        assert got.duplicated(key).sum() == 0
+        pd.testing.assert_frame_equal(
+            got.sort_values(key).reset_index(drop=True),
+            want.sort_values(key).reset_index(drop=True),
+        )
+
+
+def test_polygon_grid_runs_stay_runs_for_a_large_square():
+    """A 4000×4000-cell square crosses to the executors as 4,000 runs,
+    not 16M cells."""
+    import pandas as pd
+
+    from geowombat_spark.operators.extract import _polygon_runs
+
+    grid = GridSpec(left=0.0, top=20000.0, cellx=1.0, celly=1.0, nrows=20000, ncols=20000)
+    sq = [np.array([1000.0, 15000.0, 5000.0, 15000.0, 5000.0, 19000.0,
+                    1000.0, 19000.0, 1000.0, 15000.0])]
+    runs, _ = _polygon_runs(pd.DataFrame({"fid": [1], "rings": [sq]}), grid)
+    assert len(runs) == 4000 and runs["_in"].all()
+    assert int((runs["_run_c1"] - runs["_run_c0"]).sum()) == 4000 * 4000
 
 
 # ---------------------------------------------------------------------------

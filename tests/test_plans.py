@@ -153,7 +153,7 @@ PYTHON_NODES = (
 UNBOUNDED_JOINS = ("SortMergeJoin", "BroadcastNestedLoopJoin", "CartesianProduct")
 POLYGON_OPERATORS = [
     "clip_mask_data", "mask", "mask_all_touched", "recode",
-    "extract_polygons", "polygon_to_array",
+    "extract_polygons", "polygon_to_array", "sample_polygons",
 ]
 
 
@@ -163,11 +163,12 @@ def test_polygon_operators_broadcast_runs_without_python(spark, docs, op):
     the polygon operators' plans hold no Python-worker node, and the
     runs/samples side reaches the corpus as a broadcast hash join (the
     range condition rides on the row equi-key) — never a sort-merge or a
-    nested-loop join over the corpus."""
+    nested-loop join over the corpus. Building a plan starts no Spark
+    job: the run table is a local relation, not a collected result."""
     import pandas as pd
 
     from geowombat_spark.fixtures import AOI_POLYGONS
-    from geowombat_spark.operators.extract import extract_polygons
+    from geowombat_spark.operators.extract import extract_polygons, sample_polygons
     from geowombat_spark.operators.rasterize import polygon_to_array
 
     water = AOI_POLYGONS[0]
@@ -180,11 +181,23 @@ def test_polygon_operators_broadcast_runs_without_python(spark, docs, op):
         "recode": lambda: sops.recode(docs, polys, L8_GRID, {7994.0: 1.0}),
         "extract_polygons": lambda: extract_polygons(spark, docs, polys, L8_GRID),
         "polygon_to_array": lambda: polygon_to_array(spark, polys, L8_GRID),
+        "sample_polygons": lambda: sample_polygons(spark, polys, L8_GRID),
     }
-    plan = _plan(build[op]())
+    sc = spark.sparkContext
+    group = f"test-polygon-build-{op}"
+    sc.setJobGroup(group, f"build {op}")
+    try:
+        df = build[op]()
+        jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == set(), f"{op}: building started jobs {sorted(jobs)}"
+    plan = _plan(df)
     for node in PYTHON_NODES + UNBOUNDED_JOINS:
         assert node not in plan, f"{op}: {node} in plan"
-    assert "BroadcastHashJoin" in plan, op
+    if op != "sample_polygons":  # points only: no corpus side to join
+        assert "BroadcastHashJoin" in plan, op
 
 
 def test_entry_builds_without_running_a_job(spark):
