@@ -156,10 +156,10 @@ def mask_s2(
       (``mask.py:278-290``) with cloud taking precedence, exactly the
       reference's nested ``xr.where`` order.
 
-    Plan shape: two halo-exchange shuffles (the two focal kernels — the
-    same single-exchange kernel every ``gw.moving`` stat uses) + the
+    Plan shape: two focal aggregates (the same one-exchange JVM
+    neighbour-offset aggregate every ``gw.moving`` stat uses) + the
     shadow stage's tiny scalar agg + broadcast join. ``keep`` columns
-    ride through the kernels so no corpus-wide re-join is needed.
+    ride through the aggregates so no corpus-wide re-join is needed.
     """
     d = docs.withColumn("_p", prob if not isinstance(prob, str) else F.col(prob))
     ride = tuple(
@@ -186,8 +186,8 @@ def mask_s2(
     )
     # estimate_shadows consumes this frame THREE ways — the eager
     # scalar-shift aggregate, the cloud-cells broadcast build side, and
-    # the main output — and each would re-execute the two halo-exchange
-    # kernels above. One bounded persist caps the chain at a single
+    # the main output — and each would re-execute the two focal
+    # aggregates above. One bounded persist caps the chain at a single
     # materialization (same fix class as the LSH signature frames).
     from ..cache import bounded_persist
 

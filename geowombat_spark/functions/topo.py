@@ -11,12 +11,11 @@ Spark shape:
 
 - **slope/aspect** is a 3×3 stencil over the elevation raster → one halo
   duplication (``operators.focal.halo_assignments``) + one
-  tile-keyed ``applyInPandas`` — the same single-exchange pattern as
-  ``focal.moving``. Derivatives use Zevenbergen–Thorne central
-  differences with *replicate* semantics at missing neighbors (the
-  analogue of GDAL ``computeEdges=True``): a NaN neighbor falls back to
-  the center cell, so image borders and ragged extents need no global
-  extent metadata.
+  tile-keyed ``applyInPandas`` — one exchange, keyed by tile.
+  Derivatives use Zevenbergen–Thorne central differences with
+  *replicate* semantics at missing neighbors (the analogue of GDAL
+  ``computeEdges=True``): a NaN neighbor falls back to the center cell,
+  so image borders and ragged extents need no global extent metadata.
 - **illumination + adjustment** is pure Column trigonometry
   (whole-stage codegen).
 - The per-band regression of the ``'c'`` and ``'empirical-rotation'``

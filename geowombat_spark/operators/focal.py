@@ -1,4 +1,4 @@
-"""Focal (moving-window) statistics with distributed halo exchange.
+"""Focal (moving-window) statistics as one neighbour-offset aggregate.
 
 Reference: ``gw.moving`` (``/root/reference/src/geowombat/core/util.py:376-469``)
 runs a w×w nodata-skipping kernel via ``dask.map_overlap(depth=w//2,
@@ -6,22 +6,26 @@ boundary='reflect')``; the Cython kernel dispatch lives in
 ``moving/_moving.pyx:342-567``. The chunk-border correctness contract is
 pinned by ``tests/test_moving.py:48-56``.
 
-Spark shape — the ``map_overlap`` analogue with no Catalyst primitive:
+Spark shape — a w×w window over the affine grid is integer arithmetic on
+``(row, col)``, so the whole kernel is one JVM hash aggregate:
 
-1. **Halo duplication**: every cell row is assigned to its home tile and
-   duplicated into each neighboring tile whose interior lies within
-   ``w//2`` of it. Built as an array of when-expressions + ``explode`` —
-   pure Column code, one narrow stage, output ≤ 9× border rows (≈ +2% for
-   512-cell tiles at w=3).
-2. **groupBy(assigned_tile).applyInPandas(kernel)**: each group holds one
-   tile plus its halo; the kernel scatters rows into a dense local array and
-   runs one vectorized numpy sliding-window reduction, emitting interior
-   cells only. One shuffle, keyed by tile — the same key the storage layout
-   is partitioned on, so at scale AQE sees an already-clustered exchange.
+1. **Fan-out**: each cell sends its value to the w² cells whose window
+   contains it — one ``explode`` over a literal array of key offsets (the
+   weight rides in the same struct). The target key is one long,
+   ``(row+hw)·(ncols+2hw) + (col+hw) + offset``.
+2. **groupBy(target)**: the stat is a Spark aggregate (``avg``, ``min``,
+   ``var_pop``, exact ``percentile``, …) over the valid values; the home
+   cell's ``cell_id`` and ``keep`` columns come from its own offset-0 row.
+   Targets without a home row (off-grid, or absent cells) are dropped.
+   One exchange, keyed by the target cell, with a map-side partial
+   aggregate; no Python worker.
 
 Window borders at the *image* edge use clipped windows (only in-image
-cells); nodata is skipped inside the window (NaN-reductions), matching the
-reference kernel's nodata skip.
+cells); nodata and NaN are skipped inside the window, matching the
+reference kernel's nodata skip. The input holds one row per cell.
+
+``halo_assignments`` and ``scatter_tile`` are the tile-halo stencil
+prologue that ``functions.topo.slope_aspect`` still runs in pandas.
 """
 
 from __future__ import annotations
@@ -32,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..grid import GridSpec
+from .sops import sql_double
 
 _STATS = ("mean", "min", "max", "var", "std", "perc", "sum", "expand")
 
@@ -129,80 +134,6 @@ def window_weights(w: int) -> np.ndarray:
     return 1.0 - dist / np.sqrt(2.0 * hw * hw)
 
 
-def _weighted_stat(stat: str, w: int):
-    """Weighted kernels, bit-matching the reference math
-    (``_moving.pyx:183-228`` mean, ``:51-112`` var/std):
-    mean = Σwv/Σw; var = Σ(wv - mean)²/Σw over valid cells."""
-    wflat = window_weights(w).ravel()
-
-    def kernel(win: np.ndarray) -> np.ndarray:
-        flat = win.reshape(win.shape[0], win.shape[1], -1)
-        valid = ~np.isnan(flat)
-        wv = np.where(valid, flat * wflat, 0.0)
-        wsum = (valid * wflat).sum(axis=2)
-        with np.errstate(invalid="ignore", divide="ignore"):
-            mean = wv.sum(axis=2) / wsum
-            if stat == "mean":
-                return mean
-            var = (
-                np.where(valid, (flat * wflat - mean[..., None]) ** 2, 0.0).sum(
-                    axis=2
-                )
-                / wsum
-            )
-            if stat == "var":
-                return var
-            return np.sqrt(var)
-
-    return kernel
-
-
-def _window_stat(stat: str, perc: int | None):
-    def kernel(win: np.ndarray) -> np.ndarray:
-        # win shape (H, W, w, w) — NaN-padded sliding view
-        flat = win.reshape(win.shape[0], win.shape[1], -1)
-        with np.errstate(invalid="ignore"):
-            if stat == "mean":
-                return np.nanmean(flat, axis=2)
-            if stat == "sum":
-                # np.nansum returns 0.0 (not NaN) for an all-NaN window,
-                # which would dodge the all-nodata refill every other
-                # stat honors — force NaN so the refill contract holds
-                return np.where(
-                    np.all(np.isnan(flat), axis=2),
-                    np.nan,
-                    np.nansum(flat, axis=2),
-                )
-            if stat == "min":
-                return np.nanmin(flat, axis=2)
-            if stat == "max":
-                return np.nanmax(flat, axis=2)
-            if stat == "var":
-                return np.nanvar(flat, axis=2)
-            if stat == "std":
-                return np.nanstd(flat, axis=2)
-            if stat == "perc":
-                return np.nanpercentile(flat, perc, axis=2)
-            if stat == "expand":
-                # morphological expand of the target class 1 into 0 cells
-                # (``_moving.pyx:230-257`` ``_get_expand``): a center of
-                # exactly 0 flips to 1.0 if ANY window cell with weight > 0
-                # equals exactly 1. In the reference's only reachable
-                # configuration the weight matrix is all-ones
-                # (``_moving.pyx:366`` — ``weights=True`` never combines
-                # with expand, and this port rejects it), so the support is
-                # the FULL w×w window including the diagonal corners, not
-                # the plus-shaped IDW support. Every other center (1,
-                # nodata, any other class) passes through unchanged. NaN
-                # (absent/clipped-edge) cells never count as hits.
-                center = flat[..., flat.shape[-1] // 2]
-                hit = (flat == 1.0).any(axis=2)
-                return np.where((center == 0.0) & hit, 1.0, center)
-        raise ValueError(stat)
-
-    return kernel
-
-
 def moving(
     docs: DataFrame,
     grid: GridSpec,
@@ -217,10 +148,11 @@ def moving(
 ) -> DataFrame:
     """w×w focal statistic (``util.py:376-469``; w odd).
 
-    Returns the stat frame keyed by (row, col, cell_id) — exactly one
-    exchange (the tile shuffle). Payload columns a caller needs alongside
-    the stat go in ``keep``: they ride through the kernel, avoiding a
-    second corpus-wide join after the applyInPandas shuffle.
+    Returns the stat frame keyed by (row, col, cell_id), one row per input
+    cell — exactly one exchange (the target-cell aggregate). Payload
+    columns a caller needs alongside the stat go in ``keep``: they ride
+    through the aggregate on the cell's own row, avoiding a second
+    corpus-wide join.
 
     ``weights=True`` applies the reference's inverse-distance window
     weighting (``util.py:384,405``; kernel math ``_moving.pyx:374-383``) —
@@ -248,56 +180,113 @@ def moving(
         )
     hw = w // 2
     if hw > min(grid.tile_rows, grid.tile_cols):
-        # halo duplication reaches ADJACENT tiles only: a half-width
-        # beyond one tile would silently compute border stats over gaps
+        # every cell is copied w² times before the map-side combine: a
+        # window wider than a tile is a coarser-resolution job
         raise ValueError(
             f"window half-width {hw} exceeds the tile size "
-            f"({grid.tile_rows}x{grid.tile_cols}); the halo exchange "
-            "covers one neighbor ring — use a coarser window or larger "
-            "tiles"
+            f"({grid.tile_rows}x{grid.tile_cols}); use a coarser window "
+            "or larger tiles"
         )
     out = out or f"{band}_{stat}"
-    kern = _weighted_stat(stat, w) if weights else _window_stat(stat, perc)
-    g = grid.as_dict()
-
-    keep = tuple(k for k in keep if k not in ("row", "col", "cell_id"))
-    keep_schema = "".join(
-        f", {k} {docs.schema[k].dataType.simpleString()}" for k in keep
-    )
-    src = docs.select("row", "col", "cell_id", *keep, F.col(band).alias("_v"))
-    refill = None
     if stat == "expand":
         # the reference's _get_expand ignores nodata entirely — 0 is the
         # expandable background class, so nulling a nodata of 0 (the
         # default) would disable the kernel; values pass through raw.
         nodata = None
+    elif nodata is not None and np.isnan(nodata):
+        nodata = None  # NaN is skipped anyway; a NaN refill is NULL
+    keep = tuple(k for k in keep if k not in ("row", "col", "cell_id"))
+
+    # _fv: the band, NULL where absent, NaN or nodata — the values the
+    # reference's NaN-skipping reductions see
+    v = f"CAST(`{band}` AS DOUBLE)"
+    skip = f"isnan({v})"
     if nodata is not None:
-        src = src.withColumn("_v", F.nullif(F.col("_v"), F.lit(float(nodata))))
-        refill = float(nodata)
-    src = halo_assignments(src, grid, hw)
+        skip += f" OR {v} = {sql_double(nodata)}"
+    # a source at window position (dr, dc) of target t sits at t + (dr, dc):
+    # it reaches t's key at offset -(dr·span + dc), carrying t's weight there
+    span = grid.ncols + 2 * hw
+    wts = window_weights(w)
+    offsets = [
+        (-(dr * span + dc), wts[dr + hw, dc + hw])
+        for dr in range(-hw, hw + 1)
+        for dc in range(-hw, hw + 1)
+    ]
+    if weights:
+        pairs = (
+            f"named_struct('_fo', {o}L, '_fw', {sql_double(x)})" for o, x in offsets
+        )
+        fan = f"inline(array({', '.join(pairs)}))"
+    else:
+        fan = f"explode(array({', '.join(f'{o}L' for o, _ in offsets)})) AS _fo"
+    quoted = [f"`{k}`" for k in ("cell_id", *keep)]
+    src = docs.selectExpr(
+        *quoted,
+        f"IF({skip}, NULL, {v}) AS _fv",
+        f"(CAST(row AS BIGINT) + {hw}) * {span} + col + {hw} AS _fk",
+        fan,
+    )
 
-    schema = f"row bigint, col bigint, cell_id bigint{keep_schema}, {out} double"
+    home = [f"any_value({q}) FILTER (WHERE _fo = 0) AS {q}" for q in quoted]
+    aggs = ["bool_or(_fo = 0) AS _fh"]
+    if weights:
+        # mean = Σwv/Σw and var = Σ(wv - mean)²/Σw over the valid cells
+        # (_moving.pyx:183-228, 51-112). With x = wv the variance is
+        # (n·var_pop(x) + n·(avg(x) - mean)²)/Σw: Spark's stable central
+        # moment plus the shift, no raw power sums. A zero Σw is NULL.
+        aggs += [
+            "sum(_fw * _fv) AS _fsx",
+            "sum(_fw) FILTER (WHERE _fv IS NOT NULL) AS _fsw",
+            "count(_fv) AS _fn",
+            "var_pop(_fw * _fv) AS _fvx",
+            "avg(_fw * _fv) AS _fax",
+        ]
+        mean = "try_divide(_fsx, _fsw)"
+        d = f"(_fax - {mean})"
+        var = f"try_divide(_fn * _fvx + _fn * {d} * {d}, _fsw)"
+        res = {"mean": mean, "var": var, "std": f"sqrt({var})"}[stat]
+    elif stat == "expand":
+        # morphological expand of the target class 1 into 0 cells
+        # (``_moving.pyx:230-257`` ``_get_expand``): a center of exactly 0
+        # flips to 1.0 if ANY window cell equals exactly 1. In the
+        # reference's only reachable configuration the weight matrix is
+        # all-ones (``_moving.pyx:366`` — ``weights=True`` never combines
+        # with expand, and this port rejects it), so the support is the
+        # FULL w×w window including the diagonal corners, not the
+        # plus-shaped IDW support. Every other center (1, NULL, any other
+        # class) passes through unchanged.
+        aggs += [
+            "any_value(_fv) FILTER (WHERE _fo = 0) AS _fc",
+            "bool_or(_fv = 1) AS _fx",
+        ]
+        res = "CASE WHEN _fc = 0 AND _fx THEN 1D ELSE _fc END"
+    else:
+        fn = {
+            "mean": "avg(_fv)",
+            "sum": "sum(_fv)",
+            "min": "min(_fv)",
+            "max": "max(_fv)",
+            "var": "var_pop(_fv)",
+            "std": "stddev_pop(_fv)",
+            # exact, with np.nanpercentile's linear interpolation
+            "perc": f"percentile(_fv, {sql_double(perc / 100)})",
+        }[stat]
+        aggs.append(f"{fn} AS _fs")
+        res = "_fs"
+    if nodata is not None:
+        # reference parity (_moving.pyx: 'if npy_isnan(res): return
+        # nodata'): an all-nodata window refills with the nodata value
+        # instead of emitting NULL
+        res = f"coalesce({res}, {sql_double(nodata)})"
 
-    def compute(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        gs = GridSpec(**g)
-        arr, home, r0, c0, r1, c1 = scatter_tile(key, pdf, gs, hw, "_v")
-        win = np.lib.stride_tricks.sliding_window_view(arr, (w, w))
-        stat_arr = kern(win)  # shape (r1-r0, c1-c0): interior cells only
-        # emit only cells that exist in the home tile of this group
-        vals = stat_arr[home["row"].values - r0, home["col"].values - c0]
-        if refill is not None:
-            # reference parity (_moving.pyx: 'if npy_isnan(res): return
-            # nodata'): an all-nodata window refills with the nodata
-            # value instead of emitting NaN/NULL
-            vals = np.where(np.isnan(vals), refill, vals)
-        cols = {
-            "row": home["row"].values,
-            "col": home["col"].values,
-            "cell_id": home["cell_id"].values,
-        }
-        for k in keep:
-            cols[k] = home[k].values
-        cols[out] = vals
-        return pd.DataFrame(cols)
-
-    return src.groupBy("atile").applyInPandas(compute, schema)
+    return (
+        src.groupBy(F.expr("_fk + _fo AS _ft"))
+        .agg(*[F.expr(a) for a in home + aggs])
+        .where("_fh")
+        .selectExpr(
+            f"_ft div {span} - {hw} AS row",
+            f"_ft % {span} - {hw} AS col",
+            *quoted,
+            f"{res} AS `{out}`",
+        )
+    )

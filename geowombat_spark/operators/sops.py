@@ -75,11 +75,18 @@ def _feature_runs(
     ]
 
 
+def sql_double(x: float) -> str:
+    """``x`` as an exact Spark SQL double literal."""
+    x = float(x)
+    return f"{x!r}D" if np.isfinite(x) else f"CAST('{x!r}' AS DOUBLE)"
+
+
 def _with_cover_flag(
     docs: DataFrame, polygons: pd.DataFrame, grid: GridSpec, all_touched: bool = False
 ) -> DataFrame:
-    """``docs`` plus a boolean ``_pip``: the document's grid cell is covered
-    by any polygon (GDAL rasterize membership, ``conversion.py:570-833``).
+    """``docs`` run-joined to the polygons' cover: ``_pip`` is ``true``
+    where the document's grid cell is covered by any polygon (GDAL
+    rasterize membership, ``conversion.py:570-833``) and NULL elsewhere.
 
     The features' grid-anchored runs are merged per row, so no document
     matches two runs. Decisions equal ``point_in_rings`` (and
@@ -88,8 +95,17 @@ def _with_cover_flag(
     """
     runs = [np.empty((0, 3), dtype=np.int64), *_feature_runs(polygons, grid, all_touched)]
     cover = pd.DataFrame(merge_runs(np.concatenate(runs)), columns=RUN_COLS)
-    return join_runs(docs, cover.assign(_pip=True), "_pip boolean").withColumn(
-        "_pip", F.col("_pip").isNotNull()
+    return join_runs(docs, cover.assign(_pip=True), "_pip boolean")
+
+
+def _rewrite(
+    flagged: DataFrame, columns: list[str], rewrite: dict[str, str]
+) -> DataFrame:
+    """``columns`` of ``flagged``, those in ``rewrite`` replaced in place by
+    their SQL expression (which may read ``_pip``): the flag and the band
+    rewrites are one projection over the run join."""
+    return flagged.selectExpr(
+        *(f"{rewrite[c]} AS `{c}`" if c in rewrite else f"`{c}`" for c in columns)
     )
 
 
@@ -116,19 +132,19 @@ def clip_by_polygon(
         grid.left + col1 * grid.cellx,
         grid.top - row0 * grid.celly,
     )
-    out = docs.filter(F.col("tile_id").isin(tiles)).filter(
-        (F.col("row") >= row0)
-        & (F.col("row") < row1)
-        & (F.col("col") >= col0)
-        & (F.col("col") < col1)
+    # one SQL predicate, not a Column tree: the plan is built per request
+    in_tiles = f"tile_id IN ({', '.join(map(str, tiles))})" if tiles else "false"
+    out = docs.where(
+        f"{in_tiles} AND row >= {row0} AND row < {row1} "
+        f"AND col >= {col0} AND col < {col1}"
     )
     if mask_data:
-        out = _with_cover_flag(out, polygons, grid)
-        for b in bands:
-            out = out.withColumn(
-                b, F.when(F.col("_pip"), F.col(b)).otherwise(F.lit(grid.nodata))
-            )
-        out = out.drop("_pip")
+        fill = sql_double(grid.nodata)
+        out = _rewrite(
+            _with_cover_flag(out, polygons, grid),
+            out.columns,
+            {b: f"IF(_pip IS NULL, {fill}, `{b}`)" for b in bands},
+        )
     return out
 
 
@@ -143,14 +159,12 @@ def mask(
     """Keep values inside ('in') or outside ('out') the geometry, others →
     NULL (the NaN of the reference, ``sops.py:1099-1160``; reference
     rasterizes with all_touched=True, hence the default here)."""
-    out = _with_cover_flag(docs, polygons, grid, all_touched=all_touched)
-    keep_in = keep == "in"
-    for b in bands:
-        out = out.withColumn(
-            b,
-            F.when(F.col("_pip") == F.lit(keep_in), F.col(b)).otherwise(F.lit(None)),
-        )
-    return out.drop("_pip")
+    kept = "_pip IS NOT NULL" if keep == "in" else "_pip IS NULL"
+    return _rewrite(
+        _with_cover_flag(docs, polygons, grid, all_touched),
+        docs.columns,
+        {b: f"IF({kept}, `{b}`, NULL)" for b in bands},
+    )
 
 
 def subset(
@@ -206,13 +220,13 @@ def recode(
     """Replace values **within polygons** (``sops.py:1208-1269``), including
     ``{k: 'mode'}`` → the modal value of the band inside the region (computed
     distributed via ``F.mode``, then folded back as a literal)."""
-    out = _with_cover_flag(docs, polygons, grid)
+    flag = _with_cover_flag(docs, polygons, grid)
     # every 'mode' entry resolves to the same polygon-modal band value, so
     # one distributed agg + one collect serves them all (k 'mode' entries
     # used to serialize into k driver actions over the same plan)
     modal = None
     if any(v == "mode" for v in mapping.values()):
-        modal = out.filter(F.col("_pip")).agg(F.mode(band)).collect()[0][0]
+        modal = flag.where("_pip").agg(F.mode(band)).collect()[0][0]
         if modal is None:
             raise ValueError(
                 "recode 'mode': the polygon selects no pixels, so the "
@@ -222,13 +236,17 @@ def recode(
         float(k): float(modal if v == "mode" else v)
         for k, v in mapping.items()
     }
-    chain = None
-    for k, v in resolved.items():
-        cond = F.col("_pip") & (F.col(band) == F.lit(k))
-        chain = F.when(cond, F.lit(v)) if chain is None else chain.when(cond, F.lit(v))
-    if chain is not None:
-        out = out.withColumn(band, chain.otherwise(F.col(band)))
-    return out.drop("_pip")
+    if not resolved:
+        return docs
+    whens = " ".join(
+        f"WHEN `{band}` = {sql_double(k)} THEN {sql_double(v)}"
+        for k, v in resolved.items()
+    )
+    return _rewrite(
+        flag,
+        docs.columns,
+        {band: f"IF(_pip IS NULL, `{band}`, CASE {whens} ELSE `{band}` END)"},
+    )
 
 
 _AREA_CONV = {"km2": 1e-6, "ha": 1e-4, "m2": 1.0}

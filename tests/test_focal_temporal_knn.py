@@ -60,6 +60,16 @@ def _numpy_focal(stat, w):
             res = np.nanmax(win, axis=2)
         elif stat == "std":
             res = np.nanstd(win, axis=2)
+        elif stat == "min":
+            res = np.nanmin(win, axis=2)
+        elif stat == "var":
+            res = np.nanvar(win, axis=2)
+        elif stat == "perc":
+            res = np.nanpercentile(win, 50, axis=2)  # moving's default perc
+        elif stat == "sum":
+            res = np.where(
+                np.isnan(win).all(axis=2), np.nan, np.nansum(win, axis=2)
+            )
         else:
             raise ValueError(stat)
     # reference parity (_moving.pyx): an all-nodata window refills with
@@ -67,7 +77,11 @@ def _numpy_focal(stat, w):
     return np.where(np.isnan(res), 0.0, res)
 
 
-@pytest.mark.parametrize("stat,w", [("mean", 3), ("max", 5), ("std", 3)])
+@pytest.mark.parametrize(
+    "stat,w",
+    [("mean", 3), ("max", 5), ("std", 3),
+     ("min", 3), ("sum", 5), ("var", 3), ("perc", 3)],
+)
 def test_moving_matches_global(spark, small_docs, stat, w):
     out = moving(small_docs, SMALL, stat=stat, w=w, nodata=0.0).toPandas()
     expected = _numpy_focal(stat, w)
@@ -235,6 +249,83 @@ def test_moving_weighted_matches_numpy(spark, small_docs):
     got = np.full((256, 256), np.nan)
     got[out["row"], out["col"]] = out["band_blue_mean"].values
     np.testing.assert_allclose(got, expected, rtol=1e-12, equal_nan=True)
+
+
+@pytest.mark.parametrize("stat", ["var", "std"])
+def test_moving_weighted_var_std_matches_numpy(spark, small_docs, stat):
+    """weights=True var/std equal the reference's weighted kernel math
+    (_moving.pyx:51-112): mean = sum(w*v)/sum(w), var = sum((w*v -
+    mean)^2)/sum(w) over the valid cells, std = sqrt(var)."""
+    from geowombat_spark.operators.focal import window_weights
+
+    w = 5
+    out = moving(
+        small_docs, SMALL, stat=stat, w=w, nodata=0.0, weights=True
+    ).toPandas()
+    pdf = _small_pdf()
+    arr = np.full((256, 256), np.nan)
+    arr[pdf["row"], pdf["col"]] = pdf["band_blue"].values
+    arr[arr == 0.0] = np.nan
+    hw = w // 2
+    pad = np.full((256 + 2 * hw, 256 + 2 * hw), np.nan)
+    pad[hw:-hw, hw:-hw] = arr
+    flat = np.lib.stride_tricks.sliding_window_view(pad, (w, w)).reshape(
+        256, 256, -1
+    )
+    wflat = window_weights(w).ravel()
+    valid = ~np.isnan(flat)
+    wv = np.where(valid, flat * wflat, 0.0)
+    wsum = (valid * wflat).sum(axis=2)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        mean = wv.sum(axis=2) / wsum
+        var = (
+            np.where(valid, (flat * wflat - mean[..., None]) ** 2, 0.0).sum(axis=2)
+            / wsum
+        )
+    expected = var if stat == "var" else np.sqrt(var)
+    expected = np.where(np.isnan(expected), 0.0, expected)
+    got = np.full((256, 256), np.nan)
+    got[out["row"], out["col"]] = out[f"band_blue_{stat}"].values
+    np.testing.assert_allclose(got, expected, rtol=1e-12, equal_nan=True)
+
+
+def test_moving_skips_nan_and_carries_array_keep(spark):
+    """NaN band values are skipped like nodata; with nodata=None an
+    all-NaN window is NULL (no refill). An array-typed keep column rides
+    through on each cell's own row."""
+    g = GridSpec(left=0.0, top=80.0, cellx=10.0, celly=10.0,
+                 nrows=8, ncols=8, tile_rows=4, tile_cols=4)
+    rr, cc = np.meshgrid(np.arange(8), np.arange(8), indexing="ij")
+    rr, cc = rr.ravel(), cc.ravel()
+    v = (rr * 8 + cc).astype(np.float64)
+    v[(rr <= 2) & (cc <= 2)] = np.nan  # (0,0)'s whole window is NaN
+    v[(rr == 5) & (cc == 6)] = np.nan
+    # built from rows, not pandas: Arrow would turn the NaNs into NULLs
+    df = spark.createDataFrame(
+        [
+            (int(r), int(c), int(z), float(x), [int(r), int(c)])
+            for r, c, z, x in zip(rr, cc, zorder_encode(rr, cc), v)
+        ],
+        "row long, col long, cell_id long, band_blue double, tags array<long>",
+    )
+    assert df.where(F.isnan("band_blue")).count() == 10
+    out = moving(
+        df, g, stat="mean", w=3, nodata=None, keep=("tags",)
+    ).toPandas()
+    assert len(out) == 64
+    assert [list(t) for t in out["tags"]] == [
+        [r, c] for r, c in zip(out["row"], out["col"])
+    ]
+    arr = v.reshape(8, 8)
+    pad = np.full((10, 10), np.nan)
+    pad[1:-1, 1:-1] = arr
+    win = np.lib.stride_tricks.sliding_window_view(pad, (3, 3)).reshape(8, 8, -1)
+    with np.errstate(invalid="ignore"):
+        want = np.nanmean(win, axis=2)
+    got = np.full((8, 8), np.inf)
+    got[out["row"], out["col"]] = out["band_blue_mean"].astype(float).values
+    assert np.isnan(got[0, 0])
+    np.testing.assert_allclose(got, want, rtol=1e-12, equal_nan=True)
 
 
 def test_moving_weighted_rejects_unweighted_stats(spark, small_docs):

@@ -200,6 +200,33 @@ def test_polygon_operators_broadcast_runs_without_python(spark, docs, op):
         assert "BroadcastHashJoin" in plan, op
 
 
+@pytest.mark.parametrize(
+    "stat,weights", [("mean", False), ("perc", False), ("std", True)]
+)
+def test_moving_is_one_jvm_aggregate(spark, docs, stat, weights):
+    """focal.moving is one neighbour-offset aggregate in the JVM: building
+    it starts no job, and its plan holds no Python-worker node and
+    exactly one exchange (the target-cell hash partitioning)."""
+    from geowombat_spark.operators.focal import moving
+
+    sc = spark.sparkContext
+    group = f"test-moving-build-{stat}-{weights}"
+    sc.setJobGroup(group, "build moving")
+    try:
+        df = moving(docs, L8_GRID, stat=stat, w=5, weights=weights,
+                    keep=("doc_id",))
+        jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == set(), f"building started jobs {sorted(jobs)}"
+    plan = _plan(df)
+    for node in PYTHON_NODES:
+        assert node not in plan, node
+    assert plan.count("Exchange ") == 1, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+
+
 def test_entry_builds_without_running_a_job(spark):
     """Building the flagship plan starts no Spark job: the clip row count
     is a broadcast one-row aggregate inside the returned plan, not an
