@@ -156,10 +156,16 @@ def mask_s2(
       (``mask.py:278-290``) with cloud taking precedence, exactly the
       reference's nested ``xr.where`` order.
 
-    Plan shape: two focal aggregates (the same one-exchange JVM
-    neighbour-offset aggregate every ``gw.moving`` stat uses) + the
-    shadow stage's tiny scalar agg + broadcast join. ``keep`` columns
-    ride through the aggregates so no corpus-wide re-join is needed.
+    Plan shape: two focal aggregates (the JVM neighbour-offset aggregate
+    every ``gw.moving`` stat uses) + the shadow stage's tiny scalar agg +
+    broadcast join. ``keep`` columns come back on each cell's own row:
+    through the aggregates while they are fixed-width, else (a string
+    ``doc_id``, say) by one join on the cell key per focal stage.
+
+    The input holds one row per (row, col), as ``moving`` requires. Several
+    rows in one cell all count in the focal windows, and the output has one
+    row for the cell (fixed-width ``keep``) or one per input row
+    (variable-width ``keep``).
     """
     d = docs.withColumn("_p", prob if not isinstance(prob, str) else F.col(prob))
     ride = tuple(

@@ -14,15 +14,24 @@ Spark shape — a w×w window over the affine grid is integer arithmetic on
    weight rides in the same struct). The target key is one long,
    ``(row+hw)·(ncols+2hw) + (col+hw) + offset``.
 2. **groupBy(target)**: the stat is a Spark aggregate (``avg``, ``min``,
-   ``var_pop``, exact ``percentile``, …) over the valid values; the home
-   cell's ``cell_id`` and ``keep`` columns come from its own offset-0 row.
-   Targets without a home row (off-grid, or absent cells) are dropped.
-   One exchange, keyed by the target cell, with a map-side partial
+   ``var_pop``, exact ``percentile``, …) over the valid values. Targets
+   without a home row (off-grid, or absent cells) are dropped. One
+   exchange, keyed by the target cell, with a map-side partial hash
    aggregate; no Python worker.
+3. **Home columns**: the cell's ``cell_id`` and ``keep`` columns come from
+   its own offset-0 row inside the aggregate while all are fixed-width. A
+   variable-width one (string, array) has no hash-aggregate buffer — Spark
+   would sort all w² copies — so then the home rows join back to the stats
+   on the cell key instead (a second exchange, or a broadcast when small).
 
 Window borders at the *image* edge use clipped windows (only in-image
 cells); nodata and NaN are skipped inside the window, matching the
-reference kernel's nodata skip. The input holds one row per cell.
+reference kernel's nodata skip.
+
+The input holds one row per cell. Several rows in one cell all count in
+every window that holds the cell; the output then has one row for the cell
+when the home columns ride the aggregate (their values from any one of its
+rows), and one row per input row when they join back.
 
 ``halo_assignments`` and ``scatter_tile`` are the tile-halo stencil
 prologue that ``functions.topo.slope_aspect`` still runs in pandas.
@@ -34,11 +43,18 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..grid import GridSpec
 from .sops import sql_double
 
 _STATS = ("mean", "min", "max", "var", "std", "perc", "sum", "expand")
+#: column types a hash aggregate can carry in its buffer
+_FIXED_WIDTH = (
+    T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+    T.FloatType, T.DoubleType, T.DateType, T.TimestampType,
+    T.TimestampNTZType, T.DecimalType,
+)
 
 
 def halo_assignments(df: DataFrame, grid: GridSpec, hw: int) -> DataFrame:
@@ -149,10 +165,16 @@ def moving(
     """w×w focal statistic (``util.py:376-469``; w odd).
 
     Returns the stat frame keyed by (row, col, cell_id), one row per input
-    cell — exactly one exchange (the target-cell aggregate). Payload
-    columns a caller needs alongside the stat go in ``keep``: they ride
-    through the aggregate on the cell's own row, avoiding a second
-    corpus-wide join.
+    cell. Payload columns a caller needs alongside the stat go in ``keep``.
+    While they and ``cell_id`` are fixed-width they ride through the
+    aggregate on the cell's own row, and the plan has one exchange (the
+    target-cell aggregate); a variable-width one (string, array) brings
+    every home column back by a join on the cell key instead.
+
+    The input holds one row per (row, col). A cell with several rows counts
+    each row's value in the windows that hold it, and yields one output row
+    (fixed-width home columns, taken from any one of its rows) or one per
+    input row (joined back).
 
     ``weights=True`` applies the reference's inverse-distance window
     weighting (``util.py:384,405``; kernel math ``_moving.pyx:374-383``) —
@@ -219,16 +241,25 @@ def moving(
         fan = f"inline(array({', '.join(pairs)}))"
     else:
         fan = f"explode(array({', '.join(f'{o}L' for o, _ in offsets)})) AS _fo"
-    quoted = [f"`{k}`" for k in ("cell_id", *keep)]
+    home = ("cell_id", *keep)
+    quoted = [f"`{k}`" for k in home]
+    # the home columns ride the aggregate only while all are fixed-width:
+    # a string or array has no hash-aggregate buffer, and Spark would sort
+    # all w² copies instead; such home rows join back on their cell key
+    schema = docs.schema
+    ride = all(isinstance(schema[k].dataType, _FIXED_WIDTH) for k in home)
+    key = f"(CAST(row AS BIGINT) + {hw}) * {span} + col + {hw}"
     src = docs.selectExpr(
-        *quoted,
+        *(quoted if ride else ()),
         f"IF({skip}, NULL, {v}) AS _fv",
-        f"(CAST(row AS BIGINT) + {hw}) * {span} + col + {hw} AS _fk",
+        f"{key} AS _fk",
         fan,
     )
 
-    home = [f"any_value({q}) FILTER (WHERE _fo = 0) AS {q}" for q in quoted]
-    aggs = ["bool_or(_fo = 0) AS _fh"]
+    aggs = []
+    if ride:
+        aggs = [f"any_value({q}) FILTER (WHERE _fo = 0) AS {q}" for q in quoted]
+        aggs.append("bool_or(_fo = 0) AS _fh")
     if weights:
         # mean = Σwv/Σw and var = Σ(wv - mean)²/Σw over the valid cells
         # (_moving.pyx:183-228, 51-112). With x = wv the variance is
@@ -279,14 +310,14 @@ def moving(
         # instead of emitting NULL
         res = f"coalesce({res}, {sql_double(nodata)})"
 
-    return (
-        src.groupBy(F.expr("_fk + _fo AS _ft"))
-        .agg(*[F.expr(a) for a in home + aggs])
-        .where("_fh")
-        .selectExpr(
-            f"_ft div {span} - {hw} AS row",
-            f"_ft % {span} - {hw} AS col",
-            *quoted,
-            f"{res} AS `{out}`",
-        )
+    stats = src.groupBy(F.expr("_fk + _fo AS _ft")).agg(*map(F.expr, aggs))
+    if ride:
+        stats = stats.where("_fh")
+    else:
+        stats = stats.join(docs.selectExpr(f"{key} AS _ft", *quoted), "_ft")
+    return stats.selectExpr(
+        f"_ft div {span} - {hw} AS row",
+        f"_ft % {span} - {hw} AS col",
+        *quoted,
+        f"{res} AS `{out}`",
     )

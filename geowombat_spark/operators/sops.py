@@ -98,6 +98,14 @@ def _with_cover_flag(
     return join_runs(docs, cover.assign(_pip=True), "_pip boolean")
 
 
+def _require_bands(docs: DataFrame, bands) -> None:
+    """Raise on a band name that is not a column of ``docs``: a rewrite of a
+    missing band would otherwise leave its values unmasked."""
+    missing = [b for b in bands if b not in docs.columns]
+    if missing:
+        raise ValueError(f"bands {missing} are not columns of the input")
+
+
 def _rewrite(
     flagged: DataFrame, columns: list[str], rewrite: dict[str, str]
 ) -> DataFrame:
@@ -139,6 +147,7 @@ def clip_by_polygon(
         f"AND col >= {col0} AND col < {col1}"
     )
     if mask_data:
+        _require_bands(docs, bands)
         fill = sql_double(grid.nodata)
         out = _rewrite(
             _with_cover_flag(out, polygons, grid),
@@ -159,6 +168,7 @@ def mask(
     """Keep values inside ('in') or outside ('out') the geometry, others →
     NULL (the NaN of the reference, ``sops.py:1099-1160``; reference
     rasterizes with all_touched=True, hence the default here)."""
+    _require_bands(docs, bands)
     kept = "_pip IS NOT NULL" if keep == "in" else "_pip IS NULL"
     return _rewrite(
         _with_cover_flag(docs, polygons, grid, all_touched),
@@ -220,6 +230,7 @@ def recode(
     """Replace values **within polygons** (``sops.py:1208-1269``), including
     ``{k: 'mode'}`` → the modal value of the band inside the region (computed
     distributed via ``F.mode``, then folded back as a literal)."""
+    _require_bands(docs, (band,))
     flag = _with_cover_flag(docs, polygons, grid)
     # every 'mode' entry resolves to the same polygon-modal band value, so
     # one distributed agg + one collect serves them all (k 'mode' entries

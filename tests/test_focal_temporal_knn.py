@@ -328,6 +328,39 @@ def test_moving_skips_nan_and_carries_array_keep(spark):
     np.testing.assert_allclose(got, want, rtol=1e-12, equal_nan=True)
 
 
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_moving_cell_with_two_rows(spark, id_type):
+    """The input holds one row per cell; two rows in one cell both count
+    in every window that holds the cell. With fixed-width home columns the
+    cell yields one output row; a string ``keep`` column joins the home
+    rows back, so each of the two rows gets its own output row."""
+    g = GridSpec(left=0.0, top=40.0, cellx=10.0, celly=10.0,
+                 nrows=4, ncols=4, tile_rows=2, tile_cols=2)
+    rows = [(r, c, 1.0) for r in range(4) for c in range(4) if (r, c) != (1, 1)]
+    rows += [(1, 1, 10.0), (1, 1, 30.0)]
+    cast = str if id_type == "string" else int
+    df = spark.createDataFrame(
+        [
+            (cast(i), r, c, int(zorder_encode(np.array([r]), np.array([c]))[0]), v)
+            for i, (r, c, v) in enumerate(rows)
+        ],
+        f"doc_id {id_type}, row long, col long, cell_id long, band_blue double",
+    )
+    out = moving(
+        df, g, stat="mean", w=3, nodata=None, keep=("doc_id",)
+    ).toPandas()
+    dup = out[(out["row"] == 1) & (out["col"] == 1)]
+    if id_type == "long":
+        assert len(out) == 16
+        assert len(dup) == 1 and dup["doc_id"].iloc[0] in (15, 16)
+    else:
+        assert len(out) == 17
+        assert sorted(dup["doc_id"]) == ["15", "16"]
+    np.testing.assert_allclose(dup["band_blue_mean"], 48.0 / 10.0, rtol=1e-12)
+    corner = out[(out["row"] == 0) & (out["col"] == 0)]["band_blue_mean"]
+    np.testing.assert_allclose(corner, 43.0 / 5.0, rtol=1e-12)
+
+
 def test_moving_weighted_rejects_unweighted_stats(spark, small_docs):
     from geowombat_spark.operators.focal import moving
 

@@ -14,6 +14,8 @@ windows/bands are read. Here the same promises are Catalyst's job, so the
 pins watch Catalyst output.
 """
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -200,31 +202,56 @@ def test_polygon_operators_broadcast_runs_without_python(spark, docs, op):
         assert "BroadcastHashJoin" in plan, op
 
 
-@pytest.mark.parametrize(
-    "stat,weights", [("mean", False), ("perc", False), ("std", True)]
-)
-def test_moving_is_one_jvm_aggregate(spark, docs, stat, weights):
-    """focal.moving is one neighbour-offset aggregate in the JVM: building
-    it starts no job, and its plan holds no Python-worker node and
-    exactly one exchange (the target-cell hash partitioning)."""
+def _build_moving(spark, docs, group, **kw):
+    """``moving(docs, **kw)`` and the ids of the jobs its build started."""
     from geowombat_spark.operators.focal import moving
 
     sc = spark.sparkContext
-    group = f"test-moving-build-{stat}-{weights}"
     sc.setJobGroup(group, "build moving")
     try:
-        df = moving(docs, L8_GRID, stat=stat, w=5, weights=weights,
-                    keep=("doc_id",))
+        df = moving(docs, L8_GRID, w=5, **kw)
         jobs = set(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+    return df, jobs
+
+
+@pytest.mark.parametrize(
+    "stat,weights", [("mean", False), ("perc", False), ("std", True)]
+)
+def test_moving_is_one_jvm_aggregate(spark, docs, stat, weights):
+    """focal.moving with fixed-width home columns is one neighbour-offset
+    hash aggregate in the JVM: building it starts no job, and its plan
+    holds no Python-worker node, no sort aggregate and exactly one
+    exchange (the target-cell hash partitioning)."""
+    df, jobs = _build_moving(
+        spark, docs, f"test-moving-build-{stat}-{weights}",
+        stat=stat, weights=weights, keep=("tile_id",),
+    )
     assert jobs == set(), f"building started jobs {sorted(jobs)}"
     plan = _plan(df)
-    for node in PYTHON_NODES:
+    for node in PYTHON_NODES + ("SortAggregate",):
         assert node not in plan, node
+    assert "HashAggregate" in plan, plan
     assert plan.count("Exchange ") == 1, plan
     assert plan.count("Exchange hashpartitioning") == 1, plan
+
+
+def test_moving_joins_variable_width_keep_back(spark, docs):
+    """A string ``keep`` column stays out of the aggregate: it has no
+    hash-aggregate buffer, so carrying it would plan a sort aggregate over
+    all w² fanned-out rows. The home rows join back on the cell key."""
+    df, jobs = _build_moving(
+        spark, docs, "test-moving-build-string-keep",
+        stat="mean", keep=("doc_id",),
+    )
+    assert jobs == set(), f"building started jobs {sorted(jobs)}"
+    plan = _plan(df)
+    for node in PYTHON_NODES + ("SortAggregate", "any_value"):
+        assert node not in plan, node
+    assert "HashAggregate" in plan, plan
+    assert re.search(r"Join \[_ft#\d+L\], \[_ft#\d+L\], Inner", plan), plan
 
 
 def test_entry_builds_without_running_a_job(spark):

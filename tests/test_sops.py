@@ -100,6 +100,22 @@ def test_recode_mode(spark, docs, water_pdf):
     )
 
 
+@pytest.mark.parametrize(
+    "op",
+    [
+        lambda d, p: clip_by_polygon(d, p, L8_GRID, mask_data=True, bands=("band_blue", "band_nir")),
+        lambda d, p: mask(d, p, L8_GRID, bands=("band_nir",)),
+        lambda d, p: recode(d, p, L8_GRID, {1.0: 2.0}, band="band_nir"),
+        lambda d, p: recode(d, p, L8_GRID, {1.0: "mode"}, band="band_nir"),
+    ],
+    ids=["clip-mask_data", "mask", "recode", "recode-mode"],
+)
+def test_polygon_rewrite_of_a_missing_band_raises(spark, docs, water_pdf, op):
+    """A band that is not a column is an error, not a band left unmasked."""
+    with pytest.raises(ValueError, match="band_nir"):
+        op(docs, water_pdf)
+
+
 def test_calc_area(spark, docs):
     dense = subset(docs, L8_GRID, 717585.0, -2776995.0, 256, 256)
     rr, cc = np.meshgrid(np.arange(256), np.arange(256), indexing="ij")
