@@ -1319,8 +1319,9 @@ def _elev_col():
 
 def q_slope_aspect(spark, sf_dir):
     """Zevenbergen–Thorne slope/aspect over the elevation surface
-    (radiometry/topo.py:44-153 via GDAL DEMProcessing): 3×3 halo stencil,
-    one tile-keyed exchange. Oracle = neighbor self-joins with
+    (radiometry/topo.py:44-153 via GDAL DEMProcessing): a five-tap
+    neighbour-offset aggregate in the JVM, plus a join back on the cell
+    key for the string ``doc_id``. Oracle = neighbor self-joins with
     edge-replicate COALESCE."""
     from geowombat_spark.functions import topo
 

@@ -9,13 +9,15 @@ Teillet et al. 1982), ``'c'`` (:271-340) and ``'empirical-rotation'``
 
 Spark shape:
 
-- **slope/aspect** is a 3×3 stencil over the elevation raster → one halo
-  duplication (``operators.focal.halo_assignments``) + one
-  tile-keyed ``applyInPandas`` — one exchange, keyed by tile.
-  Derivatives use Zevenbergen–Thorne central differences with
+- **slope/aspect** is a five-tap stencil (centre, N, S, W, E) over the
+  elevation raster → the JVM neighbour-offset aggregate that
+  ``operators.focal.moving`` runs (``focal.neighbour_aggregate``): one
+  exchange keyed by the target cell, no Python worker, and the
+  Zevenbergen–Thorne math as one SQL projection. Derivatives use
   *replicate* semantics at missing neighbors (the analogue of GDAL
-  ``computeEdges=True``): a NaN neighbor falls back to the center cell,
-  so image borders and ragged extents need no global extent metadata.
+  ``computeEdges=True``): an absent, NULL or NaN neighbor falls back to
+  the center cell, so image borders and ragged extents need no global
+  extent metadata.
 - **illumination + adjustment** is pure Column trigonometry
   (whole-stage codegen).
 - The per-band regression of the ``'c'`` and ``'empirical-rotation'``
@@ -31,13 +33,12 @@ Spark shape:
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..grid import GridSpec
-from ..operators.focal import halo_assignments, scatter_tile
+from ..operators.focal import neighbour_aggregate, tap_offset
+from ..operators.sops import sql_double
 
 _METHODS = ("cos", "c", "empirical-rotation")
 
@@ -59,58 +60,36 @@ def slope_aspect(
     ``dz/dy = (z_north - z_south) / (2·celly)`` (north = row-1);
     ``slope = atan(hypot(dz/dx, dz/dy))``;
     ``aspect = (degrees(atan2(-dz/dx, -dz/dy)) + 360) % 360`` — the
-    bearing of the downslope vector. Missing neighbors (image edge or
-    ragged extent) replicate the center value.
+    bearing of the downslope vector. Missing neighbors (image edge, ragged
+    extent, NULL or NaN elevation) replicate the center value.
 
-    Returns one row per input cell keyed (row, col, cell_id) with the two
-    outputs plus ``keep`` payload columns — exactly one exchange.
+    Returns the two outputs keyed by (row, col, cell_id) plus ``keep``
+    payload columns, one row per input cell, from one neighbour-offset
+    aggregate (``operators.focal.neighbour_aggregate``): one exchange
+    while ``cell_id`` and ``keep`` are fixed-width, a join back on the
+    cell key otherwise. The input holds one row per (row, col); a cell
+    with several rows yields one output row (fixed-width home columns,
+    from any one of its rows) or one per input row (joined back), and its
+    neighbours see the elevation of any one of its rows.
     """
-    g = grid.as_dict()
-    keep = tuple(k for k in keep if k not in ("row", "col", "cell_id"))
-    keep_schema = "".join(
-        f", {k} {docs.schema[k].dataType.simpleString()}" for k in keep
+    v = f"CAST(`{elev}` AS DOUBLE)"
+    taps = {"c": (0, 0), "n": (-1, 0), "s": (1, 0), "w": (0, -1), "e": (0, 1)}
+    aggs = [
+        f"any_value(_fv) FILTER (WHERE _fo = {tap_offset(grid, 1, dr, dc)}) AS _z{t}"
+        for t, (dr, dc) in taps.items()
+    ]
+    z = {t: f"coalesce(_z{t}, _zc)" for t in taps}
+    dx = f"(({z['e']} - {z['w']}) / {sql_double(2.0 * grid.cellx)})"
+    dy = f"(({z['n']} - {z['s']}) / {sql_double(2.0 * grid.celly)})"
+    slope = f"degrees(atan(hypot({dx}, {dy})))"
+    aspect = (
+        f"CASE WHEN {slope} = 0 THEN 0D "
+        f"ELSE (degrees(atan2(-{dx}, -{dy})) + 360D) % 360D END"
     )
-    src = docs.select("row", "col", "cell_id", *keep, F.col(elev).alias("_z"))
-    src = halo_assignments(src, grid, 1)
-    schema = (
-        f"row bigint, col bigint, cell_id bigint{keep_schema}, "
-        f"{slope_out} double, {aspect_out} double"
+    return neighbour_aggregate(
+        docs, grid, 1, f"IF(isnan({v}), NULL, {v})", list(taps.values()), aggs,
+        [f"{slope} AS `{slope_out}`", f"{aspect} AS `{aspect_out}`"], keep,
     )
-
-    def compute(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        gs = GridSpec(**g)
-        # shared stencil prologue (operators.focal.scatter_tile): one
-        # tile-geometry/dense-scatter/home-select implementation for both
-        # stencil operators
-        arr, home, r0, c0, r1, c1 = scatter_tile(key, pdf, gs, 1, "_z")
-        hr = home["row"].values - (r0 - 1)
-        hc = home["col"].values - (c0 - 1)
-        z = arr[hr, hc]
-
-        def nb(dr, dc):
-            v = arr[hr + dr, hc + dc]
-            return np.where(np.isnan(v), z, v)
-
-        dzdx = (nb(0, 1) - nb(0, -1)) / (2.0 * gs.cellx)
-        dzdy = (nb(-1, 0) - nb(1, 0)) / (2.0 * gs.celly)
-        slope = np.degrees(np.arctan(np.hypot(dzdx, dzdy)))
-        aspect = np.where(
-            slope == 0.0,
-            0.0,
-            np.mod(np.degrees(np.arctan2(-dzdx, -dzdy)) + 360.0, 360.0),
-        )
-        cols = {
-            "row": home["row"].values,
-            "col": home["col"].values,
-            "cell_id": home["cell_id"].values,
-        }
-        for k in keep:
-            cols[k] = home[k].values
-        cols[slope_out] = slope
-        cols[aspect_out] = aspect
-        return pd.DataFrame(cols)
-
-    return src.groupBy("atile").applyInPandas(compute, schema)
 
 
 def illumination(
@@ -264,8 +243,8 @@ def norm_topo(
         )
 
     # The pre-agg plan below re-executes for the final projection; when
-    # the terrain came from the internal slope_aspect (a halo shuffle +
-    # applyInPandas stencil), persist so the stencil runs ONCE, not once
+    # the terrain came from the internal slope_aspect (a neighbour-offset
+    # aggregate, one shuffle), persist so the stencil runs ONCE, not once
     # for the coefficient job and again for the main query.
     # bounded_persist (not a raw persist): caps live persists and evicts
     # the oldest, so a per-scene pipeline calling norm_topo many times

@@ -7,8 +7,9 @@ equals nodata, clip to the index's dynamic range, ``vi.py:71-155``).
 
 Here that scaffold is :func:`_finish`: inputs are scaled Columns, nodata →
 NULL, result clipped with least/greatest. Everything stays inside
-whole-stage codegen — zero Python on the hot path. Golden semantics ported
-from ``tests/test_vi.py:30-133``.
+whole-stage codegen — zero Python on the hot path. A zero denominator
+gives NULL (``try_divide``), not an ANSI ``DIVIDE_BY_ZERO``. Golden
+semantics ported from ``tests/test_vi.py:30-133``.
 """
 
 from __future__ import annotations
@@ -45,10 +46,11 @@ def norm_diff(
     nodata: float | None = None,
     scale_factor: float = 1.0,
 ) -> DataFrame:
-    """(b2 - b1) / (b2 + b1), clipped to [-1, 1] (``vi.py:157-228``)."""
+    """(b2 - b1) / (b2 + b1), clipped to [-1, 1] (``vi.py:157-228``);
+    NULL where the denominator is 0."""
     c1 = _scaled(df, b1, scale_factor, nodata)
     c2 = _scaled(df, b2, scale_factor, nodata)
-    return df.withColumn(out, _clip((c2 - c1) / (c2 + c1), -1, 1))
+    return df.withColumn(out, _clip(F.try_divide(c2 - c1, c2 + c1), -1, 1))
 
 
 def ndvi(df, red: str, nir: str, out: str = "ndvi", **kw) -> DataFrame:
@@ -65,7 +67,7 @@ def kndvi(df, red: str, nir: str, out: str = "kndvi", nodata=None, scale_factor=
     """tanh(ndvi²) (``vi.py:615-677``)."""
     r = _scaled(df, red, scale_factor, nodata)
     n = _scaled(df, nir, scale_factor, nodata)
-    nd = _clip((n - r) / (n + r), -1, 1)
+    nd = _clip(F.try_divide(n - r, n + r), -1, 1)
     return df.withColumn(out, _clip(F.tanh(nd * nd), -1, 1))
 
 
@@ -81,21 +83,21 @@ def evi(df, blue: str, red: str, nir: str, out: str = "evi", nodata=None, scale_
     b = _scaled(df, blue, scale_factor, nodata)
     r = _scaled(df, red, scale_factor, nodata)
     n = _scaled(df, nir, scale_factor, nodata)
-    return df.withColumn(out, _clip(2.5 * (n - r) / (n + 6.0 * r - 7.5 * b + 1.0), 0, 1))
+    return df.withColumn(out, _clip(F.try_divide(2.5 * (n - r), n + 6.0 * r - 7.5 * b + 1.0), 0, 1))
 
 
 def evi2(df, red: str, nir: str, out: str = "evi2", nodata=None, scale_factor=1.0) -> DataFrame:
     """2.5(nir-red)/(nir+1+2.4red), clipped [0,1] (``vi.py:404-489``)."""
     r = _scaled(df, red, scale_factor, nodata)
     n = _scaled(df, nir, scale_factor, nodata)
-    return df.withColumn(out, _clip(2.5 * ((n - r) / (n + 1.0 + 2.4 * r)), 0, 1))
+    return df.withColumn(out, _clip(2.5 * F.try_divide(n - r, n + 1.0 + 2.4 * r), 0, 1))
 
 
 def gcvi(df, green: str, nir: str, out: str = "gcvi", nodata=None, scale_factor=1.0, norm: bool = False) -> DataFrame:
     """nir/green - 1, clipped [0,10]; norm=True ⇒ /10 (``vi.py:490-543``)."""
     g = _scaled(df, green, scale_factor, nodata)
     n = _scaled(df, nir, scale_factor, nodata)
-    c = _clip(n / g - 1.0, 0, 10)
+    c = _clip(F.try_divide(n, g) - 1.0, 0, 10)
     if norm:
         c = c / 10.0
     return df.withColumn(out, c)

@@ -207,7 +207,7 @@ def detect_shifts(
     ms = None if max_shift is None else float(max_shift)
     norm = normalization
 
-    def compute(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def compute(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         gs = GridSpec(**g)
         t = int(key[0])
         t_r, t_c = divmod(t, gs.tiles_x)

@@ -33,14 +33,14 @@ every window that holds the cell; the output then has one row for the cell
 when the home columns ride the aggregate (their values from any one of its
 rows), and one row per input row when they join back.
 
-``halo_assignments`` and ``scatter_tile`` are the tile-halo stencil
-prologue that ``functions.topo.slope_aspect`` still runs in pandas.
+``neighbour_aggregate`` is this stencil for every caller: ``moving`` and
+the five-tap centre/N/S/W/E stencil of ``functions.topo.slope_aspect``.
+The target key, its decode and the ride-or-join rule live only there.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -57,78 +57,79 @@ _FIXED_WIDTH = (
 )
 
 
-def halo_assignments(df: DataFrame, grid: GridSpec, hw: int) -> DataFrame:
-    """Duplicate rows into neighbor tiles within ``hw`` cells of a border.
+def tap_offset(grid: GridSpec, hw: int, dr: int, dc: int) -> int:
+    """The key offset ``_fo`` that carries the source at window position
+    ``(dr, dc)`` of a target to that target's key: the source sits at
+    target + (dr, dc) on the lattice padded by ``hw`` on every side."""
+    return -(dr * (grid.ncols + 2 * hw) + dc)
 
-    Adds ``atile`` (the processing-group key). The home assignment always
-    exists; each of the 8 neighbor directions fires only for rows inside the
-    halo band, so the blow-up is limited to tile borders.
+
+def neighbour_aggregate(
+    docs: DataFrame,
+    grid: GridSpec,
+    hw: int,
+    value: str,
+    taps: list[tuple[int, int]],
+    aggs: list[str],
+    outs: list[str],
+    keep: tuple[str, ...] = (),
+    weights: list[float] | None = None,
+) -> DataFrame:
+    """One neighbour-offset aggregate over the grid (the module's stencil).
+
+    Each row's ``value`` (SQL, named ``_fv``) fans out to the cells that
+    see it at window position ``(dr, dc)``, one copy per entry of ``taps``.
+    A copy carries ``_fo``, its :func:`tap_offset` (0 is the cell's own
+    row), and with ``weights`` the tap's weight as ``_fw``. ``aggs`` (SQL
+    aggregates over ``_fv``, ``_fo`` and ``_fw``) run grouped by the target
+    key ``(row+hw)·(ncols+2hw) + col+hw``; ``outs`` (SQL over the
+    aggregates) are the result columns.
+
+    Returns ``row, col, cell_id, *keep, *outs``, one row per target that
+    has a home row; off-grid and absent targets drop. While ``cell_id`` and
+    every ``keep`` column are fixed-width they ride the aggregate from the
+    cell's own row, and the plan has one exchange. A variable-width one
+    (string, array) has no hash-aggregate buffer, and Spark would sort all
+    the copies; then the home rows join back on the cell key instead, one
+    output row per input row.
     """
-    tile_r = F.floor(F.col("row") / grid.tile_rows)
-    tile_c = F.floor(F.col("col") / grid.tile_cols)
-    in_r = F.col("row") % grid.tile_rows
-    in_c = F.col("col") % grid.tile_cols
-
-    assigns = [ (tile_r * grid.tiles_x + tile_c).cast("long") ]
-    # (dr, dc, condition) — duplicate into tile (tile_r+dr, tile_c+dc)
-    near_top = in_r < hw
-    near_bot = in_r >= grid.tile_rows - hw
-    near_left = in_c < hw
-    near_right = in_c >= grid.tile_cols - hw
-    dirs = [
-        (-1, 0, near_top),
-        (1, 0, near_bot),
-        (0, -1, near_left),
-        (0, 1, near_right),
-        (-1, -1, near_top & near_left),
-        (-1, 1, near_top & near_right),
-        (1, -1, near_bot & near_left),
-        (1, 1, near_bot & near_right),
-    ]
-    for dr, dc, cond in dirs:
-        nr, nc = tile_r + dr, tile_c + dc
-        valid = (
-            cond
-            & (nr >= 0)
-            & (nr < grid.tiles_y)
-            & (nc >= 0)
-            & (nc < grid.tiles_x)
+    span = grid.ncols + 2 * hw
+    offsets = [tap_offset(grid, hw, dr, dc) for dr, dc in taps]
+    if weights is None:
+        fan = f"explode(array({', '.join(f'{o}L' for o in offsets)})) AS _fo"
+    else:
+        pairs = (
+            f"named_struct('_fo', {o}L, '_fw', {sql_double(x)})"
+            for o, x in zip(offsets, weights)
         )
-        assigns.append(F.when(valid, (nr * grid.tiles_x + nc).cast("long")))
-    return df.withColumn(
-        "atile", F.explode(F.filter(F.array(*assigns), lambda a: a.isNotNull()))
+        fan = f"inline(array({', '.join(pairs)}))"
+    keep = tuple(k for k in keep if k not in ("row", "col", "cell_id"))
+    quoted = [f"`{k}`" for k in ("cell_id", *keep)]
+    schema = docs.schema
+    ride = all(
+        isinstance(schema[k].dataType, _FIXED_WIDTH) for k in ("cell_id", *keep)
     )
-
-
-def scatter_tile(key, pdf: pd.DataFrame, gs: GridSpec, hw: int, val_col: str):
-    """Shared stencil-kernel prologue (used here and by
-    ``functions.topo.slope_aspect``): decode a halo group's tile geometry
-    from its ``atile`` key and scatter the group's rows into a dense
-    (tile + halo) float array, NaN where absent.
-
-    Returns ``(arr, home, r0, c0, r1, c1)`` — ``home`` is the subframe of
-    rows whose home tile is this group (the cells the kernel must emit);
-    ``arr`` indexes as ``arr[row - (r0 - hw), col - (c0 - hw)]``. Edge
-    tiles clamp to the grid (partial ``r1 - r0`` / ``c1 - c0``) and
-    out-of-window halo rows are masked out of the scatter."""
-    atile = int(key[0])
-    t_r, t_c = divmod(atile, gs.tiles_x)
-    r0, c0 = t_r * gs.tile_rows, t_c * gs.tile_cols
-    r1 = min(r0 + gs.tile_rows, gs.nrows)
-    c1 = min(c0 + gs.tile_cols, gs.ncols)
-    H, W = (r1 - r0) + 2 * hw, (c1 - c0) + 2 * hw
-    arr = np.full((H, W), np.nan)
-    rr = pdf["row"].values - (r0 - hw)
-    cc = pdf["col"].values - (c0 - hw)
-    ok = (rr >= 0) & (rr < H) & (cc >= 0) & (cc < W)
-    arr[rr[ok], cc[ok]] = pdf[val_col].values[ok]
-    home = pdf[
-        (pdf["row"] >= r0)
-        & (pdf["row"] < r1)
-        & (pdf["col"] >= c0)
-        & (pdf["col"] < c1)
-    ]
-    return arr, home, r0, c0, r1, c1
+    key = f"(CAST(row AS BIGINT) + {hw}) * {span} + col + {hw}"
+    src = docs.selectExpr(
+        *(quoted if ride else ()), f"{value} AS _fv", f"{key} AS _fk", fan
+    )
+    if ride:
+        aggs = [
+            *(f"any_value({q}) FILTER (WHERE _fo = 0) AS {q}" for q in quoted),
+            "bool_or(_fo = 0) AS _fh",
+            *aggs,
+        ]
+    stats = src.groupBy(F.expr("_fk + _fo AS _ft")).agg(*map(F.expr, aggs))
+    if ride:
+        stats = stats.where("_fh")
+    else:
+        stats = stats.join(docs.selectExpr(f"{key} AS _ft", *quoted), "_ft")
+    return stats.selectExpr(
+        f"_ft div {span} - {hw} AS row",
+        f"_ft % {span} - {hw} AS col",
+        *quoted,
+        *outs,
+    )
 
 
 #: stats that support inverse-distance weighting (the reference's Cython
@@ -217,55 +218,20 @@ def moving(
         nodata = None
     elif nodata is not None and np.isnan(nodata):
         nodata = None  # NaN is skipped anyway; a NaN refill is NULL
-    keep = tuple(k for k in keep if k not in ("row", "col", "cell_id"))
-
     # _fv: the band, NULL where absent, NaN or nodata — the values the
     # reference's NaN-skipping reductions see
     v = f"CAST(`{band}` AS DOUBLE)"
     skip = f"isnan({v})"
     if nodata is not None:
         skip += f" OR {v} = {sql_double(nodata)}"
-    # a source at window position (dr, dc) of target t sits at t + (dr, dc):
-    # it reaches t's key at offset -(dr·span + dc), carrying t's weight there
-    span = grid.ncols + 2 * hw
-    wts = window_weights(w)
-    offsets = [
-        (-(dr * span + dc), wts[dr + hw, dc + hw])
-        for dr in range(-hw, hw + 1)
-        for dc in range(-hw, hw + 1)
-    ]
-    if weights:
-        pairs = (
-            f"named_struct('_fo', {o}L, '_fw', {sql_double(x)})" for o, x in offsets
-        )
-        fan = f"inline(array({', '.join(pairs)}))"
-    else:
-        fan = f"explode(array({', '.join(f'{o}L' for o, _ in offsets)})) AS _fo"
-    home = ("cell_id", *keep)
-    quoted = [f"`{k}`" for k in home]
-    # the home columns ride the aggregate only while all are fixed-width:
-    # a string or array has no hash-aggregate buffer, and Spark would sort
-    # all w² copies instead; such home rows join back on their cell key
-    schema = docs.schema
-    ride = all(isinstance(schema[k].dataType, _FIXED_WIDTH) for k in home)
-    key = f"(CAST(row AS BIGINT) + {hw}) * {span} + col + {hw}"
-    src = docs.selectExpr(
-        *(quoted if ride else ()),
-        f"IF({skip}, NULL, {v}) AS _fv",
-        f"{key} AS _fk",
-        fan,
-    )
+    taps = [(dr, dc) for dr in range(-hw, hw + 1) for dc in range(-hw, hw + 1)]
 
-    aggs = []
-    if ride:
-        aggs = [f"any_value({q}) FILTER (WHERE _fo = 0) AS {q}" for q in quoted]
-        aggs.append("bool_or(_fo = 0) AS _fh")
     if weights:
         # mean = Σwv/Σw and var = Σ(wv - mean)²/Σw over the valid cells
         # (_moving.pyx:183-228, 51-112). With x = wv the variance is
         # (n·var_pop(x) + n·(avg(x) - mean)²)/Σw: Spark's stable central
         # moment plus the shift, no raw power sums. A zero Σw is NULL.
-        aggs += [
+        aggs = [
             "sum(_fw * _fv) AS _fsx",
             "sum(_fw) FILTER (WHERE _fv IS NOT NULL) AS _fsw",
             "count(_fv) AS _fn",
@@ -286,7 +252,7 @@ def moving(
         # FULL w×w window including the diagonal corners, not the
         # plus-shaped IDW support. Every other center (1, NULL, any other
         # class) passes through unchanged.
-        aggs += [
+        aggs = [
             "any_value(_fv) FILTER (WHERE _fo = 0) AS _fc",
             "bool_or(_fv = 1) AS _fx",
         ]
@@ -302,7 +268,7 @@ def moving(
             # exact, with np.nanpercentile's linear interpolation
             "perc": f"percentile(_fv, {sql_double(perc / 100)})",
         }[stat]
-        aggs.append(f"{fn} AS _fs")
+        aggs = [f"{fn} AS _fs"]
         res = "_fs"
     if nodata is not None:
         # reference parity (_moving.pyx: 'if npy_isnan(res): return
@@ -310,14 +276,8 @@ def moving(
         # instead of emitting NULL
         res = f"coalesce({res}, {sql_double(nodata)})"
 
-    stats = src.groupBy(F.expr("_fk + _fo AS _ft")).agg(*map(F.expr, aggs))
-    if ride:
-        stats = stats.where("_fh")
-    else:
-        stats = stats.join(docs.selectExpr(f"{key} AS _ft", *quoted), "_ft")
-    return stats.selectExpr(
-        f"_ft div {span} - {hw} AS row",
-        f"_ft % {span} - {hw} AS col",
-        *quoted,
-        f"{res} AS `{out}`",
+    return neighbour_aggregate(
+        docs, grid, hw, f"IF({skip}, NULL, {v})", taps, aggs,
+        [f"{res} AS `{out}`"], keep,
+        weights=list(window_weights(w).ravel()) if weights else None,
     )

@@ -327,7 +327,7 @@ def trace_rings(
 
     g = grid.as_dict() if grid is not None else None
 
-    def compute_bucket(key, bdf: pd.DataFrame) -> pd.DataFrame:
+    def compute_bucket(key: tuple, bdf: pd.DataFrame) -> pd.DataFrame:
         frames = [
             _trace_one(int(comp), cpdf)
             for comp, cpdf in bdf.groupby("comp", sort=True)
@@ -554,7 +554,7 @@ def trace_rings_tiled(
     g = grid.as_dict() if grid is not None else None
     TR, TC = int(tile_rows), int(tile_cols)
 
-    def tile_kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def tile_kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         member: dict[tuple[int, int], int] = {}
         for r, c, k in zip(pdf["row"], pdf["col"], pdf["comp"]):
             member[(int(r), int(c))] = int(k)
@@ -612,7 +612,7 @@ def trace_rings_tiled(
             }
         )
 
-    def stitch_kernel(key, bdf: pd.DataFrame) -> pd.DataFrame:
+    def stitch_kernel(key: tuple, bdf: pd.DataFrame) -> pd.DataFrame:
         out_rows = []
         for comp, cpdf in bdf.groupby("comp", sort=True):
             value = cpdf["value"].iloc[0]
@@ -761,7 +761,7 @@ def connected_components_tiled(
          + F.floor(F.col("col") / tile_cols)).alias("_tile"),
     )
 
-    def local_cc(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def local_cc(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         rows = pdf["row"].to_numpy()
         cols = pdf["col"].to_numpy()
         vals = pdf["value"].to_numpy()

@@ -265,7 +265,7 @@ def series_apply(
     # above is already sorted by the orderBy
     times_global = np.asarray(time_names)
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         times = times_global
         # Direct [T, N] cube build over the OBSERVED (row, col) cells:
         # a cell whose series is all-NaN stays (the reference computes

@@ -141,7 +141,7 @@ def pack_sequences(
         budget = int(max_tokens)
         id_type = docs.schema[id_col].dataType.simpleString()
 
-        def _greedy(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+        def _greedy(key: tuple, pdf: "pd.DataFrame") -> "pd.DataFrame":
             pdf = pdf.sort_values(id_col).reset_index(drop=True)
             packs, offs = [], []
             pack, fill = 0, 0

@@ -959,7 +959,7 @@ def _cluster_cosine_pairs(
         _assign, f"{id_col} {id_type}, {vec_col} {vec_type}, _cell int"
     )
 
-    def _pairs(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _pairs(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         m = _normalize(list(pdf[vec_col]))
         ids = pdf[id_col].to_numpy()
         # rounded-threshold semantics shared by all pair paths (see
@@ -1009,7 +1009,7 @@ def _blocked_cosine_pairs(
     )
     rep = src.withColumn("_pair", F.explode(F.array_distinct(pair_ids)))
 
-    def compute(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def compute(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pair = int(key[0])
         bi, bj = divmod(pair, B)
         ids = pdf["_vid"].values.astype(np.int64)

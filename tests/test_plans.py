@@ -202,19 +202,24 @@ def test_polygon_operators_broadcast_runs_without_python(spark, docs, op):
         assert "BroadcastHashJoin" in plan, op
 
 
-def _build_moving(spark, docs, group, **kw):
-    """``moving(docs, **kw)`` and the ids of the jobs its build started."""
-    from geowombat_spark.operators.focal import moving
-
+def _build(spark, group, build):
+    """``build()`` and the ids of the jobs it started."""
     sc = spark.sparkContext
-    sc.setJobGroup(group, "build moving")
+    sc.setJobGroup(group, group)
     try:
-        df = moving(docs, L8_GRID, w=5, **kw)
+        df = build()
         jobs = set(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     return df, jobs
+
+
+def _build_moving(spark, docs, group, **kw):
+    """``moving(docs, **kw)`` and the ids of the jobs its build started."""
+    from geowombat_spark.operators.focal import moving
+
+    return _build(spark, group, lambda: moving(docs, L8_GRID, w=5, **kw))
 
 
 @pytest.mark.parametrize(
@@ -252,6 +257,70 @@ def test_moving_joins_variable_width_keep_back(spark, docs):
         assert node not in plan, node
     assert "HashAggregate" in plan, plan
     assert re.search(r"Join \[_ft#\d+L\], \[_ft#\d+L\], Inner", plan), plan
+
+
+def test_slope_aspect_is_one_jvm_aggregate(spark, docs):
+    """slope_aspect runs the same neighbour-offset aggregate as moving (a
+    five-tap centre/N/S/W/E stencil): building it starts no job, and with
+    a fixed-width ``keep`` its plan holds no Python-worker node, no sort
+    aggregate and exactly one exchange."""
+    from geowombat_spark.functions.topo import slope_aspect
+
+    df, jobs = _build(
+        spark, "test-slope-aspect-build",
+        lambda: slope_aspect(docs, L8_GRID, elev="band_blue", keep=("tile_id",)),
+    )
+    assert jobs == set(), f"building started jobs {sorted(jobs)}"
+    plan = _plan(df)
+    for node in PYTHON_NODES + ("SortAggregate",):
+        assert node not in plan, node
+    assert "HashAggregate" in plan, plan
+    assert plan.count("Exchange ") == 1, plan
+
+
+def test_grouped_map_kernels_declare_their_eval_type(spark):
+    """Every grouped-map kernel annotates its key and frame, so
+    ``applyInPandas`` infers the grouped-map eval type from the hints
+    instead of warning that it cannot."""
+    import warnings
+
+    import pandas as pd
+
+    from geowombat_spark.grid import GridSpec
+    from geowombat_spark.operators import polygonize, temporal
+    from geowombat_spark.operators.coregister import detect_shifts
+    from geowombat_spark.pipeline import dedup
+    from geowombat_spark.pipeline.curate import pack_sequences
+
+    g = GridSpec(left=0.0, top=40.0, cellx=10.0, celly=10.0,
+                 nrows=4, ncols=4, tile_rows=2, tile_cols=2)
+    cells = spark.createDataFrame(
+        [(r, c, 0.5 * r, 0.5 * c, 1.0 + r, 1.0 + c, 1, "t0", r % 2)
+         for r in range(4) for c in range(4)],
+        "row long, col long, x double, y double, b_ref double, b_tar double, "
+        "tile_id long, t string, value long",
+    )
+    emb = spark.createDataFrame(
+        [(i, [float(i), 1.0, 0.5]) for i in range(8)],
+        "vec_id long, embedding array<double>",
+    )
+    text = spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(4), "text": ["a b", "c", "d e f", "g"]})
+    )
+    comps = polygonize.connected_components_tiled(cells, "value", 2, 2)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        detect_shifts(cells, g, "b_ref", "b_tar", max_shift=1)
+        temporal.series_apply(
+            cells.withColumnRenamed("b_ref", "band_blue"),
+            lambda cube, times: cube[:1], ("first",), time_names=["t0"],
+        )
+        polygonize.connected_components_tiled(cells, "value", 2, 2)
+        polygonize.trace_rings(comps)
+        polygonize.trace_rings_tiled(comps, tile_rows=2, tile_cols=2)
+        dedup.embedding_neardup_pairs(emb, threshold=0.5, method="block")
+        dedup.embedding_neardup_pairs(emb, threshold=0.5, method="cluster")
+        pack_sequences(text, max_tokens=4, n_shards=1, exact=True)
 
 
 def test_entry_builds_without_running_a_job(spark):

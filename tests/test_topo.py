@@ -83,6 +83,112 @@ def test_slope_aspect_matches_global_numpy(spark, topo_docs):
     )
 
 
+def _np_slope_aspect_nan(z, cellx, celly):
+    """``_np_slope_aspect`` where NaN marks an absent, NULL or NaN cell:
+    a NaN neighbour (or one off the image) replicates the centre."""
+    p = np.pad(z, 1, constant_values=np.nan)
+    h, w = z.shape
+
+    def nb(dr, dc):
+        v = p[1 + dr:1 + dr + h, 1 + dc:1 + dc + w]
+        return np.where(np.isnan(v), z, v)
+
+    dzdx = (nb(0, 1) - nb(0, -1)) / (2 * cellx)
+    dzdy = (nb(-1, 0) - nb(1, 0)) / (2 * celly)
+    slope = np.degrees(np.arctan(np.hypot(dzdx, dzdy)))
+    aspect = np.where(
+        slope == 0.0,
+        0.0,
+        np.mod(np.degrees(np.arctan2(-dzdx, -dzdy)) + 360.0, 360.0),
+    )
+    return slope, aspect
+
+
+@pytest.mark.parametrize("keep", [(), ("w",), ("name",)])
+def test_slope_aspect_ragged_null_nan_and_keep(spark, keep):
+    """Absent cells, NULL and real NaN elevations (built from rows: Arrow
+    would turn a pandas NaN into NULL) replicate the centre like an image
+    edge, across the tile borders (rows/cols 31, 32) too. The fixed-width
+    ``keep`` rides the aggregate and the string one joins back; both give
+    one row per input cell with its own payload."""
+    rng = np.random.default_rng(5)
+    pdf = _topo_pdf()
+    absent = rng.random(len(pdf)) < 0.05
+    absent |= pdf["row"].isin([31, 32]).values & (pdf["col"] % 7 == 0).values
+    pdf = pdf[~absent].reset_index(drop=True)
+    bad = rng.random(len(pdf))
+    border = pdf["col"].isin([31, 32]).values & (pdf["row"] % 5 == 0).values
+    elev = [
+        None if b < 0.03 or (m and r % 2) else float("nan") if b < 0.06 or m
+        else float(e)
+        for e, b, m, r in zip(pdf["elev"], bad, border, pdf["row"])
+    ]
+    rows = [
+        (int(r), int(c), int(i), e, float(k), f"n{k}")
+        for k, (r, c, i, e) in enumerate(
+            zip(pdf["row"], pdf["col"], pdf["cell_id"], elev)
+        )
+    ]
+    docs = spark.createDataFrame(
+        rows, "row long, col long, cell_id long, elev double, w double, name string"
+    ).repartition(4)
+    out = (
+        slope_aspect(docs, TG, elev="elev", keep=keep)
+        .toPandas()
+        .sort_values(["row", "col"])
+        .reset_index(drop=True)
+    )
+    assert list(out.columns) == ["row", "col", "cell_id", *keep, "slope", "aspect"]
+    assert len(out) == len(pdf)
+    assert (out["cell_id"].values == pdf["cell_id"].values).all()
+    if keep == ("w",):
+        assert (out["w"].values == np.arange(len(pdf), dtype=float)).all()
+    if keep == ("name",):
+        assert list(out["name"]) == [f"n{k}" for k in range(len(pdf))]
+    z = np.full((64, 64), np.nan)
+    z[pdf["row"], pdf["col"]] = [np.nan if e is None else e for e in elev]
+    slope, aspect = _np_slope_aspect_nan(z, TG.cellx, TG.celly)
+    slope, aspect = slope[out["row"], out["col"]], aspect[out["row"], out["col"]]
+    assert np.isnan(slope).any() and not np.isnan(slope).all()
+    np.testing.assert_allclose(out["slope"].values, slope, rtol=1e-12)
+    np.testing.assert_allclose(out["aspect"].values, aspect, rtol=1e-12)
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_slope_aspect_cell_with_two_rows(spark, id_type):
+    """The input holds one row per cell. With fixed-width home columns a
+    cell with two rows yields one output row; a string ``keep`` column
+    joins the home rows back, so each row gets its own output row."""
+    g = GridSpec(left=0.0, top=40.0, cellx=10.0, celly=10.0,
+                 nrows=4, ncols=4, tile_rows=2, tile_cols=2)
+    rows = [(r, c, 10.0 * r + c * c) for r in range(4) for c in range(4)]
+    rows.append((1, 1, 11.0))
+    cast = str if id_type == "string" else int
+    df = spark.createDataFrame(
+        [
+            (cast(i), r, c, int(zorder_encode(np.array([r]), np.array([c]))[0]), v)
+            for i, (r, c, v) in enumerate(rows)
+        ],
+        f"doc_id {id_type}, row long, col long, cell_id long, elev double",
+    )
+    out = slope_aspect(df, g, keep=("doc_id",)).toPandas()
+    dup = out[(out["row"] == 1) & (out["col"] == 1)]
+    if id_type == "long":
+        assert len(out) == 16
+        assert len(dup) == 1 and dup["doc_id"].iloc[0] in (5, 16)
+    else:
+        assert len(out) == 17
+        assert sorted(dup["doc_id"]) == ["16", "5"]
+    z = np.array([[10.0 * r + c * c for c in range(4)] for r in range(4)])
+    slope, aspect = _np_slope_aspect(z, g.cellx, g.celly)
+    np.testing.assert_allclose(
+        out["slope"].values, slope[out["row"], out["col"]], rtol=1e-12
+    )
+    np.testing.assert_allclose(
+        out["aspect"].values, aspect[out["row"], out["col"]], rtol=1e-12
+    )
+
+
 def test_slope_aspect_flat_surface(spark):
     rr, cc = np.meshgrid(np.arange(8), np.arange(8), indexing="ij")
     pdf = pd.DataFrame(

@@ -4,6 +4,7 @@
 import math
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from geowombat_spark.functions import vi
@@ -122,3 +123,58 @@ def test_mask_nodata_and_band_mask(spark):
     assert [r[0] for r in out] == [1, 1]
     df2 = spark.createDataFrame([(3.0, 5.0)], "a double, b double")
     assert band_mask(df2, ("a", "b")).select("mask").collect()[0][0] == 0
+
+
+def test_zero_denominator_gives_null(spark):
+    """A zero denominator gives NULL (Spark's non-ANSI result) instead of
+    an ANSI DIVIDE_BY_ZERO: an all-zero cell for the normalized
+    differences, kndvi and gcvi; a cell that zeroes evi's (5 + 0 - 6 + 1)
+    and one that zeroes evi2's (-1 + 1 + 0)."""
+    df = spark.createDataFrame(
+        [(0, 0.0, 0.0, 0.0, 0.0), (1, 0.8, 1.0, 0.0, 5.0), (2, 0.0, 1.0, 0.0, -1.0)],
+        "i int, blue double, green double, red double, nir double",
+    )
+    df = vi.norm_diff(df, "red", "nir")
+    df = vi.ndvi(df, "red", "nir")
+    df = vi.kndvi(df, "red", "nir")
+    df = vi.gcvi(df, "green", "nir")
+    df = vi.evi(df, "blue", "red", "nir")
+    df = vi.evi2(df, "red", "nir")
+    got = {r["i"]: r for r in df.collect()}
+    for c in ("norm_diff", "ndvi", "kndvi", "gcvi"):
+        assert got[0][c] is None, c
+    assert got[0]["evi"] == 0.0 and got[0]["evi2"] == 0.0
+    assert got[1]["evi"] is None and got[1]["ndvi"] == 1.0
+    assert got[2]["evi2"] is None
+
+
+def test_mask_s2_without_nodata_on_zero_bands(spark):
+    """mask_s2 with its default nodata=None runs its dark-pixel
+    norm_diff on the potential-shadow cells. Where swir2 and green are
+    both 0 that cell is not dark (NULL), and the mask collects."""
+    from geowombat_spark.functions.cloudmask import mask_s2
+    from geowombat_spark.grid import GridSpec, zorder_encode
+
+    n = 8
+    g = GridSpec(left=0.0, top=240.0, cellx=30.0, celly=30.0,
+                 nrows=n, ncols=n, tile_rows=4, tile_cols=4)
+    rr, cc = np.meshgrid(np.arange(n), np.arange(n), indexing="ij")
+    rr, cc = rr.ravel(), cc.ravel()
+    # row 0 is cloud (rows 0-1 after dilation); a 500 m cloud at this
+    # zenith and azimuth 0 casts its shadow 2 rows down, onto zero bands
+    zero = rr >= 2
+    pdf = pd.DataFrame({
+        "doc_id": np.arange(n * n), "row": rr, "col": cc,
+        "cell_id": zorder_encode(rr, cc),
+        "prob": (rr == 0).astype(float),
+        "solar_za": np.degrees(np.arctan(2.0 * 30.0 / 500.0)) * 100.0,
+        "solar_az": 0.0,
+        "band_swir2": np.where(zero, 0.0, 10.0),
+        "band_green": np.where(zero, 0.0, 40.0),
+    })
+    out = mask_s2(
+        spark.createDataFrame(pdf), g, prob="prob", average_over=1,
+        dilation_size=1, cloud_heights=(500.0,),
+    ).toPandas().sort_values("doc_id")
+    assert len(out) == n * n
+    np.testing.assert_array_equal(out["mask"], np.where(zero, 0, 4))

@@ -8,12 +8,14 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# this checkout, wherever it lives (an A/B copy checks its own code)
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from geowombat_spark.sources.tables import TESTDATA_TABLES, get_spark  # noqa: E402
