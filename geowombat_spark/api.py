@@ -115,11 +115,13 @@ from .operators.focal import moving  # noqa: F401
 from .operators.knn import knn_join, near_pairs  # noqa: F401
 from .operators.mosaic import concat, file_bounds, mosaic  # noqa: F401
 from .operators.polygonize import (  # noqa: F401
-    connected_components as array_to_polygon,
+    connected_components_tiled as array_to_polygon,
 )
 from .operators.polygonize import (  # noqa: F401
-    trace_rings,
     trace_rings_tiled,
+)
+from .operators.polygonize import (  # noqa: F401
+    trace_rings_tiled as trace_rings,
 )
 from .operators.rasterize import polygon_to_array  # noqa: F401
 from .operators.sample import (  # noqa: F401

@@ -1,30 +1,33 @@
-"""array_to_polygon — connected components of equal-valued cell regions.
+"""array_to_polygon — connected components of equal-valued cell regions,
+and the polygon rings that bound them.
 
-Reference: ``/root/reference/src/geowombat/core/conversion.py:495-568``
+Reference: geowombat ``src/geowombat/core/conversion.py:495-568``
 (``rasterio.features.shapes``: polygons of connected same-valued pixels,
 4/8-connectivity) and the accessor ``to_polygon``
 (``core/geoxarray.py:563-617``).
 
-Spark shape: iterative min-label propagation over the cell adjacency
-self-join — the classic distributed connected-components loop. Each round:
+Spark shape: per-tile work plus a cross-tile merge, so no task ever holds
+more than one tile's cells.
 
-    label(c) <- min(label(c), min over same-valued neighbors n of label(n))
+- :func:`connected_components_tiled` labels each tile with a local
+  union-find (one ``groupBy(tile).applyInPandas``), then merges labels
+  across tile borders with the min-label + pointer-jumping loop of
+  :func:`geowombat_spark.pipeline.dedup.dedup_groups`, which iterates over
+  the border label graph, not the cell graph. Component ids are the
+  minimum cell key ``row * 2^32 + col`` of the component — deterministic,
+  engine-independent.
+- :func:`trace_rings_tiled` walks each component's boundary per tile and
+  stitches the O(perimeter) boundary segments per component.
+- :func:`trace_cell_rings` is the pure, no-Spark tracer for one
+  component's cell set: the reference the tiled tracer is tested against.
+- :func:`region_summary` is the cheap count+bbox form for callers that do
+  not need geometry.
 
-augmented with **pointer jumping** (label(c) <- label(label(c))) so
-convergence is O(log diameter) rounds instead of O(diameter). Every round
-is one equi-join shuffle; lineage is truncated per round with
-``localCheckpoint`` (use a checkpoint dir on a real cluster) so the plan
-stays constant-size. Component ids are the minimum cell label in the
-component — deterministic, engine-independent.
-
-The polygon-ring reconstruction step of ``features.shapes`` is fully
-distributed too: :func:`trace_rings` groups each component's boundary
-edges (emitted as Column expressions against the 4-neighborhood) with
-``applyInPandas`` and walks them into closed rings per component — one
-shuffle keyed by component id, with a ``max_cells`` guard that summarizes
-pathological continent-sized components by bbox instead of tracing an
-O(perimeter) ring through a single task. ``region_summary`` remains the
-cheap count+bbox form for callers that don't need geometry.
+NaN and NULL classes: NaN = NaN (all NaN cells form one class), NULL
+never equals anything (NULL cells stay singletons). Python kernels see
+NaN-ness as an explicit ``_vnan`` flag (:func:`_flag_nan`), because the
+Arrow round trip folds NaN into NULL; :func:`_restore_nan` puts NaN back
+on the way out.
 """
 
 from __future__ import annotations
@@ -33,113 +36,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def connected_components(
-    cells: DataFrame,
-    value_col: str = "value",
-    connectivity: int = 4,
-    max_iter: int = 50,
-) -> DataFrame:
-    """Label connected same-valued regions.
+def _flag_nan(value, vt: str):
+    """(value with NaN NULLed, ``_vnan`` flag) for a value column of Spark
+    type ``vt``. The flag is what carries a NaN class through a Python
+    kernel: the Arrow round trip would fold the NaN itself into NULL."""
+    if vt in ("float", "double"):
+        return F.nanvl(value, F.lit(None).cast(vt)), F.isnan(value)
+    return value, F.lit(False)
 
-    ``cells`` needs (row, col, ``value_col``). Returns (row, col, value,
-    comp) where ``comp`` is the min initial label (row-major cell index
-    proxy: ``row * 2^32 + col``) of the region.
-    """
-    assert connectivity in (4, 8)
-    lab = cells.select(
-        "row",
-        "col",
-        F.col(value_col).alias("value"),
-        (F.col("row") * F.lit(1 << 32) + F.col("col")).alias("label"),
-    ).localCheckpoint()
 
-    if connectivity == 4:
-        offs = [(-1, 0), (1, 0), (0, -1), (0, 1)]
-    else:
-        offs = [(dr, dc) for dr in (-1, 0, 1) for dc in (-1, 0, 1) if (dr, dc) != (0, 0)]
-
-    for _ in range(max_iter):
-        # scatter: every cell sends its label to each neighbor address —
-        # turns the stencil into ONE hash equi-join on (row, col, value)
-        # (an OR-of-offsets join predicate would be a nested-loop join).
-        contrib = lab.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            (F.col("row") + dr).alias("row"),
-                            (F.col("col") + dc).alias("col"),
-                        )
-                        for dr, dc in offs
-                    ]
-                )
-            ).alias("tgt"),
-            F.col("value"),
-            F.col("label").alias("nlabel"),
-        ).select(
-            F.col("tgt.row").alias("row"),
-            F.col("tgt.col").alias("col"),
-            "value",
-            "nlabel",
-        )
-        nb = (
-            lab.join(contrib, ["row", "col", "value"], "left")
-            .groupBy("row", "col", "value", "label")
-            .agg(F.min("nlabel").alias("min_nb"))
-            .withColumn(
-                "new_label", F.least(F.col("label"), F.coalesce("min_nb", "label"))
-            )
-        )
-        # pointer jumping: follow the new label to ITS current label
-        jump = lab.select(
-            F.col("row").alias("jr"),
-            F.col("col").alias("jc"),
-            F.col("label").alias("jlabel"),
-        )
-        stepped = (
-            nb.withColumns(
-                {
-                    "lr": F.expr("new_label div 4294967296").cast("long"),
-                    "lc": (F.col("new_label") % F.lit(1 << 32)).cast("long"),
-                }
-            )
-            .join(
-                jump,
-                (F.col("jr") == F.col("lr")) & (F.col("jc") == F.col("lc")),
-                "left",
-            )
-            .select(
-                "row",
-                "col",
-                "value",
-                F.col("label").alias("_old"),
-                F.least(
-                    F.col("new_label"), F.coalesce("jlabel", "new_label")
-                ).alias("label"),
-            )
-        )
-        # the old label rides along to the checkpoint so the convergence
-        # test is a filter-count over checkpointed partitions — no extra
-        # join per round
-        new_lab = stepped.localCheckpoint()
-        changed = new_lab.filter(F.col("label") != F.col("_old")).count()
-        lab = new_lab.drop("_old")
-        if changed == 0:
-            break
-    else:
-        import warnings
-
-        # `changed` is unbound when max_iter <= 0 skipped the loop body
-        # entirely — the warning must not NameError in that degenerate case
-        n_changing = changed if max_iter > 0 else "all"
-        warnings.warn(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({n_changing} labels still changing) — component ids are "
-            "incomplete; raise max_iter",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return lab.withColumnRenamed("label", "comp")
+def _restore_nan(vt: str):
+    """The ``value`` column with NaN put back where ``_vnan`` is set — the
+    inverse of :func:`_flag_nan`."""
+    if vt in ("float", "double"):
+        return F.when(
+            F.col("_vnan"), F.lit(float("nan")).cast(vt)
+        ).otherwise(F.col("value"))
+    return F.col("value")
 
 
 def region_summary(comps: DataFrame) -> DataFrame:
@@ -281,119 +194,16 @@ def trace_cell_rings(
     Returns rings sorted exterior-first: each as (corner vertices, unit
     edge count, signed area in (x=col, y=row) — exterior positive). The
     walk keeps the interior on the RIGHT; pinch vertices take the
-    sharpest right turn; collinear runs merge to corners. Factored out of
-    :func:`trace_rings` so property tests can drive it directly (the
-    Euler-characteristic invariants in tests/test_property.py).
+    sharpest right turn; collinear runs merge to corners. This is the
+    whole-component "single-task walk" that :func:`trace_rings_tiled` must
+    reproduce exactly; tests/test_property.py drives it directly (the
+    Euler-characteristic invariants and the tiled-equals-single-task
+    sweep).
     """
     rings = _walk_closed_rings(_boundary_edges(cells))
     # deterministic ring order: exterior-first (area desc), then first vertex
     rings.sort(key=lambda t: (-t[2], t[0][0] if t[0] else (0, 0)))
     return rings
-
-
-def trace_rings(
-    comps: DataFrame,
-    grid=None,
-    max_cells: int | None = None,
-    n_buckets: int = 256,
-) -> DataFrame:
-    """Reconstruct polygon rings per component — the ``features.shapes``
-    geometry step (``conversion.py:495-568``), distributed by component.
-
-    One exchange: components hash into ``n_buckets`` processing groups
-    (``groupBy(pmod(hash(comp)))``) so one kernel invocation traces many
-    small components — per-group Arrow/pandas overhead amortizes over the
-    bucket instead of being paid once per (typically tiny) component,
-    while a component's cells still land in exactly one task. The tracer
-    is O(perimeter) local work per component. Boundary
-    convention: walk with the interior on the RIGHT, preferring the
-    sharpest right turn at pinch vertices (two regions meeting diagonally
-    split into simple rings — GDAL's 4-connectivity behavior). Exterior
-    rings come out with positive shoelace area in (col, row) coordinates,
-    holes negative. Collinear runs are merged, so ``n_vertices`` counts
-    polygon corners.
-
-    ``max_cells`` is the at-scale hot-key guard: a component larger than
-    the cap (think: the background/ocean class) emits one row with
-    ``ring_idx = -1`` and empty geometry instead of shipping the whole
-    component through one task. ``grid`` (a GridSpec) converts ring
-    vertices from (col, row) lattice corners to map coordinates.
-
-    Output: one row per ring —
-    (comp, value, ring_idx, is_hole, n_vertices, n_edges, area, xs, ys).
-    """
-    import numpy as np
-    import pandas as pd
-
-    g = grid.as_dict() if grid is not None else None
-
-    def compute_bucket(key: tuple, bdf: pd.DataFrame) -> pd.DataFrame:
-        frames = [
-            _trace_one(int(comp), cpdf)
-            for comp, cpdf in bdf.groupby("comp", sort=True)
-        ]
-        if frames:
-            return pd.concat(frames, ignore_index=True)
-        # an empty group yields an empty TYPED frame (the old
-        # _trace_one(0, empty) fallback crashed on .iloc[0])
-        return pd.DataFrame(
-            {
-                "comp": pd.Series([], dtype="int64"),
-                "value": pd.Series([], dtype="float64"),
-                "ring_idx": pd.Series([], dtype="int32"),
-                "is_hole": pd.Series([], dtype="bool"),
-                "n_vertices": pd.Series([], dtype="int64"),
-                "n_edges": pd.Series([], dtype="int64"),
-                "area": pd.Series([], dtype="float64"),
-                "xs": pd.Series([], dtype="object"),
-                "ys": pd.Series([], dtype="object"),
-            }
-        )
-
-    def _trace_one(comp: int, pdf: pd.DataFrame) -> pd.DataFrame:
-        value = pdf["value"].iloc[0]
-        if max_cells is not None and len(pdf) > max_cells:
-            return pd.DataFrame(
-                {
-                    "comp": [comp], "value": [value], "ring_idx": [-1],
-                    "is_hole": [False], "n_vertices": [0], "n_edges": [0],
-                    "area": [float("nan")], "xs": [[]], "ys": [[]],
-                }
-            )
-        cells = set(zip(pdf["row"].astype(int), pdf["col"].astype(int)))
-        rings = trace_cell_rings(cells)
-        rows = []
-        for idx, (merged, n_edges, area) in enumerate(rings):
-            if g is not None:
-                oxs = [g["left"] + p[1] * g["cellx"] for p in merged]
-                oys = [g["top"] - p[0] * g["celly"] for p in merged]
-            else:
-                oxs = [float(p[1]) for p in merged]
-                oys = [float(p[0]) for p in merged]
-            rows.append(
-                {
-                    "comp": comp, "value": value, "ring_idx": idx,
-                    "is_hole": area < 0, "n_vertices": len(merged),
-                    "n_edges": n_edges, "area": abs(area),
-                    "xs": oxs, "ys": oys,
-                }
-            )
-        return pd.DataFrame(rows)
-
-    # value keeps its INPUT type: hardcoding bigint crashed on
-    # double-valued class rasters that connected_components itself
-    # handles fine (callers and oracles are interchangeable only if the
-    # tracers accept whatever the labeler accepted)
-    vt = comps.schema["value"].dataType.simpleString()
-    schema = (
-        f"comp bigint, value {vt}, ring_idx int, is_hole boolean, "
-        "n_vertices bigint, n_edges bigint, area double, "
-        "xs array<double>, ys array<double>"
-    )
-    bucketed = comps.withColumn(
-        "_bkt", F.pmod(F.xxhash64(F.col("comp")), F.lit(int(n_buckets)))
-    )
-    return bucketed.groupBy("_bkt").applyInPandas(compute_bucket, schema)
 
 
 def _walk_tile_chains(edges, tile_rows: int, tile_cols: int):
@@ -518,36 +328,51 @@ def _stitch_segments(segs):
     return rings
 
 
+# hash buckets of the per-component stitch: one kernel call stitches many
+# small components, so per-group Arrow/pandas overhead is paid per bucket
+_STITCH_BUCKETS = 256
+
+
 def trace_rings_tiled(
     comps: DataFrame,
     grid=None,
     tile_rows: int = 64,
     tile_cols: int = 64,
-    n_buckets: int = 256,
 ) -> DataFrame:
-    """:func:`trace_rings` re-planned for skew: identical output contract,
-    but no single task ever holds a whole component's CELLS.
+    """Reconstruct polygon rings per component — the ``features.shapes``
+    geometry step (``conversion.py:495-568``) — without any task holding a
+    whole component's cells.
 
-    :func:`trace_rings` ships each component's full cell set (O(area))
-    through one task — a giant background/ocean component serializes its
-    entire area AND perimeter walk into one straggler. Here the walk runs
-    per tile and only boundary *segments* (O(perimeter), collinear-merged)
-    shuffle to the per-component stitcher — the same area→perimeter
-    reduction ``connected_components_tiled`` applies to the labeling step
-    (``polygonize.py`` tiled pattern; ref semantics unchanged:
-    ``conversion.py:495-568``).
+    ``comps`` needs (row, col, value, comp), as
+    :func:`connected_components_tiled` returns it. Output: one row per
+    ring — (comp, value, ring_idx, is_hole, n_vertices, n_edges, area, xs,
+    ys). Boundary convention: walk with the interior on the RIGHT,
+    preferring the sharpest right turn at pinch vertices (two regions
+    meeting diagonally split into simple rings — GDAL's 4-connectivity
+    behavior; the lobes of an 8-connected component that touch only at a
+    corner trace to one exterior ring each, under the one ``comp``).
+    Exterior rings have positive shoelace area in (col, row)
+    coordinates, holes negative; ``area`` is reported unsigned with
+    ``is_hole``. Collinear runs are merged, so ``n_vertices`` counts
+    polygon corners. Rings are ordered exterior-first (area descending),
+    then by first vertex; each ring starts at its lexicographic-min
+    corner. ``grid`` (a GridSpec) converts vertices from (col, row)
+    lattice corners to map coordinates. A NaN class keeps ``value`` NaN;
+    a NULL cell's ring has ``value`` NULL.
 
     Plan: one halo scatter (4-direction 1-cell strips, so cross-tile
     neighbor membership is decided locally) → ``groupBy(tile)`` chain
-    extraction (O(tile) work/memory per task) → ``groupBy(comp-bucket)``
-    stitch over segments. Rings that close inside one tile skip straight
-    to index assignment. Pinch pairing is exact: interior vertices pair
+    extraction (O(tile) work and memory per task) → ``groupBy(comp
+    bucket)`` stitch over boundary *segments* (O(perimeter),
+    collinear-merged). Rings that close inside one tile skip straight to
+    index assignment. Pinch pairing is exact: interior vertices pair
     locally (all their edges are tile-local), lattice-line vertices defer
     to the stitcher, and both use the shared :func:`_take_next`
-    preference, so the edge-successor permutation — hence the ring
-    decomposition, canonical start vertices, ring order, and vertex
-    arrays — equals :func:`trace_rings` exactly (pinned by
-    tests/test_rasterize_polygonize.py equality tests).
+    preference. So the edge-successor permutation — hence the ring
+    decomposition, start vertices, ring order and vertex arrays — equals
+    the whole-component walk :func:`trace_cell_rings` exactly, whatever
+    the tile size (pinned by tests/test_rasterize_polygonize.py and
+    tests/test_property.py).
     """
     import pandas as pd
 
@@ -563,6 +388,7 @@ def trace_rings_tiled(
         for r, c, k in zip(own["row"], own["col"], own["comp"]):
             by_comp.setdefault(int(k), set()).add((int(r), int(c)))
         vals = dict(zip(own["comp"].astype("int64"), own["value"]))
+        vnans = dict(zip(own["comp"].astype("int64"), own["_vnan"]))
         rows = []
         for k, cells in sorted(by_comp.items()):
             edges: dict = {}
@@ -583,7 +409,8 @@ def trace_rings_tiled(
             for verts, n in chains:
                 rows.append(
                     {
-                        "comp": k, "value": vals[k], "kind": 0,
+                        "comp": k, "value": vals[k], "_vnan": vnans[k],
+                        "kind": 0,
                         "n_edges": n,
                         "vr": [p[0] for p in verts],
                         "vc": [p[1] for p in verts],
@@ -592,19 +419,21 @@ def trace_rings_tiled(
             for corners, n, _area in rings:
                 rows.append(
                     {
-                        "comp": k, "value": vals[k], "kind": 1,
+                        "comp": k, "value": vals[k], "_vnan": vnans[k],
+                        "kind": 1,
                         "n_edges": n,
                         "vr": [p[0] for p in corners],
                         "vc": [p[1] for p in corners],
                     }
                 )
-        cols = ["comp", "value", "kind", "n_edges", "vr", "vc"]
+        cols = ["comp", "value", "_vnan", "kind", "n_edges", "vr", "vc"]
         if rows:
             return pd.DataFrame(rows, columns=cols)
         return pd.DataFrame(
             {
                 "comp": pd.Series([], dtype="int64"),
                 "value": pd.Series([], dtype=own["value"].dtype),
+                "_vnan": pd.Series([], dtype="bool"),
                 "kind": pd.Series([], dtype="int32"),
                 "n_edges": pd.Series([], dtype="int64"),
                 "vr": pd.Series([], dtype="object"),
@@ -616,6 +445,7 @@ def trace_rings_tiled(
         out_rows = []
         for comp, cpdf in bdf.groupby("comp", sort=True):
             value = cpdf["value"].iloc[0]
+            vnan = cpdf["_vnan"].iloc[0]
             rings = []
             segs = []
             for kind, vr, vc, n in zip(
@@ -637,14 +467,15 @@ def trace_rings_tiled(
                     oys = [float(p[0]) for p in merged]
                 out_rows.append(
                     {
-                        "comp": int(comp), "value": value, "ring_idx": idx,
+                        "comp": int(comp), "value": value, "_vnan": vnan,
+                        "ring_idx": idx,
                         "is_hole": area < 0, "n_vertices": len(merged),
                         "n_edges": n_edges, "area": abs(area),
                         "xs": oxs, "ys": oys,
                     }
                 )
         cols = [
-            "comp", "value", "ring_idx", "is_hole", "n_vertices",
+            "comp", "value", "_vnan", "ring_idx", "is_hole", "n_vertices",
             "n_edges", "area", "xs", "ys",
         ]
         if out_rows:
@@ -653,6 +484,7 @@ def trace_rings_tiled(
             {
                 "comp": pd.Series([], dtype="int64"),
                 "value": pd.Series([], dtype=bdf["value"].dtype),
+                "_vnan": pd.Series([], dtype="bool"),
                 "ring_idx": pd.Series([], dtype="int32"),
                 "is_hole": pd.Series([], dtype="bool"),
                 "n_vertices": pd.Series([], dtype="int64"),
@@ -664,7 +496,10 @@ def trace_rings_tiled(
         )
 
     vt = comps.schema["value"].dataType.simpleString()
-    base = comps.select("row", "col", "value", "comp")
+    value, vnan = _flag_nan(F.col("value"), vt)
+    base = comps.select(
+        "row", "col", value.alias("value"), vnan.alias("_vnan"), "comp"
+    )
     tr = F.floor(F.col("row") / TR).cast("long")
     tc = F.floor(F.col("col") / TC).cast("long")
     # own copy + up-to-4 halo copies (1-cell strips; membership tests use
@@ -675,7 +510,7 @@ def trace_rings_tiled(
     )
     null_copy = F.lit(None).cast("struct<_tr:bigint,_tc:bigint,_own:boolean>")
     scattered = base.select(
-        "row", "col", "value", "comp",
+        "row", "col", "value", "_vnan", "comp",
         F.explode(
             F.filter(
                 F.array(
@@ -688,23 +523,29 @@ def trace_rings_tiled(
                 lambda x: x.isNotNull(),
             )
         ).alias("_t"),
-    ).select("row", "col", "value", "comp", "_t._tr", "_t._tc", "_t._own")
+    ).select(
+        "row", "col", "value", "_vnan", "comp", "_t._tr", "_t._tc", "_t._own"
+    )
     seg_schema = (
-        f"comp bigint, value {vt}, kind int, n_edges bigint, "
+        f"comp bigint, value {vt}, _vnan boolean, kind int, n_edges bigint, "
         "vr array<bigint>, vc array<bigint>"
     )
     segments = scattered.groupBy("_tr", "_tc").applyInPandas(
         tile_kernel, seg_schema
     )
     ring_schema = (
-        f"comp bigint, value {vt}, ring_idx int, is_hole boolean, "
-        "n_vertices bigint, n_edges bigint, area double, "
+        f"comp bigint, value {vt}, _vnan boolean, ring_idx int, "
+        "is_hole boolean, n_vertices bigint, n_edges bigint, area double, "
         "xs array<double>, ys array<double>"
     )
     bucketed = segments.withColumn(
-        "_bkt", F.pmod(F.xxhash64(F.col("comp")), F.lit(int(n_buckets)))
+        "_bkt", F.pmod(F.xxhash64(F.col("comp")), F.lit(_STITCH_BUCKETS))
     )
-    return bucketed.groupBy("_bkt").applyInPandas(stitch_kernel, ring_schema)
+    rings = bucketed.groupBy("_bkt").applyInPandas(stitch_kernel, ring_schema)
+    return rings.select(
+        "comp", _restore_nan(vt).alias("value"), "ring_idx", "is_hole",
+        "n_vertices", "n_edges", "area", "xs", "ys",
+    )
 
 
 def connected_components_tiled(
@@ -713,8 +554,17 @@ def connected_components_tiled(
     tile_rows: int = 64,
     tile_cols: int = 64,
     max_iter: int = 30,
+    *,
+    connectivity: int = 4,
 ) -> DataFrame:
-    """Two-phase connected components — the at-scale formulation.
+    """Label connected same-valued regions (``array_to_polygon``).
+
+    ``cells`` needs (row, col, ``value_col``). Returns (row, col, value,
+    comp), where ``comp`` is the min cell key ``row·2^32+col`` of the
+    cell's component. ``connectivity`` is 4 (edge neighbours) or 8 (edge
+    and corner neighbours), as in ``rasterio.features.shapes``. Two cells
+    are the same class when their values are equal; all NaN cells form
+    one class and NULL cells stay singletons.
 
     Phase 1 (no global rounds): ``groupBy(tile).applyInPandas`` runs a
     local union-find per tile, labeling every cell with the min cell key
@@ -728,34 +578,26 @@ def connected_components_tiled(
     :func:`geowombat_spark.pipeline.dedup.dedup_groups` (min-label +
     pointer jumping) resolves them over the LABEL graph. Cells then join
     the label→component map (broadcast-able: one row per local component,
-    not per cell).
-
-    Same output contract as :func:`connected_components` (comp = min cell
-    key ``row·2^32+col`` of the global component), so callers and oracles
-    are interchangeable; the iterative cell-graph loop remains for
-    reference/fallback.
+    not per cell). A cell with a neighbour in another tile — edge or
+    corner — is always on its tile's edge, so only border cells scatter.
     """
     import numpy as np
     import pandas as pd
 
-    # NaN handling must match the plain cell-graph formulation, whose
-    # Spark equi-joins treat NaN = NaN as TRUE (one NaN class) and
-    # NULL = NULL as FALSE (NULL cells stay singletons). Neither survives
-    # a Python kernel naively: numpy NaN != NaN would fragment the NaN
-    # class intra-tile, and the Arrow round trip folds NaN into NULL. So
-    # NaN-ness travels as an explicit flag (`_vnan`), the value column is
-    # NULLed for NaN cells on the way in, and the original NaN is
-    # reconstructed on the way out.
+    if connectivity not in (4, 8):
+        raise ValueError(f"connectivity must be 4 or 8, got {connectivity!r}")
+    # numpy NaN != NaN would fragment the NaN class intra-tile, and the
+    # Arrow round trip folds NaN into NULL: NaN-ness travels as `_vnan`
     vt = cells.schema[value_col].dataType.simpleString()
-    is_float = vt in ("float", "double")
-    vexpr = F.col(value_col)
-    vnan = F.isnan(vexpr) if is_float else F.lit(False)
+    value, vnan = _flag_nan(F.col(value_col), vt)
+    # forward neighbours: each unordered adjacency is unioned once
+    forward = [(1, 0), (0, 1)]
+    if connectivity == 8:
+        forward += [(1, 1), (1, -1)]
     src = cells.select(
         "row",
         "col",
-        (
-            F.nanvl(vexpr, F.lit(None).cast(vt)) if is_float else vexpr
-        ).alias("value"),
+        value.alias("value"),
         vnan.alias("_vnan"),
         (F.floor(F.col("row") / tile_rows) * F.lit(1 << 20)
          + F.floor(F.col("col") / tile_cols)).alias("_tile"),
@@ -791,8 +633,8 @@ def connected_components_tiled(
 
         for i in range(len(pdf)):
             r, c = int(rows[i]), int(cols[i])
-            for nr, nc in ((r + 1, c), (r, c + 1)):
-                j = key_of.get((nr, nc))
+            for dr, dc in forward:
+                j = key_of.get((r + dr, c + dc))
                 # same-class test: NaN cells (flagged) all match each
                 # other; genuine NULLs never match anything, whatever the
                 # storage type (float NULL→NaN, object NULL→None)
@@ -831,14 +673,14 @@ def connected_components_tiled(
         | (F.col("col") % tile_cols == tile_cols - 1)
     )
     border = labeled.filter(on_border)
+    row, col = F.col("row"), F.col("col")
+    up, down, left, right = row - 1, row + 1, col - 1, col + 1
+    nbrs = [(down, col), (up, col), (row, right), (row, left)]
+    if connectivity == 8:
+        nbrs += [(down, right), (down, left), (up, right), (up, left)]
     contrib = border.select(
         F.explode(
-            F.array(
-                F.struct((F.col("row") + 1).alias("row"), F.col("col").alias("col")),
-                F.struct((F.col("row") - 1).alias("row"), F.col("col").alias("col")),
-                F.struct(F.col("row").alias("row"), (F.col("col") + 1).alias("col")),
-                F.struct(F.col("row").alias("row"), (F.col("col") - 1).alias("col")),
-            )
+            F.array(*[F.struct(r.alias("row"), c.alias("col")) for r, c in nbrs])
         ).alias("tgt"),
         F.col("value").alias("_cval"),
         F.col("_vnan").alias("_cvnan"),
@@ -875,19 +717,10 @@ def connected_components_tiled(
     groups = dedup_groups(edges, max_iter=max_iter).withColumnsRenamed(
         {"doc_id": "label", "group_id": "comp"}
     )
-    # reconstruct NaN for the cells whose value was NULLed on the way in
-    # (output fidelity: the plain path emits NaN, not NULL, for NaN cells)
-    value_out = (
-        F.when(
-            F.col("_vnan"), F.lit(float("nan")).cast(vt)
-        ).otherwise(F.col("value"))
-        if is_float
-        else F.col("value")
-    )
     out = labeled.join(groups, "label", "left").select(
         "row",
         "col",
-        value_out.alias("value"),
+        _restore_nan(vt).alias("value"),
         F.coalesce("comp", "label").alias("comp"),
     )
     return out

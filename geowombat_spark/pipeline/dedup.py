@@ -1058,9 +1058,10 @@ def dedup_groups(
     candidate generation and actually deduplicating a corpus): connected
     components over the pair graph, survivor = the minimum member id.
 
-    Distributed min-label propagation with pointer jumping (the same
-    O(log diameter) loop as ``operators/polygonize.connected_components``,
-    re-expressed for an arbitrary id graph instead of a grid): each round
+    Distributed min-label propagation with pointer jumping (O(log
+    diameter) rounds; the same loop is the cross-tile merge of
+    ``operators/polygonize.connected_components_tiled``, run over a
+    grid's border label graph): each round
     every node adopts the minimum label in its neighborhood, then follows
     that label's own label. Rounds are single hash-join shuffles; lineage
     is truncated per round with ``localCheckpoint``.

@@ -316,7 +316,6 @@ def test_grouped_map_kernels_declare_their_eval_type(spark):
             lambda cube, times: cube[:1], ("first",), time_names=["t0"],
         )
         polygonize.connected_components_tiled(cells, "value", 2, 2)
-        polygonize.trace_rings(comps)
         polygonize.trace_rings_tiled(comps, tile_rows=2, tile_cols=2)
         dedup.embedding_neardup_pairs(emb, threshold=0.5, method="block")
         dedup.embedding_neardup_pairs(emb, threshold=0.5, method="cluster")

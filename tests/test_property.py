@@ -4,6 +4,7 @@ property-based testing exists upstream; these pin the algebraic invariants
 the golden values sample)."""
 
 import numpy as np
+from cc_reference import components
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -138,34 +139,9 @@ def test_ring_tracer_satisfies_euler_topology(seed, h, w, density):
 
     rng = np.random.default_rng(seed)
     grid = rng.random((h, w)) < density
+    on = {(r, c) for r in range(h) for c in range(w) if grid[r, c]}
 
-    # local CC (independent union-find)
-    parent = {}
-
-    def find(a):
-        while parent[a] != a:
-            parent[a] = parent[parent[a]]
-            a = parent[a]
-        return a
-
-    for r in range(h):
-        for c in range(w):
-            if grid[r, c]:
-                parent[(r, c)] = (r, c)
-    for r in range(h):
-        for c in range(w):
-            if not grid[r, c]:
-                continue
-            for nr, nc in ((r + 1, c), (r, c + 1)):
-                if (nr, nc) in parent:
-                    ra, rb = find((r, c)), find((nr, nc))
-                    if ra != rb:
-                        parent[max(ra, rb)] = min(ra, rb)
-    comps = {}
-    for cell in parent:
-        comps.setdefault(find(cell), set()).add(cell)
-
-    for cells in comps.values():
+    for cells in components(on):  # independent union-find
         C = len(cells)
         A = sum(
             1
@@ -264,26 +240,8 @@ def test_tiled_tracer_equals_single_task_tracer(seed, h, w, density, tile):
     cells = {(r, c) for r in range(h) for c in range(w) if grid[r, c]}
     if not cells:
         return
-    # per 4-connected component (same local union-find as the Euler test)
-    parent = {cell: cell for cell in cells}
-
-    def find(a):
-        while parent[a] != a:
-            parent[a] = parent[parent[a]]
-            a = parent[a]
-        return a
-
-    for (r, c) in cells:
-        for n in ((r + 1, c), (r, c + 1)):
-            if n in cells:
-                ra, rb = find((r, c)), find(n)
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
-    comps = {}
-    for cell in cells:
-        comps.setdefault(find(cell), set()).add(cell)
-
-    for comp_cells in comps.values():
+    # per 4-connected component (same union-find as the Euler test)
+    for comp_cells in components(cells):
         a = trace_cell_rings(comp_cells)
         b = _tiled_rings_pure(comp_cells, *tile)
         assert a == b, (comp_cells, tile)

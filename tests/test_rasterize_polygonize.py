@@ -2,6 +2,8 @@
 — reference semantics: ``conversion.py:570-833`` (later feature wins,
 center containment) and ``conversion.py:495-568`` (4/8-connectivity)."""
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -116,47 +118,61 @@ def _cells(spark, arr):
 def test_components_two_halves(spark):
     arr = np.zeros((6, 6), dtype=np.int64)
     arr[:, 3:] = 1
-    comps = pz.connected_components(_cells(spark, arr), "value")
+    comps = pz.connected_components_tiled(_cells(spark, arr), "value")
     s = pz.region_summary(comps).toPandas()
     assert len(s) == 2
     assert sorted(s["n_cells"]) == [18, 18]
 
 
 def test_components_diagonal_not_connected_4(spark):
-    # two same-valued cells touching only diagonally
+    # two same-valued cells touching only diagonally; at tile 1x1 and 2x2
+    # the diagonal pair crosses a tile corner
+    from geowombat_spark import api
+
     arr = np.zeros((4, 4), dtype=np.int64)
     arr[1, 1] = 1
     arr[2, 2] = 1
-    comps = pz.connected_components(_cells(spark, arr), "value", connectivity=4)
-    s = pz.region_summary(comps).toPandas()
-    ones = s[s["value"] == 1]
-    assert len(ones) == 2  # separate under 4-connectivity
-    comps8 = pz.connected_components(_cells(spark, arr), "value", connectivity=8)
-    s8 = pz.region_summary(comps8).toPandas()
-    assert len(s8[s8["value"] == 1]) == 1  # joined under 8-connectivity
+    for tile in (64, 1, 2):
+        comps = pz.connected_components_tiled(
+            _cells(spark, arr), "value", tile, tile, connectivity=4
+        )
+        s = pz.region_summary(comps).toPandas()
+        ones = s[s["value"] == 1]
+        assert len(ones) == 2, tile  # separate under 4-connectivity
+        comps8 = api.array_to_polygon(
+            _cells(spark, arr), "value", tile, tile, connectivity=8
+        )
+        s8 = pz.region_summary(comps8).toPandas()
+        assert len(s8[s8["value"] == 1]) == 1, tile  # joined under 8
+    with pytest.raises(ValueError, match="connectivity"):
+        api.array_to_polygon(_cells(spark, arr), "value", connectivity=6)
 
 
 def test_components_snake(spark):
-    # an S-shaped path: pointer jumping must still converge to one label
+    # an S-shaped path: pointer jumping must still converge to one label;
+    # at tile 1x1 and 2x2 every step of the path is a cross-tile merge
     arr = np.zeros((5, 5), dtype=np.int64)
     path = [(0, 0), (0, 1), (0, 2), (1, 2), (2, 2), (2, 1), (2, 0), (3, 0), (4, 0)]
     for r, c in path:
         arr[r, c] = 7
-    comps = pz.connected_components(_cells(spark, arr), "value")
-    s = pz.region_summary(comps).toPandas()
-    seven = s[s["value"] == 7]
-    assert len(seven) == 1
-    assert int(seven["n_cells"].iloc[0]) == len(path)
+    for tile in (64, 1, 2):
+        comps = pz.connected_components_tiled(
+            _cells(spark, arr), "value", tile, tile
+        )
+        s = pz.region_summary(comps).toPandas()
+        seven = s[s["value"] == 7]
+        assert len(seven) == 1, tile
+        assert int(seven["n_cells"].iloc[0]) == len(path)
 
 
 # ---------------------------------------------------------------------------
-# trace_rings
+# trace_rings_tiled
 # ---------------------------------------------------------------------------
 
 
 def _rings_for(spark, cells, value=1):
     import pandas as pd
-    from geowombat_spark.operators.polygonize import trace_rings
+    from geowombat_spark.operators.polygonize import trace_rings_tiled
 
     pdf = pd.DataFrame(
         {
@@ -167,7 +183,7 @@ def _rings_for(spark, cells, value=1):
         }
     )
     df = spark.createDataFrame(pdf)
-    return trace_rings(df).orderBy("ring_idx").collect()
+    return trace_rings_tiled(df).orderBy("ring_idx").collect()
 
 
 def test_trace_single_cell(spark):
@@ -225,28 +241,106 @@ def test_trace_diagonal_pinch_single_ring(spark):
     assert corners.count((2.0, 2.0)) == 2
 
 
-def test_trace_max_cells_guard(spark):
+def test_trace_square_block(spark):
     rings = _rings_for(spark, [(r, c) for r in range(4) for c in range(4)])
     assert len(rings) == 1 and rings[0]["n_vertices"] == 4
-    import pandas as pd
-    from geowombat_spark.operators.polygonize import trace_rings
 
-    pdf = pd.DataFrame(
-        {"row": [0, 0, 1, 1], "col": [0, 1, 0, 1], "value": 1, "comp": 0}
+
+def test_trace_rings_tiled_task_bound(spark):
+    """A small version of tools/rings_scale_probe.py: a 4-cell frame
+    around a 24x24 interior on a 32x32 raster, traced at tile 8. Both
+    components span many tiles, yet no task is keyed by component before
+    the tile walk: the only exchange under the tile stage hash-partitions
+    on the tile key, so every tile task holds at most one tile plus its
+    halo strips. Every ring quantity has a closed form."""
+    side, t, tile = 32, 4, 8
+    inner = side - 2 * t
+    on_frame = (
+        (F.col("row") < t) | (F.col("row") >= side - t)
+        | (F.col("col") < t) | (F.col("col") >= side - t)
     )
-    out = trace_rings(spark.createDataFrame(pdf), max_cells=2).collect()
-    assert len(out) == 1 and out[0]["ring_idx"] == -1
+    comp_inner = t * (1 << 32) + t
+    comps = spark.range(side * side).select(
+        F.expr(f"id div {side}").alias("row"),
+        (F.col("id") % side).alias("col"),
+    ).select(
+        "row", "col",
+        F.when(on_frame, 1).otherwise(0).cast("long").alias("value"),
+        F.when(on_frame, F.lit(0)).otherwise(F.lit(comp_inner)).alias("comp"),
+    )
+    rings = pz.trace_rings_tiled(comps, tile_rows=tile, tile_cols=tile)
+
+    lines = rings._jdf.queryExecution().executedPlan().toString().splitlines()
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    top = next(
+        i for i, ln in enumerate(lines)
+        if "FlatMapGroupsInPandas" in ln and "_tr#" in ln
+    )
+    below = []
+    for ln in lines[top + 1:]:
+        if depth(ln) <= depth(lines[top]):
+            break
+        below.append(ln)
+    exchanges = [ln.strip(" :+-") for ln in below if "Exchange" in ln]
+    assert len(exchanges) == 1, "\n".join(lines)
+    assert re.match(r"Exchange hashpartitioning\(_tr#\d+L, _tc#\d+L, ",
+                    exchanges[0]), exchanges[0]
+
+    got = {(r["comp"], r["ring_idx"]): r for r in rings.collect()}
+    assert sorted(got) == [(0, 0), (0, 1), (comp_inner, 0)]
+    want = {
+        (0, 0): (False, 4 * side, side * side,
+                 [(0, 0), (0, side), (side, side), (side, 0)]),
+        (0, 1): (True, 4 * inner, inner * inner,
+                 [(t, t), (side - t, t), (side - t, side - t), (t, side - t)]),
+        (comp_inner, 0): (False, 4 * inner, inner * inner,
+                          [(t, t), (t, side - t), (side - t, side - t),
+                           (side - t, t)]),
+    }
+    for key, (is_hole, n_edges, area, corners) in want.items():
+        r = got[key]
+        assert r["is_hole"] == is_hole, key
+        assert r["n_vertices"] == 4 and r["n_edges"] == n_edges, key
+        assert r["area"] == float(area), key
+        assert list(zip(r["ys"], r["xs"])) == [
+            (float(y), float(x)) for y, x in corners
+        ], key
+
+
+def test_trace_rings_nan_class_keeps_nan(spark):
+    """A NaN class traces to rings whose value is NaN, and a genuine NULL
+    cell to rings whose value is NULL: the Arrow round trip through the
+    tracer's kernels must not fold the one into the other. Built from
+    Python tuples: createDataFrame(pandas) folds NaN into NULL on
+    ingestion."""
+    nan = float("nan")
+    df = spark.createDataFrame(
+        [
+            (r, c, nan if r < 2 else None if (r, c) == (3, 3) else 1.0)
+            for r in range(4)
+            for c in range(4)
+        ],
+        "row long, col long, value double",
+    )
+    for tile in (2, 64):
+        comps = pz.connected_components_tiled(df, "value", tile, tile)
+        rings = pz.trace_rings_tiled(comps, tile_rows=tile, tile_cols=tile)
+        got = {r["comp"]: r["value"] for r in rings.collect()}
+        assert len(got) == 3, (tile, got)
+        assert got[0] is not None and np.isnan(got[0]), (tile, got)
+        assert got[(3 << 32) + 3] is None, (tile, got)
+        assert got[2 << 32] == 1.0, (tile, got)
 
 
 def test_tiled_cc_matches_iterative(spark):
-    """Two-phase (tile-local union-find + boundary label merge) CC must
-    produce the identical labeling to the iterative cell-graph loop."""
-    import numpy as np
-    import pandas as pd
-    from geowombat_spark.operators.polygonize import (
-        connected_components,
-        connected_components_tiled,
-    )
+    """Two-phase (tile-local union-find + border label merge) CC must
+    produce the same labeling as a whole-raster union-find, for 4- and
+    8-connectivity, whether the tiles are larger or smaller than the
+    components."""
+    from cc_reference import label_components
 
     rng = np.random.default_rng(5)
     rr, cc = np.meshgrid(np.arange(40), np.arange(40), indexing="ij")
@@ -258,32 +352,32 @@ def test_tiled_cc_matches_iterative(spark):
         }
     )
     df = spark.createDataFrame(pdf)
-    a = {
-        (r["row"], r["col"]): r["comp"]
-        for r in connected_components(df, "value").collect()
+    values = {
+        (int(r), int(c)): int(v)
+        for r, c, v in zip(pdf["row"], pdf["col"], pdf["value"])
     }
-    b = {
-        (r["row"], r["col"]): r["comp"]
-        for r in connected_components_tiled(
-            df, "value", tile_rows=16, tile_cols=16
-        ).collect()
-    }
-    assert a == b
+    for connectivity in (4, 8):
+        want = {
+            cell: (r0 << 32) + c0
+            for cell, (r0, c0) in label_components(values, connectivity).items()
+        }
+        for tr, tc in ((16, 16), (3, 5)):
+            got = {
+                (r["row"], r["col"]): r["comp"]
+                for r in pz.connected_components_tiled(
+                    df, "value", tile_rows=tr, tile_cols=tc,
+                    connectivity=connectivity,
+                ).collect()
+            }
+            assert got == want, (connectivity, tr, tc)
 
 
 def test_tiled_cc_nan_parity(spark):
-    """NaN-valued cells must behave identically in both formulations:
-    Spark's equi-joins treat NaN = NaN as TRUE (one NaN class) and
-    NULL = NULL as FALSE (NULL cells stay singletons). The tiled kernel's
-    numpy comparison and the Arrow NaN→NULL fold would otherwise fragment
-    the NaN class into per-cell singletons and corrupt the value column."""
-    import numpy as np
-    import pandas as pd
-    from geowombat_spark.operators.polygonize import (
-        connected_components,
-        connected_components_tiled,
-    )
-
+    """NaN-valued cells form one class (NaN = NaN) and NULL cells stay
+    singletons (NULL never equals anything), whatever the tiling. The
+    tiled kernel's numpy comparison and the Arrow NaN→NULL fold would
+    otherwise fragment the NaN class into per-cell singletons and corrupt
+    the value column."""
     # 4x4 raster: top 2 rows NaN (one class), bottom 2 rows value 1.0.
     # Built from Python tuples: createDataFrame(pandas) folds NaN into
     # NULL on ingestion, which would silently test the NULL path twice.
@@ -295,27 +389,26 @@ def test_tiled_cc_nan_parity(spark):
         ],
         "row long, col long, value double",
     )
-    a = {
-        (r["row"], r["col"]): r["comp"]
-        for r in connected_components(df, "value").collect()
-    }
-    got = connected_components_tiled(
+    got = pz.connected_components_tiled(
         df, "value", tile_rows=2, tile_cols=2
     ).collect()
     b = {(r["row"], r["col"]): r["comp"] for r in got}
-    assert a == b
+    # comp = min cell key: (0, 0) for the NaN rows, (2, 0) for the 1.0 rows
+    assert b == {
+        (r, c): 0 if r < 2 else 2 << 32 for r in range(4) for c in range(4)
+    }
     assert len(set(b.values())) == 2  # one NaN component + one 1.0 component
     # value fidelity through the Python kernel: NaN out, never NULL
     vmap = {(r["row"], r["col"]): r["value"] for r in got}
     assert all(v is not None for v in vmap.values())
     assert np.isnan(vmap[(0, 0)]) and vmap[(3, 3)] == 1.0
 
-    # genuine NULLs never union — matching the plain path's equi-join
+    # genuine NULLs never union
     df2 = spark.createDataFrame(
         [(0, 0, None), (0, 1, None), (1, 0, 2.0), (1, 1, 2.0)],
         "row long, col long, value double",
     )
-    tiled2 = connected_components_tiled(df2, "value", 2, 2).collect()
+    tiled2 = pz.connected_components_tiled(df2, "value", 2, 2).collect()
     comps_null = {r["comp"] for r in tiled2 if r["value"] is None}
     comps_two = {r["comp"] for r in tiled2 if r["value"] == 2.0}
     assert len(comps_null) == 2  # NULL cells stay singletons
@@ -332,7 +425,7 @@ def test_tiled_cc_nan_parity(spark):
         "row long, col long, value string",
     )
     for tr, tc in ((2, 2), (1, 1)):
-        t = connected_components_tiled(df3, "value", tr, tc).collect()
+        t = pz.connected_components_tiled(df3, "value", tr, tc).collect()
         nulls = {r["comp"] for r in t if r["value"] is None}
         strs = {r["comp"] for r in t if r["value"] == "a"}
         assert len(nulls) == 2, (tr, tc)  # NULL strings stay singletons
@@ -340,30 +433,56 @@ def test_tiled_cc_nan_parity(spark):
 
 
 # ---------------------------------------------------------------------------
-# trace_rings_tiled: identical output to the single-task tracer
+# trace_rings_tiled: identical output to the whole-component walk
 # ---------------------------------------------------------------------------
 
 
-def _canon_rings(df):
-    pdf = df.toPandas().copy()
+def _canon_rings(pdf):
+    pdf = pdf.copy()
     pdf["xs"] = pdf["xs"].apply(tuple)
     pdf["ys"] = pdf["ys"].apply(tuple)
     return pdf.sort_values(["comp", "ring_idx"], ignore_index=True)
 
 
+def _single_task_rings(comps, grid=None):
+    """trace_cell_rings applied per component of ``comps.toPandas()``,
+    mapped to trace_rings_tiled's columns and (col, row) → map grid."""
+    from geowombat_spark.operators.polygonize import trace_cell_rings
+
+    g = grid.as_dict() if grid is not None else None
+    rows = []
+    for comp, cpdf in comps.toPandas().groupby("comp", sort=True):
+        cells = set(zip(cpdf["row"].astype(int), cpdf["col"].astype(int)))
+        rings = trace_cell_rings(cells)
+        for idx, (corners, n_edges, area) in enumerate(rings):
+            if g is not None:
+                xs = [g["left"] + p[1] * g["cellx"] for p in corners]
+                ys = [g["top"] - p[0] * g["celly"] for p in corners]
+            else:
+                xs = [float(p[1]) for p in corners]
+                ys = [float(p[0]) for p in corners]
+            rows.append(
+                {
+                    "comp": int(comp), "value": cpdf["value"].iloc[0],
+                    "ring_idx": idx, "is_hole": area < 0,
+                    "n_vertices": len(corners), "n_edges": n_edges,
+                    "area": abs(area), "xs": xs, "ys": ys,
+                }
+            )
+    return _canon_rings(pd.DataFrame(rows))
+
+
 @pytest.mark.parametrize("tr,tc", [(1, 1), (2, 2), (3, 5), (16, 16)])
 def test_trace_rings_tiled_equals_single_task(spark, tr, tc):
-    """The tile-stitched tracer must reproduce trace_rings EXACTLY —
-    decomposition, canonical start vertices, ring order, vertex arrays —
-    for every tile size, including 1x1 (pure stitcher) and tiles larger
-    than the raster (pure local walk). The fixture packs the hard cases:
-    a multi-component random field, a hole, and the diagonal-pinch cavity
-    whose pinch vertex lands on tile lattice lines."""
-    import numpy as np
-    import pandas as pd
+    """The tile-stitched tracer must reproduce the whole-component walk
+    (trace_cell_rings) EXACTLY — decomposition, canonical start vertices,
+    ring order, vertex arrays — for every tile size, including 1x1 (pure
+    stitcher) and tiles larger than the raster (pure local walk). The
+    fixture packs the hard cases: a multi-component random field, a hole,
+    and the diagonal-pinch cavity whose pinch vertex lands on tile lattice
+    lines."""
     from geowombat_spark.operators.polygonize import (
         connected_components_tiled,
-        trace_rings,
         trace_rings_tiled,
     )
 
@@ -380,20 +499,17 @@ def test_trace_rings_tiled_equals_single_task(spark, tr, tc):
     ] = 7
     df = spark.createDataFrame(pdf)
     comps = connected_components_tiled(df, "value").localCheckpoint()
-    a = _canon_rings(trace_rings(comps))
-    b = _canon_rings(trace_rings_tiled(comps, tile_rows=tr, tile_cols=tc))
+    a = _single_task_rings(comps)
+    b = _canon_rings(
+        trace_rings_tiled(comps, tile_rows=tr, tile_cols=tc).toPandas()
+    )
     pd.testing.assert_frame_equal(a, b, check_dtype=False)
 
 
 def test_trace_rings_tiled_grid_coords(spark):
-    """grid= maps ring vertices to map coordinates identically in both
-    tracers."""
-    import pandas as pd
-    from geowombat_spark.grid import GridSpec
-    from geowombat_spark.operators.polygonize import (
-        trace_rings,
-        trace_rings_tiled,
-    )
+    """grid= maps ring vertices to map coordinates identically in the
+    tiled tracer and the whole-component walk."""
+    from geowombat_spark.operators.polygonize import trace_rings_tiled
 
     g = GridSpec(
         left=100.0, top=-50.0, cellx=30.0, celly=30.0, nrows=8, ncols=8,
@@ -405,8 +521,10 @@ def test_trace_rings_tiled_grid_coords(spark):
          "value": 1, "comp": 0}
     )
     df = spark.createDataFrame(pdf)
-    a = _canon_rings(trace_rings(df, grid=g))
-    b = _canon_rings(trace_rings_tiled(df, grid=g, tile_rows=2, tile_cols=2))
+    a = _single_task_rings(df, grid=g)
+    b = _canon_rings(
+        trace_rings_tiled(df, grid=g, tile_rows=2, tile_cols=2).toPandas()
+    )
     pd.testing.assert_frame_equal(a, b, check_dtype=False)
     assert a["xs"].iloc[0][0] == 100.0 and a["ys"].iloc[0][0] == -50.0
 

@@ -1,5 +1,5 @@
 """Scale-evidence probe: ring tracing with a GIANT component spanning the
-whole raster — the skew case the per-component tracer cannot survive.
+whole raster — the skew case a per-component tracer cannot survive.
 
 Input: a 2048 x 2048 analytic raster (4.19M cells), two components only:
   - class 1: a 64-cell-thick square frame hugging the border — one
@@ -13,12 +13,14 @@ aligned squares), so correctness is asserted exactly at full scale:
          (4 corners, 4*1920 edges), area 2048^2 - 1920^2;
   interior: 1 exterior ring (4 corners, 4*1920 edges), area 1920^2.
 
-Skew evidence: with trace_rings (per-component groupBy), the interior
-component serializes ALL 3.69M cells into ONE task. trace_rings_tiled
-bounds every tile task by the tile area (16,384 cells) and ships only
-O(perimeter) collinear-merged segments to the stitcher — the largest
-stitcher input here is ~120 corner vertices. The probe prints both wall
-times and the per-task data bounds.
+Skew evidence: a tracer grouped by component would serialize ALL 3.69M
+interior cells into ONE task. trace_rings_tiled bounds every tile task by
+the tile area plus halo strips (16,896 cells) and ships only
+O(perimeter) collinear-merged segments to the stitcher — the stitcher
+input here is 12 corner vertices. The probe prints the wall time and the
+per-task data bounds.
+
+Run: python tools/rings_scale_probe.py (a local[16] session).
 """
 import os
 import sys
@@ -28,7 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from geowombat_spark.sources.tables import get_spark
-from geowombat_spark.operators.polygonize import trace_rings, trace_rings_tiled
+from geowombat_spark.operators.polygonize import trace_rings_tiled
 
 SIDE = 2048
 T = 64           # frame thickness (cells)
@@ -83,20 +85,10 @@ n_tiles = (SIDE // TILE) ** 2
 stitch_corners = sum(r["n_vertices"] for r in rows.values())
 max_tile_cells = TILE * TILE + 4 * TILE  # own + 4 halo strips
 
-# the single-task tracer for comparison: the interior component's 3.69M
-# cells land in ONE applyInPandas task
-t1 = time.time()
-single = trace_rings(comps)
-n_single = single.count()
-t_single = time.time() - t1
-assert n_single == 3
-
 print(
     f"RESULT cells={n} tiles={n_tiles} rings=3 violations=0 "
     f"giant_comp_cells={INNER * INNER} "
     f"tiled: wall={t_tiled:.1f}s max_task_cells={max_tile_cells} "
-    f"stitch_input_corners={stitch_corners} | "
-    f"single-task: wall={t_single:.1f}s max_task_cells={INNER * INNER} "
-    f"speedup={t_single / t_tiled:.2f}x"
+    f"stitch_input_corners={stitch_corners}"
 )
 spark.stop()
