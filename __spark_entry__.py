@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from geowombat_spark.grid import GridSpec, round_window
+from geowombat_spark.grid import GridSpec, encode_cells, round_window
 from geowombat_spark.operators import extract as ex
 from geowombat_spark.operators import focal, knn, mosaic, sample, sops, temporal
 from geowombat_spark.functions import vi
@@ -78,7 +78,7 @@ def grid_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # encode_cells re-derives row/col (identical values — centers truncate
     # back) and adds the Z-order cell_id + tile partition key.
-    return ex.encode_cells(d.drop("row", "col"), GRID)
+    return encode_cells(d.drop("row", "col"), GRID)
 
 
 # The SQL mirror of grid_docs (DuckDB dialect, integer div via //).

@@ -134,10 +134,7 @@ def synth_corpus(spark: SparkSession, n_docs: int):
                     F.lit(1).cast("int").alias("offset"),
                 ),
             ),
-            "tile_id": (
-                F.expr(f"row div {FLAG_TILE}") * grid.tiles_x
-                + F.expr(f"col div {FLAG_TILE}")
-            ).cast("long"),
+            "tile_id": F.expr(grid.tile_id_expr()),
         }
     )
     d = d.drop("_id")

@@ -36,9 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..grid import GridSpec
+from ..grid import GridSpec, sql_double
 from ..operators.focal import neighbour_aggregate, tap_offset
-from ..operators.sops import sql_double
 
 _METHODS = ("cos", "c", "empirical-rotation")
 

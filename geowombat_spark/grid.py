@@ -21,7 +21,10 @@ Reference parity notes (all paths cite /root/reference):
   ``src/geowombat/core/util.py:533-536``).
 
 Everything here is vectorized numpy so it runs unchanged on the driver or
-inside Arrow-batched pandas UDFs on executors — no per-row Python.
+inside Arrow-batched pandas UDFs on executors — no per-row Python. The
+DataFrame-side cell encoder (:func:`encode_cells`, with
+:func:`with_zorder_column` and :meth:`GridSpec.tile_id_expr`) is the SQL
+twin of the numpy encode, run in the JVM.
 """
 
 from __future__ import annotations
@@ -39,6 +42,8 @@ __all__ = [
     "zorder_encode",
     "zorder_decode",
     "with_zorder_column",
+    "encode_cells",
+    "sql_double",
     "hilbert_encode",
     "hilbert_decode",
     "with_hilbert_column",
@@ -108,6 +113,15 @@ class GridSpec:
             np.asarray(row, dtype=np.int64) // self.tile_rows
         ) * self.tiles_x + np.asarray(col, dtype=np.int64) // self.tile_cols
 
+    def tile_id_expr(self, row: str = "row", col: str = "col") -> str:
+        """SQL twin of :meth:`tile_id` (``div`` truncates toward zero, so it
+        equals the floor division for the non-negative indices a grid
+        holds)."""
+        return (
+            f"(`{row}` div {self.tile_rows}) * {self.tiles_x}"
+            f" + `{col}` div {self.tile_cols}"
+        )
+
     def as_dict(self) -> dict:
         """Plain-dict form for shipping into UDF closures (small, picklable)."""
         return {
@@ -159,6 +173,41 @@ def coords_to_rowcol(
         col = np.clip(col, 0, grid.ncols - 1)
         row = np.clip(row, 0, grid.nrows - 1)
     return row, col
+
+
+def sql_double(x: float) -> str:
+    """``x`` as an exact Spark SQL double literal."""
+    x = float(x)
+    return f"{x!r}D" if np.isfinite(x) else f"CAST('{x!r}' AS DOUBLE)"
+
+
+def _clamped_index_sql(q: str, n: int) -> str:
+    """SQL for ``clip(q.astype(int64), 0, n - 1)``. numpy casts NaN, ±inf
+    and any ``|q| >= 2^63`` to INT64_MIN, which the clip maps to 0, where
+    an ANSI ``CAST`` would raise; the guard sends those (and NULL) to 0."""
+    lim = sql_double(2.0**63)
+    return (
+        f"CASE WHEN {q} > -{lim} AND {q} < {lim}"
+        f" THEN least(greatest(CAST({q} AS BIGINT), 0), {n - 1}) ELSE 0 END"
+    )
+
+
+def encode_cells(df, grid: GridSpec, x: str = "x", y: str = "y"):
+    """Executor-side cell encoding, all in the JVM: adds bigint ``row``,
+    ``col`` (:func:`coords_to_rowcol` with ``clamp=True``, bit for bit),
+    the Z-order ``cell_id`` and the ``tile_id`` partition key. A NULL
+    coordinate encodes to index 0, as a NaN does."""
+    from pyspark.sql import functions as F
+
+    qc = f"((`{x}` - {sql_double(grid.left)}) / {sql_double(grid.cellx)})"
+    qr = f"(({sql_double(grid.top)} - `{y}`) / {sql_double(grid.celly)})"
+    df = df.withColumns(
+        {
+            "row": F.expr(_clamped_index_sql(qr, grid.nrows)),
+            "col": F.expr(_clamped_index_sql(qc, grid.ncols)),
+        }
+    )
+    return with_zorder_column(df).withColumn("tile_id", F.expr(grid.tile_id_expr()))
 
 
 def rowcol_to_center_coords(

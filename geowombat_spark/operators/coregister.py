@@ -171,10 +171,7 @@ def detect_shifts(
     bounded tie-point grid exactly like AROSICS' ``COREG_LOCAL`` grid.
     """
     g = grid.as_dict()
-    tile = (
-        F.floor(F.col("row") / grid.tile_rows) * grid.tiles_x
-        + F.floor(F.col("col") / grid.tile_cols)
-    ).cast("long")
+    tile = F.expr(grid.tile_id_expr())
     src = docs.select(
         "row",
         "col",
@@ -345,10 +342,7 @@ def apply_shift_field(
         "dx": float(good_pdf["dx"].median()),
     }
     good = docs.sparkSession.createDataFrame(good_pdf)
-    tile = (
-        F.floor(F.col("row") / grid.tile_rows) * grid.tiles_x
-        + F.floor(F.col("col") / grid.tile_cols)
-    ).cast("long")
+    tile = F.expr(grid.tile_id_expr())
     lat = (
         docs.select("row", "col", tile.alias("tile"))
         .join(F.broadcast(good), "tile", "left")

@@ -5,8 +5,9 @@ AOI prep (reproject/clip, ``conversion.py:338-436``) → ``coords_to_indices``
 → clamp (``sops.py:836-844``) → fancy-gather → band columns (multi-time
 columns named ``f'{t}_{b}'``, ``sops.py:872-907``).
 
-Spark shape: encode AOI coords → ``cell_id`` (driver-side numpy when the AOI
-is small/driver-resident, Arrow pandas UDF when it is a DataFrame) →
+Spark shape: encode AOI coords → ``cell_id`` on the driver (numpy: the
+tile ids must be known before any job runs; ``grid.encode_cells`` is the
+JVM twin for DataFrames) →
 **tile-pruned scan** of the documents table → broadcast equi-join on
 ``cell_id`` → pivot bands over time. The join is the only shuffle, and with
 a broadcast AOI there is none at all: at 100 TB the plan is
@@ -134,46 +135,14 @@ def prepare_points(
 
 def encode_points_pdf(aoi: pd.DataFrame, grid: GridSpec) -> pd.DataFrame:
     """Driver-side cell encoding for a small AOI (the reference's AOI is
-    always driver-resident — ``prepare_points`` returns a GeoDataFrame)."""
+    always driver-resident — ``prepare_points`` returns a GeoDataFrame).
+    :func:`~..grid.encode_cells` is its bit-equal DataFrame twin."""
     out = aoi.copy()
     row, col = coords_to_rowcol(grid, out["x"].values, out["y"].values, clamp=True)
     out["row"], out["col"] = row, col
     out["cell_id"] = zorder_encode(row, col)
     out["tile_id"] = grid.tile_id(row, col)
     return out
-
-
-def encode_cells(df: DataFrame, grid: GridSpec, x: str = "x", y: str = "y") -> DataFrame:
-    """Executor-side cell encoding: one Arrow-batched pandas UDF, pure numpy
-    inside (``conversion.py:164-203`` semantics incl. truncation + clamp).
-    Use this when the AOI side is itself a big DataFrame."""
-    g = grid.as_dict()
-
-    @F.pandas_udf("struct<row:bigint,col:bigint,cell_id:bigint,tile_id:bigint>")
-    def _enc(xs: pd.Series, ys: pd.Series) -> pd.DataFrame:
-        gs = GridSpec(**g)
-        r, c = coords_to_rowcol(gs, xs.values, ys.values, clamp=True)
-        return pd.DataFrame(
-            {
-                "row": r,
-                "col": c,
-                "cell_id": zorder_encode(r, c),
-                "tile_id": gs.tile_id(r, c),
-            }
-        )
-
-    return (
-        df.withColumn("_cell", _enc(F.col(x), F.col(y)))
-        .withColumns(
-            {
-                "row": F.col("_cell.row"),
-                "col": F.col("_cell.col"),
-                "cell_id": F.col("_cell.cell_id"),
-                "tile_id": F.col("_cell.tile_id"),
-            }
-        )
-        .drop("_cell")
-    )
 
 
 def _prune_tiles(docs: DataFrame, tile_ids) -> DataFrame:

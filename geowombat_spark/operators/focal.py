@@ -45,8 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..grid import GridSpec
-from .sops import sql_double
+from ..grid import GridSpec, sql_double
 
 _STATS = ("mean", "min", "max", "var", "std", "perc", "sum", "expand")
 #: column types a hash aggregate can carry in its buffer

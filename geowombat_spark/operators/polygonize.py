@@ -373,6 +373,10 @@ def trace_rings_tiled(
     the whole-component walk :func:`trace_cell_rings` exactly, whatever
     the tile size (pinned by tests/test_rasterize_polygonize.py and
     tests/test_property.py).
+
+    Building this plan starts no job of its own, but a ``comps`` from
+    :func:`connected_components_tiled` has run jobs while it was built
+    (see there).
     """
     import pandas as pd
 
@@ -580,6 +584,12 @@ def connected_components_tiled(
     the label→component map (broadcast-able: one row per local component,
     not per cell). A cell with a neighbour in another tile — edge or
     corner — is always on its tile's edge, so only border cells scatter.
+
+    Building the returned frame runs Spark jobs: phase 1 is materialized
+    by an eager ``localCheckpoint()`` (phase 2 reads it several times),
+    and ``dedup_groups`` checkpoints and counts every round to test
+    convergence. The loop needs those actions; tests/test_plans.py pins
+    their number on a fixed field.
     """
     import numpy as np
     import pandas as pd

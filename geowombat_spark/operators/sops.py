@@ -27,6 +27,7 @@ from ..grid import (
     merge_runs,
     polygon_cover_runs,
     round_window,
+    sql_double,
 )
 
 BAND_COLS = ("band_blue", "band_green", "band_red")
@@ -73,12 +74,6 @@ def _feature_runs(
         polygon_cover_runs(rs, grid.cellx, grid.celly, all_touched, anchor)[2]
         for rs in polygons["rings"]
     ]
-
-
-def sql_double(x: float) -> str:
-    """``x`` as an exact Spark SQL double literal."""
-    x = float(x)
-    return f"{x!r}D" if np.isfinite(x) else f"CAST('{x!r}' AS DOUBLE)"
 
 
 def _with_cover_flag(

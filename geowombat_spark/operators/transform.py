@@ -252,7 +252,8 @@ def match_layout(df: DataFrame, grid: GridSpec, x: str = "x", y: str = "y") -> D
     table to another grid's tile/cell layout — re-encode under the target
     affine and repartition on the new tile key so downstream per-tile
     operators (focal, sinks) see the target chunking."""
-    from .extract import encode_cells, in_bounds_col
+    from ..grid import encode_cells
+    from .extract import in_bounds_col
 
     clean = df.drop("row", "col", "cell_id", "tile_id")
     # DROP rows outside the target extent first: the encoder's clamp

@@ -30,11 +30,29 @@ from .dedup import (  # noqa: F401  (round6 re-exported: cosine numerics)
 )
 
 
+#: every task receives the whole query side as one dense float64 matrix
+#: (10,000 queries x 1,024 dims is an 82 MB broadcast)
+MAX_QUERIES = 10_000
+
+
 def _normalize(mat: np.ndarray) -> np.ndarray:
     mat = np.asarray(mat, dtype=np.float64)
     n = np.linalg.norm(mat, axis=1)
     n[n == 0] = 1.0
     return mat / n[:, None]
+
+
+def _collect_queries(queries: DataFrame, id_col: str, vec_col: str):
+    """The query side as ``(ids, row-normalized matrix)``, in one job.
+    Raises ``ValueError`` past :data:`MAX_QUERIES` rows instead of pulling
+    an unbounded frame onto the driver."""
+    rows = queries.select(id_col, vec_col).limit(MAX_QUERIES + 1).collect()
+    if len(rows) > MAX_QUERIES:
+        raise ValueError(
+            f"more than MAX_QUERIES={MAX_QUERIES} query vectors; split the "
+            "queries into batches"
+        )
+    return np.asarray([r[0] for r in rows]), _normalize([r[1] for r in rows])
 
 
 def cosine_expr(emb_a, emb_b, dp: int | None = 6):
@@ -89,9 +107,7 @@ def brute_force_topk(
     # hardcoded bigint would crash string-id corpora in every batch
     id_type = corpus.schema[id_col].dataType.simpleString()
     qid_type = queries.schema[query_id_col].dataType.simpleString()
-    qrows = queries.select(query_id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in qrows])
-    q_mat = _normalize([r[1] for r in qrows])
+    q_ids, q_mat = _collect_queries(queries, query_id_col, vec_col)
     bq = spark.sparkContext.broadcast((q_ids, q_mat))
 
     def _score(it):
@@ -344,6 +360,7 @@ def ivf_topk(
     ``nprobe`` nearest clusters.
     """
     spark = corpus.sparkSession
+    q_ids, q_mat = _collect_queries(queries, id_col, vec_col)
     cents = train_corpus_centroids(corpus, nlist, id_col, vec_col)
     bc = spark.sparkContext.broadcast(cents)
     # derive the pass-through types from the input schema: hardcoding
@@ -371,9 +388,6 @@ def ivf_topk(
         _assign, f"{id_col} {id_type}, {vec_col} {vec_type}, cluster int"
     )
 
-    qrows = queries.select(id_col, vec_col).collect()
-    q_ids = np.asarray([r[0] for r in qrows])
-    q_mat = _normalize([r[1] for r in qrows])
     probes = np.argsort(-(q_mat @ cents.T), axis=1)[:, :nprobe]
     bq = spark.sparkContext.broadcast((q_ids, q_mat, probes))
 
@@ -501,6 +515,7 @@ def pq_topk(
 
     query_id_col = query_id_col or id_col
     spark = corpus.sparkSession
+    q_ids, q_mat = _collect_queries(queries, query_id_col, vec_col)
 
     # 1. bounded-sample codebook training (hash order — uncorrelated with
     #    id order, same rationale as ivf_topk's seeding)
@@ -517,9 +532,6 @@ def pq_topk(
 
     id_type = corpus.schema[id_col].dataType.simpleString()
     qid_type = queries.schema[query_id_col].dataType.simpleString()
-    qrows = queries.select(query_id_col, vec_col).collect()
-    q_ids = np.asarray([r[0] for r in qrows])
-    q_mat = _normalize([r[1] for r in qrows])
     # per-query ADC lookup tables: LUT[q, m, c] = ||q_sub - codeword||^2
     lut = np.stack(
         [

@@ -35,8 +35,10 @@ def get_spark(
 
     AQE on (runtime coalescing + skew-join splitting — the adaptive half of
     the skew story; the proactive half is salted repartitioning in
-    ``plans/checkpoint.py``), Arrow on (every geometry kernel is an
-    Arrow-batched pandas UDF).
+    ``plans/checkpoint.py``), Arrow on (the kernels that still run in
+    Python — ANN matmuls, FFTs, the per-tile union-find — are
+    Arrow-batched pandas UDFs; ``createDataFrame``/``toPandas`` use it
+    too).
     """
     b = (
         SparkSession.builder.appName(app)

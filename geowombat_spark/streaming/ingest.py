@@ -7,9 +7,9 @@ in-flight windowed write loop (``/root/reference/src/geowombat/core/io.py:
 - ``stream_documents``: a file-source stream of document parquet batches
   (at production scale: Kafka/Iceberg-CDC with the identical downstream
   plan — the source swap is one line).
-- ``encode_stream``: the same Arrow pandas-UDF cell encoder used by the
-  batch path (operators/extract.encode_cells works unchanged on streaming
-  DataFrames — one code path for both).
+- ``encode_stream``: the same JVM cell encoder as the batch path
+  (``grid.encode_cells`` is one SQL projection, so it works unchanged on
+  streaming DataFrames — one code path for both).
 - ``tile_rollup``: watermarked event-time windows × tile_id counts/means —
   late documents beyond the watermark are dropped deterministically.
 - ``write_stream_tiled``: appends into the tile-partitioned layout with a
@@ -26,8 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..grid import GridSpec
-from ..operators.extract import encode_cells
+from ..grid import GridSpec, encode_cells
 
 DOC_STREAM_SCHEMA = (
     "doc_id bigint, x double, y double, value double, event_ts timestamp"
@@ -48,7 +47,7 @@ def stream_documents(
 
 
 def encode_stream(stream: DataFrame, grid: GridSpec) -> DataFrame:
-    """Cell-encode a streaming frame — same pUDF as the batch path."""
+    """Cell-encode a streaming frame — the batch path's JVM encoder."""
     return encode_cells(stream, grid)
 
 

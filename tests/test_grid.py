@@ -460,3 +460,24 @@ def test_hilbert_column_matches_numpy(spark):
     out = with_hilbert_column(spark.createDataFrame(pdf), order=13).toPandas()
     expect = hilbert_encode(out["row"].values, out["col"].values, 13)
     assert (out["hilbert_id"].values == expect).all()
+
+
+def test_zorder_column_matches_numpy(spark):
+    """with_zorder_column (the JVM Z-order every encode and bench.py's
+    corpus use) equals zorder_encode on random indices up to 2^31 - 1 and
+    across the 32-bit truncation both apply (``& 0xFFFFFFFF``)."""
+    from geowombat_spark.grid import with_zorder_column
+
+    rng = np.random.default_rng(12)
+    edges = [0, 1, (1 << 16) - 1, 1 << 16, (1 << 31) - 1, 1 << 31,
+             (1 << 32) - 1, 1 << 32, (1 << 32) + 5, -1]
+    rows = np.concatenate([rng.integers(0, 1 << 31, 2000), np.repeat(edges, len(edges))])
+    cols = np.concatenate([rng.integers(0, 1 << 31, 2000), np.tile(edges, len(edges))])
+    df = spark.createDataFrame(
+        [(i, int(r), int(c)) for i, (r, c) in enumerate(zip(rows, cols))],
+        "i long, row long, col long",
+    )
+    enc = with_zorder_column(df)
+    assert dict(enc.dtypes)["cell_id"] == "bigint"
+    got = enc.orderBy("i").toPandas()
+    np.testing.assert_array_equal(got["cell_id"].to_numpy(), zorder_encode(rows, cols))

@@ -1,9 +1,13 @@
-"""file_bounds (get_file_bounds analogue) and match_layout (match_data)."""
+"""file_bounds (get_file_bounds analogue), match_layout (match_data) and
+the DataFrame cell encoder it re-keys with."""
 
+import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
-from geowombat_spark.grid import GridSpec
+from geowombat_spark.grid import L8_GRID, GridSpec, encode_cells
+from geowombat_spark.operators.extract import encode_points_pdf
 from geowombat_spark.operators import transform as tf
 from geowombat_spark.operators.mosaic import file_bounds
 
@@ -41,8 +45,6 @@ def test_match_layout_rekeys(spark):
         (-(F.expr("id div 10").cast("double") * 30.0 + 15.0)).alias("y"),
         F.col("id").alias("doc_id"),
     )
-    from geowombat_spark.operators.extract import encode_cells
-
     enc_src = encode_cells(docs, src)
     rekeyed = tf.match_layout(enc_src, dst)
     # same cells, different tile assignment density
@@ -56,6 +58,62 @@ def test_match_layout_rekeys(spark):
                     ncols=100, tile_rows=5, tile_cols=5, nodata=0.0)
     rk5 = tf.match_layout(enc_src, dst5)
     assert rk5.select("tile_id").distinct().count() == 4
+
+
+ENCODE_GRIDS = {
+    "square_tile16": GridSpec(left=0.0, top=0.0, cellx=30.0, celly=30.0,
+                              nrows=100, ncols=100, tile_rows=16, tile_cols=16),
+    "l8": L8_GRID,
+    # non-square cells that are not binary fractions, ragged 5x7 tiles
+    "ragged": GridSpec(left=-12.5, top=40.25, cellx=0.7, celly=0.3,
+                       nrows=203, ncols=61, tile_rows=5, tile_cols=7),
+}
+ENCODE_EDGES = [float("nan"), float("inf"), float("-inf"), None, 1e300, -1.0, -0.0]
+
+
+def _encode_cases(g: GridSpec, n: int = 3000, n_lattice: int = 300):
+    """(id, x, y) tuples: random coords over 1.4x the grid extent, exact
+    lattice lines, and every edge value as x, as y and as both."""
+    rng = np.random.default_rng(7)
+    w, h = g.right - g.left, g.top - g.bottom
+    xs = rng.uniform(g.left - 0.2 * w, g.right + 0.2 * w, n)
+    ys = rng.uniform(g.bottom - 0.2 * h, g.top + 0.2 * h, n)
+    xs[:n_lattice] = g.left + rng.integers(-2, g.ncols + 2, n_lattice) * g.cellx
+    ys[:n_lattice] = g.top - rng.integers(-2, g.nrows + 2, n_lattice) * g.celly
+    pts = list(zip(xs.tolist(), ys.tolist()))
+    x_in, y_in = g.left + 0.5 * w, g.top - 0.5 * h
+    for v in ENCODE_EDGES:
+        pts += [(v, y_in), (x_in, v), (v, v)]
+    return [(i, x, y) for i, (x, y) in enumerate(pts)]
+
+
+@pytest.mark.parametrize("name", sorted(ENCODE_GRIDS))
+def test_encode_cells_matches_numpy(spark, name):
+    """grid.encode_cells (one SQL projection) equals the numpy encoder
+    encode_points_pdf bit for bit — truncation, clamp, Z-order and tile
+    key — including out-of-grid, lattice-line and edge coordinates. The
+    rows are built from tuples: Arrow would fold a pandas NaN into NULL.
+    numpy casts NaN, ±inf and |q| >= 2^63 to INT64_MIN and clips that to
+    0, and the encoder sends NULL there too."""
+    g = ENCODE_GRIDS[name]
+    cases = _encode_cases(g)
+    enc = encode_cells(spark.createDataFrame(cases, "id long, x double, y double"), g)
+    cols = ["row", "col", "cell_id", "tile_id"]
+    assert dict(enc.dtypes) == {"id": "bigint", "x": "double", "y": "double",
+                                **{c: "bigint" for c in cols}}
+    got = enc.orderBy("id").toPandas()
+    pdf = pd.DataFrame(cases, columns=["id", "x", "y"]).astype({"x": float, "y": float})
+    with np.errstate(invalid="ignore"):
+        want = encode_points_pdf(pdf, g)
+    for c in cols:
+        assert got[c].dtype == np.int64, c
+        np.testing.assert_array_equal(got[c].to_numpy(), want[c].to_numpy(), err_msg=c)
+    # the "-> cell 0" rule for non-finite and NULL coordinates
+    bad_x = ~np.isfinite(pdf["x"].to_numpy())
+    bad_y = ~np.isfinite(pdf["y"].to_numpy())
+    assert (got.loc[bad_x, "col"] == 0).all() and (got.loc[bad_y, "row"] == 0).all()
+    both = got[bad_x & bad_y]
+    assert len(both) == 4 and (both[cols] == 0).all().all()
 
 
 def test_api_facade_names():

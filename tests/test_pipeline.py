@@ -279,6 +279,17 @@ def test_ivf_topk_mixed_id_types(spark, emb_df):
     assert top1 == {0: "v0", 1: "v1"}
 
 
+@pytest.mark.parametrize("search", ["brute_force_topk", "ivf_topk", "pq_topk"])
+def test_topk_query_side_is_capped(spark, emb_df, monkeypatch, search):
+    """The query side is collected onto the driver and broadcast whole,
+    so more than MAX_QUERIES query vectors raise instead of being
+    pulled in unbounded."""
+    df, _ = emb_df
+    monkeypatch.setattr(ann, "MAX_QUERIES", 2)
+    with pytest.raises(ValueError, match="MAX_QUERIES=2"):
+        getattr(ann, search)(df, df.filter(F.col("vec_id") < 3), k=3)
+
+
 def test_pq_topk_tie_set_is_global_order_prefix(spark):
     """All-identical vectors tie every ADC distance; the O(nc) local
     shortlist (argpartition + boundary-tie resolution by vec_id) must

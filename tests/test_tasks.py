@@ -108,7 +108,7 @@ def test_geotask_per_task_out_args(spark):
     try:
         def _tiled(df):
             from geowombat_spark.grid import GridSpec
-            from geowombat_spark.operators.extract import encode_cells
+            from geowombat_spark.grid import encode_cells
 
             g = GridSpec(
                 left=0.0, top=0.0, cellx=30.0, celly=30.0,
