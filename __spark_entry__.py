@@ -486,7 +486,7 @@ def q_embed_neardup(spark, sf_dir):
     the exact block-pair plan is the right one (no driver collect; per-task
     memory bounded by 2·N/n_blocks vectors)."""
     return dedup.embedding_neardup_pairs(
-        _emb(spark, sf_dir), threshold=0.4, method="block", n_blocks=8
+        _emb(spark, sf_dir), threshold=0.4, n_blocks=8
     )
 
 
@@ -542,7 +542,7 @@ def q_lsh_precision(spark, sf_dir):
         emb, threshold=0.45, n_planes=6, n_tables=12
     )
     exact = dedup.embedding_neardup_pairs(
-        emb, threshold=0.45, method="block", n_blocks=8
+        emb, threshold=0.45, n_blocks=8
     ).select("vec_a", "vec_b", F.lit(1).alias("_hit"))
     # ONE pass over the expensive LSH subtree: a left join marks each LSH
     # pair as exact-confirmed or not, and a single aggregate computes all
@@ -3220,7 +3220,7 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
 
     # threshold on the ROUNDED cosine — the engine's pair paths share
     # rounded-boundary semantics (emitted iff the displayed 6-dp cosine
-    # passes; see dedup._blocked_cosine_pairs), so the oracle must too
+    # passes; see dedup.embedding_neardup_pairs), so the oracle must too
     o["q_embed_neardup"] = f"""
 SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, round({_COS}, 6) AS cosine
 FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id

@@ -7,13 +7,21 @@
   window rank gives the global top-k. At 100 TB this is the right exact
   plan: one scan, no corpus shuffle.
 
-- ``hyperplane_lsh``: random-hyperplane signatures (SRP) for cosine; the
-  bucketed self-join is the approximate scale path for all-pairs search.
+- ``ivf_topk``: IVF-style two-stage search — k-means centroids trained on a
+  bounded hash-ordered sample; one corpus pass assigns each vector its
+  nearest centroid and scores it only against the queries whose ``nprobe``
+  nearest centroids include that cell. Cuts scored rows by ~nlist/nprobe
+  at the cost of recall.
 
-- ``ivf_topk``: IVF-style two-stage search — k-means-ish centroids sampled
-  deterministically, corpus assigned to nearest centroid (one column of
-  cluster id), queries probe only the ``nprobe`` nearest centroids. Cuts
-  scored rows by ~nlist/nprobe at the cost of recall.
+- ``pq_topk``: product-quantization ADC scan over the corpus, then an exact
+  cosine rescore of the per-query shortlist.
+
+- ``hyperplane_signatures`` / ``hyperplane_lsh_pairs``: random-hyperplane
+  (SRP) signatures for cosine; the multi-table bucketed self-join is the
+  approximate all-pairs path. The exact all-pairs path is
+  ``dedup.embedding_neardup_pairs``.
+
+- ``cluster_embeddings``: spherical k-means assignment of every vector.
 """
 
 from __future__ import annotations
@@ -28,6 +36,7 @@ from .dedup import (  # noqa: F401  (round6 re-exported: cosine numerics)
     capped_bucket_frame,
     round6,
 )
+from .text import md5_int
 
 
 #: every task receives the whole query side as one dense float64 matrix
@@ -53,6 +62,30 @@ def _collect_queries(queries: DataFrame, id_col: str, vec_col: str):
             "queries into batches"
         )
     return np.asarray([r[0] for r in rows]), _normalize([r[1] for r in rows])
+
+
+def _hash_sample(df: DataFrame, id_col: str, vec_col: str, n: int) -> np.ndarray:
+    """The first ``n`` vectors in ``md5_int(id)`` order, row-normalized.
+
+    Hash order is uncorrelated with id order and storage layout, so the
+    training sample spreads across the corpus even when ids are sorted or
+    clustered (the failure mode of ``orderBy(id).limit(n)`` seeding); the
+    id breaks hash ties. Driver work is O(n·dim), independent of corpus
+    size."""
+    rows = (
+        df.select(id_col, vec_col)
+        .orderBy(md5_int(F.col(id_col).cast("string")), id_col)
+        .limit(int(n))
+        .collect()
+    )
+    return _normalize([r[1] for r in rows])
+
+
+def _rank_cut(df: DataFrame, k: int, *order) -> DataFrame:
+    """Number each query's rows 1.. in ``rank`` by ``order`` (a total
+    order, so the cut is deterministic) and keep the first ``k``."""
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return df.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def cosine_expr(emb_a, emb_b, dp: int | None = 6):
@@ -147,13 +180,54 @@ def brute_force_topk(
     local = corpus.select(id_col, vec_col).mapInPandas(
         _score, f"query_id {qid_type}, vec_id {id_type}, cosine double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
+    return _rank_cut(local, k, F.desc("cosine"), F.asc("vec_id")).select(
+        "query_id", "vec_id", "cosine", "rank"
     )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
+
+
+def _srp_signatures(
+    df: DataFrame,
+    n_planes: int,
+    n_tables: int,
+    seed: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """(vec_id, table, bucket): the sign-random-projection signature of
+    every vector in each of ``n_tables`` hyperplane sets, from one Arrow
+    pass (n_tables matmuls against the same batch).
+
+    Table ``t``'s planes come from ``seed + 1000·t`` and are regenerated on
+    each executor (cheaper than broadcasting small plane matrices, and
+    dim-agnostic)."""
+
+    def _sig(it):
+        planes = None
+        for pdf in it:
+            m = np.asarray(list(pdf[vec_col]), dtype=np.float64)
+            if planes is None:
+                planes = [
+                    np.random.default_rng(seed + 1000 * t).standard_normal(
+                        (n_planes, m.shape[1])
+                    )
+                    for t in range(n_tables)
+                ]
+            ids = pdf[id_col].to_numpy()
+            frames = []
+            for t, pl in enumerate(planes):
+                bits = (m @ pl.T) >= 0  # (n, planes)
+                sig = np.zeros(len(pdf), dtype=np.int64)
+                for b in range(n_planes):
+                    sig |= bits[:, b].astype(np.int64) << b
+                frames.append(
+                    pd.DataFrame({"vec_id": ids, "table": t, "bucket": sig})
+                )
+            yield pd.concat(frames, ignore_index=True)
+
+    return df.select(id_col, vec_col).mapInPandas(
+        _sig,
+        f"vec_id {df.schema[id_col].dataType.simpleString()},"
+        " table int, bucket bigint",
     )
 
 
@@ -164,30 +238,10 @@ def hyperplane_signatures(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Sign-random-projection signature (int bucket id) per vector.
-
-    Planes are regenerated on each executor from the seed (cheaper than
-    broadcasting for small plane matrices, and dim-agnostic)."""
-
-    def _sig(it):
-        pl = None
-        for pdf in it:
-            m = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            if pl is None:
-                pl = np.random.default_rng(seed).standard_normal(
-                    (n_planes, m.shape[1])
-                )
-            bits = (m @ pl.T) >= 0  # (n, planes)
-            sig = np.zeros(len(pdf), dtype=np.int64)
-            for b in range(pl.shape[0]):
-                sig |= bits[:, b].astype(np.int64) << b
-            yield pd.DataFrame(
-                {"vec_id": pdf[id_col].to_numpy(), "bucket": sig}
-            )
-
-    sig_id_type = df.schema[id_col].dataType.simpleString()
-    return df.select(id_col, vec_col).mapInPandas(
-        _sig, f"vec_id {sig_id_type}, bucket bigint"
+    """Sign-random-projection signature (int bucket id) per vector: table 0
+    of :func:`hyperplane_lsh_pairs`' signatures at the same seed."""
+    return _srp_signatures(df, n_planes, 1, seed, id_col, vec_col).select(
+        "vec_id", "bucket"
     )
 
 
@@ -211,42 +265,11 @@ def hyperplane_lsh_pairs(
     defaults to ``dedup.DEFAULT_MAX_BUCKET`` — pass ``None`` explicitly to
     opt out (exact recall, unbounded worst case).
 
-    One corpus pass computes every table's signature (one Arrow batch
-    transfer, n_tables matmuls against the same batch), and one self-join
-    on (table, bucket) replaces the per-table join+union — the shuffle
-    count is independent of n_tables. Per-table plane RNG matches the
-    single-table :func:`hyperplane_signatures` (seed + 1000·t), so
-    candidates are identical to the loop formulation.
+    One corpus pass computes every table's signature, and one self-join
+    on (table, bucket) replaces a per-table join+union — the shuffle
+    count is independent of n_tables.
     """
-
-    def _sig_all(it):
-        planes = None
-        for pdf in it:
-            m = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            if planes is None:
-                planes = [
-                    np.random.default_rng(seed + 1000 * t).standard_normal(
-                        (n_planes, m.shape[1])
-                    )
-                    for t in range(n_tables)
-                ]
-            ids = pdf[id_col].to_numpy()
-            frames = []
-            for t, pl in enumerate(planes):
-                bits = (m @ pl.T) >= 0
-                sig = np.zeros(len(pdf), dtype=np.int64)
-                for b in range(n_planes):
-                    sig |= bits[:, b].astype(np.int64) << b
-                frames.append(
-                    pd.DataFrame({"vec_id": ids, "table": t, "bucket": sig})
-                )
-            yield pd.concat(frames, ignore_index=True)
-
-    sig = df.select(id_col, vec_col).mapInPandas(
-        _sig_all,
-        f"vec_id {df.schema[id_col].dataType.simpleString()},"
-        " table int, bucket bigint",
-    )
+    sig = _srp_signatures(df, n_planes, n_tables, seed, id_col, vec_col)
     # window-cap + MEMORY_AND_DISK persist: the matmul signature stage
     # runs exactly once, not once per join side + once for the size
     # aggregate (see dedup.capped_bucket_frame)
@@ -320,21 +343,12 @@ def train_corpus_centroids(
     oversample: int = 32,
     iters: int = 10,
 ) -> np.ndarray:
-    """Bounded-sample centroid training shared by IVF / clustering /
-    semantic-dedup blocking: take ``k·oversample`` vectors in
-    ``md5_int(id)`` order (hash order is uncorrelated with id/storage
-    order, so the sample spreads across the corpus), normalize, run the
-    deterministic k-means. Driver work O(k·oversample·dim) — independent
-    of corpus size."""
-    from .text import md5_int
-
-    rows = (
-        df.select(id_col, vec_col)
-        .orderBy(md5_int(F.col(id_col).cast("string")), id_col)
-        .limit(int(k) * int(oversample))
-        .collect()
-    )
-    return _train_centroids(_normalize([r[1] for r in rows]), int(k), iters)
+    """Bounded-sample centroid training shared by IVF and clustering: take
+    ``k·oversample`` vectors in hash order (:func:`_hash_sample`) and run
+    the deterministic k-means. Driver work O(k·oversample·dim) —
+    independent of corpus size."""
+    sample = _hash_sample(df, id_col, vec_col, int(k) * int(oversample))
+    return _train_centroids(sample, int(k), iters)
 
 
 def ivf_topk(
@@ -348,54 +362,32 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF two-stage ANN: centroid assignment then probe-limited exact scan.
 
-    Centroid training is a bounded-sample k-means: take the first
-    ``nlist × oversample`` corpus vectors in ``md5_int(id)`` order (the
-    hash order is uncorrelated with id order / storage layout, so the
-    sample spreads across the corpus even when ids are sorted or clustered
-    — the failure mode of ``orderBy(id).limit(nlist)`` seeding), then run
-    deterministic Lloyd iterations on the driver. The driver-side work is
-    O(nlist·oversample·dim) — independent of corpus size, so the plan holds
-    at 100 TB (it is the standard FAISS train-on-sample recipe). The corpus
-    gains a ``cluster`` column; a query scores only the rows of its
-    ``nprobe`` nearest clusters.
+    Centroid training is a bounded-sample k-means: the first
+    ``nlist × oversample`` corpus vectors in hash order
+    (:func:`train_corpus_centroids`), then deterministic Lloyd iterations
+    on the driver. The driver-side work is O(nlist·oversample·dim) —
+    independent of corpus size, so the plan holds at 100 TB (it is the
+    standard FAISS train-on-sample recipe). One pass over the corpus then
+    assigns each vector its nearest centroid and scores it only against
+    the queries whose ``nprobe`` nearest centroids include that cell.
     """
     spark = corpus.sparkSession
     q_ids, q_mat = _collect_queries(queries, id_col, vec_col)
     cents = train_corpus_centroids(corpus, nlist, id_col, vec_col)
-    bc = spark.sparkContext.broadcast(cents)
-    # derive the pass-through types from the input schema: hardcoding
-    # `array<float>` would silently downcast double embeddings before the
-    # "exact" probe scoring, and `bigint` would crash string ids (the same
-    # contract _cluster_cosine_pairs documents in dedup.py)
+    # id types follow the input schemas: hardcoded `bigint` would crash
+    # string ids. Query ids are typed from the QUERIES frame, not the
+    # corpus: probe vectors routinely carry a different id type
+    # (spark.range bigints against a string-id corpus)
     id_type = corpus.schema[id_col].dataType.simpleString()
-    vec_type = corpus.schema[vec_col].dataType.simpleString()
-    # query ids are typed from the QUERIES frame, not the corpus: probe
-    # vectors routinely carry a different id type (spark.range bigints
-    # against a string-id corpus) and a corpus-typed query_id schema
-    # would fail every Arrow batch at runtime (pq_topk's qid_type rule)
     qid_type = queries.schema[id_col].dataType.simpleString()
-
-    def _assign(it):
-        cm = bc.value
-        for pdf in it:
-            m = _normalize(list(pdf[vec_col]))
-            cl = np.argmax(m @ cm.T, axis=1).astype(np.int32)
-            out = pdf[[id_col, vec_col]].copy()
-            out["cluster"] = cl
-            yield out
-
-    assigned = corpus.select(id_col, vec_col).mapInPandas(
-        _assign, f"{id_col} {id_type}, {vec_col} {vec_type}, cluster int"
-    )
-
     probes = np.argsort(-(q_mat @ cents.T), axis=1)[:, :nprobe]
-    bq = spark.sparkContext.broadcast((q_ids, q_mat, probes))
+    bq = spark.sparkContext.broadcast((q_ids, q_mat, probes, cents))
 
     def _probe(it):
-        ids, qm, pr = bq.value
+        ids, qm, pr, cm = bq.value
         for pdf in it:
             c = _normalize(list(pdf[vec_col]))
-            cl = pdf["cluster"].values
+            cl = np.argmax(c @ cm.T, axis=1)
             # keep the id dtype native (int64 or str); str converts to a
             # fixed-width U array so np.lexsort's tiebreak stays total
             cids = np.asarray(pdf[id_col].values)
@@ -425,14 +417,11 @@ def ivf_topk(
                 {"query_id": [], "vec_id": [], "cosine": []}
             )
 
-    local = assigned.mapInPandas(
+    local = corpus.select(id_col, vec_col).mapInPandas(
         _probe, f"query_id {qid_type}, vec_id {id_type}, cosine double"
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
+    return _rank_cut(local, k, F.desc("cosine"), F.asc("vec_id")).select(
+        "query_id", "vec_id", "cosine", "rank"
     )
 
 
@@ -481,7 +470,8 @@ def train_pq_codebooks(
 ) -> np.ndarray:
     """(m_sub, ksub, dim/m_sub) codebooks from a normalized sample."""
     dim = sample.shape[1]
-    assert dim % m_sub == 0, "dim must divide by m_sub"
+    if dim % m_sub:
+        raise ValueError(f"dim={dim} must divide by m_sub={m_sub}")
     ds = dim // m_sub
     return np.stack(
         [
@@ -511,21 +501,12 @@ def pq_topk(
     query) that gets exact-rescored against the original vectors — the
     accuracy/IO dial (refine=1 is pure ADC ranking).
     """
-    from .text import md5_int
-
     query_id_col = query_id_col or id_col
     spark = corpus.sparkSession
     q_ids, q_mat = _collect_queries(queries, query_id_col, vec_col)
 
-    # 1. bounded-sample codebook training (hash order — uncorrelated with
-    #    id order, same rationale as ivf_topk's seeding)
-    sample_rows = (
-        corpus.select(id_col, vec_col)
-        .orderBy(md5_int(F.col(id_col).cast("string")), id_col)
-        .limit(max(ksub * 32, 512))
-        .collect()
-    )
-    sample = _normalize([r[1] for r in sample_rows])
+    # 1. bounded-sample codebook training (hash order, as ivf_topk's)
+    sample = _hash_sample(corpus, id_col, vec_col, max(ksub * 32, 512))
     books = train_pq_codebooks(sample, m_sub, ksub)
     dim = sample.shape[1]
     ds = dim // m_sub
@@ -585,19 +566,19 @@ def pq_topk(
                 drow = d[qi]
                 # NaN-adc candidates (NaN query embedding → all-NaN LUT
                 # row) are dropped, not emitted: argpartition sorts NaN
-                # last, so cap k at the finite count or thr itself goes
+                # last, so cap n_keep at the finite count or thr itself goes
                 # NaN and every comparison below returns empty.
-                k = min(take, int((~np.isnan(drow)).sum()))
-                if k == 0:
+                n_keep = min(take, int((~np.isnan(drow)).sum()))
+                if n_keep == 0:
                     keep = np.empty(0, dtype=np.int64)
-                elif k == drow.shape[0]:
+                elif n_keep == drow.shape[0]:
                     keep = np.arange(drow.shape[0])
                 else:
-                    part = np.argpartition(drow, k - 1)[:k]
+                    part = np.argpartition(drow, n_keep - 1)[:n_keep]
                     thr = drow[part].max()
                     less = np.flatnonzero(drow < thr)
                     eq = np.flatnonzero(drow == thr)
-                    need = k - less.size
+                    need = n_keep - less.size
                     eq_keep = eq[np.argsort(cids[eq], kind="stable")[:need]]
                     keep = np.concatenate([less, eq_keep])
                 sel_ids.append(cids[keep])
@@ -618,11 +599,8 @@ def pq_topk(
     local = corpus.select(id_col, vec_col).mapInPandas(
         _adc, f"query_id {qid_type}, vec_id {id_type}, adc double"
     )
-    w0 = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("vec_id"))
-    cand = (
-        local.withColumn("r0", F.row_number().over(w0))
-        .filter(F.col("r0") <= shortlist)
-        .select("query_id", "vec_id")
+    cand = _rank_cut(local, shortlist, F.asc("adc"), F.asc("vec_id")).select(
+        "query_id", "vec_id"
     )
 
     # 2. exact rescore: semi-join the (tiny) candidate set to the corpus
@@ -651,11 +629,8 @@ def pq_topk(
     scored = cand_vec.mapInPandas(
         _rescore, f"query_id {qid_type}, vec_id {id_type}, cosine double"
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
+    return _rank_cut(scored, k, F.desc("cosine"), F.asc("vec_id")).select(
+        "query_id", "vec_id", "cosine", "rank"
     )
 
 

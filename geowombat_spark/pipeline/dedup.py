@@ -13,8 +13,9 @@ Spark-first shapes:
 - SimHash:    60 bit-sum aggregates over token hashes (JVM-only, 1 shuffle),
               near-dup candidates via band-chunk self-join + Hamming check
               (``bit_count(xor)``).
-- embedding:  cosine over float vectors — the one dense-linear-algebra
-              kernel, done as an Arrow-batched numpy matmul (pandas UDF).
+- embedding:  exact cosine over float vectors — the one dense-linear-algebra
+              kernel, a blocked numpy matmul per block pair (grouped-map
+              pandas UDF). The approximate SRP-LSH plan is in ``ann``.
 
 All hash arithmetic is md5-based int64 math, exactly reproducible in SQL
 (the DuckDB oracle in ``__spark_entry__.py`` recomputes signatures bit-for-
@@ -846,154 +847,24 @@ def embedding_neardup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
-    method: str = "lsh",
     n_blocks: int = 8,
-    n_planes: int = 16,
-    n_tables: int = 4,
-    seed: int = 42,
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
-    """Embedding-cosine near-dup pairs ≥ threshold.
+    """Exact embedding-cosine near-dup pairs ≥ threshold, as
+    (vec_a, vec_b, cosine) with vec_a < vec_b.
 
-    Three plans, all distributed, none collects the corpus (pick by
-    regime):
-
-    - ``method='lsh'`` (default, the 100-TB path for *high* thresholds):
-      SRP-LSH buckets candidates (``ann.hyperplane_lsh_pairs``), then an
-      exact JVM-side cosine verifies each candidate. Approximate — recall
-      governed by (n_planes, n_tables); at near-dup thresholds (≥0.9 ⇒
-      small angles) a handful of tables gives near-total recall while
-      pruning the quadratic pair space.
-    - ``method='block'`` (exact, the scale path for *low* thresholds where
-      LSH cannot prune — e.g. 0.4 ⇒ ~66° angles, every pair is a
-      candidate): blocked distributed matmul. Each row is hash-assigned to
-      one of ``n_blocks`` blocks and replicated into every block *pair* it
-      participates in; ``groupBy(block_pair).applyInPandas`` runs one dense
-      numpy matmul per pair. Shuffle = N·n_blocks rows, per-task memory =
-      2·N/n_blocks vectors, compute O(N²/ n_blocks²) per task across
-      n_blocks·(n_blocks+1)/2 tasks — exact, no driver collect, no
-      full-corpus broadcast.
-    - ``method='cluster'`` (SemDeDup-style blocking, any id type):
-      each vector joins its nearest spherical k-means cells, then one
-      exact matmul per cell (:func:`_cluster_cosine_pairs`). Approximate:
-      a near pair is missed only when its two vectors share no cell.
+    Blocked distributed matmul: each row is hash-assigned to one of
+    ``n_blocks`` blocks and replicated into every block *pair* it
+    participates in; ``groupBy(block_pair).applyInPandas`` runs one dense
+    numpy matmul per pair. Shuffle = N·n_blocks rows, per-task memory =
+    2·N/n_blocks vectors, compute O(N²/n_blocks²) per task across
+    n_blocks·(n_blocks+1)/2 tasks — exact at any threshold, no driver
+    collect, no full-corpus broadcast. Id and vector types follow the
+    input schema (string ids work). The approximate plan for high
+    thresholds, where SRP-LSH prunes the pair space, is
+    ``ann.hyperplane_lsh_pairs``.
     """
-    if method in ("lsh", "block"):
-        # these two kernels pack ids into int64 numpy arrays; string ids
-        # would die with an opaque ValueError in every executor task. Fail
-        # at plan time with the fix instead ('cluster' derives id/vec
-        # types from the schema and takes any id type).
-        id_type = df.schema[id_col].dataType.simpleString()
-        if id_type not in ("bigint", "int", "smallint", "tinyint"):
-            raise ValueError(
-                f"method={method!r} requires an integer {id_col} "
-                f"(got {id_type}); use method='cluster' for string ids"
-            )
-    if method == "lsh":
-        from . import ann
-
-        return ann.hyperplane_lsh_pairs(
-            df,
-            threshold=threshold,
-            n_planes=n_planes,
-            n_tables=n_tables,
-            seed=seed,
-            id_col=id_col,
-            vec_col=vec_col,
-            max_bucket_size=max_bucket_size,
-        ).select("vec_a", "vec_b", "cosine")
-    if method == "block":
-        return _blocked_cosine_pairs(df, id_col, vec_col, threshold, n_blocks)
-    if method == "cluster":
-        return _cluster_cosine_pairs(df, id_col, vec_col, threshold)
-    raise ValueError(f"method must be lsh|block|cluster, got {method!r}")
-
-
-def _cluster_cosine_pairs(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float,
-    k: int = 16,
-    probes: int = 2,
-) -> DataFrame:
-    """Semantic-cluster blocking: spherical k-means cells as dedup blocks.
-
-    Each vector is replicated into its ``probes`` nearest cells
-    (multi-probe, so boundary-straddling near-dup pairs still co-locate in
-    the cell both sides probe), then one dense matmul per cell scores
-    exact cosine; ``distinct`` folds pairs found in two shared cells.
-    Shuffle = N·probes rows; per-task memory = one cell (size k scales
-    with the corpus). Approximate like LSH, but the blocks follow the
-    embedding geometry instead of random hyperplanes — the standard
-    SemDeDup-style recipe.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from .ann import _normalize, train_corpus_centroids
-
-    spark = df.sparkSession
-    cents = train_corpus_centroids(df, k, id_col, vec_col)
-    bc = spark.sparkContext.broadcast(cents)
-    # a tiny corpus can train fewer than k centroids — bound the probes
-    p = max(1, min(int(probes), len(cents)))
-
-    # derive id/vector types from the input schema (like pack_sequences):
-    # hardcoding bigint/array<float> would fail string ids and silently
-    # downcast double embeddings (cell-local cosines could then diverge
-    # from the exact 'block' plan near the threshold)
-    id_type = df.schema[id_col].dataType.simpleString()
-    vec_type = df.schema[vec_col].dataType.simpleString()
-
-    def _assign(it):
-        cm = bc.value
-        for pdf in it:
-            m = _normalize(list(pdf[vec_col]))
-            top = np.argsort(-(m @ cm.T), axis=1)[:, :p]
-            out = pdf.loc[pdf.index.repeat(p), [id_col, vec_col]].copy()
-            out["_cell"] = top.ravel().astype(np.int32)
-            yield out
-
-    assigned = df.select(id_col, vec_col).mapInPandas(
-        _assign, f"{id_col} {id_type}, {vec_col} {vec_type}, _cell int"
-    )
-
-    def _pairs(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        m = _normalize(list(pdf[vec_col]))
-        ids = pdf[id_col].to_numpy()
-        # rounded-threshold semantics shared by all pair paths (see
-        # _blocked_cosine_pairs)
-        sims = round6(m @ m.T)
-        ii, jj = np.where(np.triu(sims >= threshold, 1))
-        a, b = ids[ii], ids[jj]
-        lo, hi = np.minimum(a, b), np.maximum(a, b)
-        return pd.DataFrame(
-            {
-                "vec_a": lo,
-                "vec_b": hi,
-                "cosine": sims[ii, jj],
-            }
-        )
-
-    return (
-        assigned.groupBy("_cell")
-        .applyInPandas(
-            _pairs, f"vec_a {id_type}, vec_b {id_type}, cosine double"
-        )
-        .distinct()
-    )
-
-
-def _blocked_cosine_pairs(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float,
-    n_blocks: int,
-) -> DataFrame:
-    """Exact all-pairs cosine ≥ threshold via block-pair matmul tasks."""
     B = int(n_blocks)
+    id_type = df.schema[id_col].dataType.simpleString()
     blk = F.pmod(F.xxhash64(F.col(id_col)), F.lit(B))
     src = df.select(
         F.col(id_col).alias("_vid"), F.col(vec_col).alias("_vec"), blk.alias("_blk")
@@ -1012,7 +883,11 @@ def _blocked_cosine_pairs(
     def compute(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pair = int(key[0])
         bi, bj = divmod(pair, B)
-        ids = pdf["_vid"].values.astype(np.int64)
+        # keep the id dtype native (int64 or str); str converts to a
+        # fixed-width U array so the comparisons below stay elementwise
+        ids = pdf["_vid"].to_numpy()
+        if ids.dtype == object:
+            ids = ids.astype("U")
         mat = np.array(list(pdf["_vec"]), dtype=np.float64)
         norms = np.linalg.norm(mat, axis=1)
         norms[norms == 0] = 1.0
@@ -1020,17 +895,18 @@ def _blocked_cosine_pairs(
         blks = pdf["_blk"].values
         ai, aj = blks == bi, blks == bj
         # filter on the ROUNDED cosine — the value the pair displays —
-        # so every pair path (this one, SemDeDup cells,
-        # ann.hyperplane_lsh_pairs' Column-fold verify) shares one
-        # boundary semantics: emitted iff round(cos, 6) >= threshold.
-        # A raw-value filter disagrees with the rounded LSH verify in a
-        # 5e-7 window around the threshold, which made cross-path audits
-        # (q_lsh_precision) flaky at the edge.
+        # so every pair path (this one and ann.hyperplane_lsh_pairs'
+        # Column-fold verify) shares one boundary semantics: emitted iff
+        # round(cos, 6) >= threshold. A raw-value filter disagrees with
+        # the rounded LSH verify in a 5e-7 window around the threshold,
+        # which made cross-path audits (q_lsh_precision) flaky at the edge.
         sims = round6(mat[ai] @ mat[aj].T)
         ii, jj = np.nonzero(sims >= threshold)
         a_ids, b_ids = ids[ai][ii], ids[aj][jj]
-        lo = np.minimum(a_ids, b_ids)
-        hi = np.maximum(a_ids, b_ids)
+        # np.minimum has no loop for string dtypes
+        a_first = a_ids <= b_ids
+        lo = np.where(a_first, a_ids, b_ids)
+        hi = np.where(a_first, b_ids, a_ids)
         keep = lo < hi  # drops self-pairs; diag block emits each pair twice
         out = pd.DataFrame(
             {
@@ -1044,7 +920,7 @@ def _blocked_cosine_pairs(
         return out
 
     return rep.groupBy("_pair").applyInPandas(
-        compute, "vec_a bigint, vec_b bigint, cosine double"
+        compute, f"vec_a {id_type}, vec_b {id_type}, cosine double"
     )
 
 

@@ -231,6 +231,14 @@ def stream_lsh_neardup_flags(
     processing-time timeout (``timeout_ms``) — the state store stays
     proportional to the live bucket set, never the stream length.
 
+    .. note:: **Stop an availableNow run yourself.** The processing-time
+       timeout makes Spark keep running no-data micro-batches (to fire
+       timeouts), so a ``trigger(availableNow=True)`` query over this
+       operator never terminates by itself: ``awaitTermination`` and
+       ``processAllAvailable`` do not return. Wait until the query's
+       ``recentProgress`` shows a no-data batch after the data batches,
+       then call ``stop()``.
+
     .. warning:: **State-schema version.** The per-bucket state gained an
        ``occupied`` flag (``min_doc bigint, n bigint, occupied boolean``)
        to make the chunk-order-independent fold correct for buckets whose

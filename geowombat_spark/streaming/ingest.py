@@ -9,7 +9,8 @@ in-flight windowed write loop (``/root/reference/src/geowombat/core/io.py:
   plan — the source swap is one line).
 - ``encode_stream``: the same JVM cell encoder as the batch path
   (``grid.encode_cells`` is one SQL projection, so it works unchanged on
-  streaming DataFrames — one code path for both).
+  streaming DataFrames — one code path for both), after the same in-grid
+  filter as ``transform.match_layout``.
 - ``tile_rollup``: watermarked event-time windows × tile_id counts/means —
   late documents beyond the watermark are dropped deterministically.
 - ``write_stream_tiled``: appends into the tile-partitioned layout with a
@@ -27,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..grid import GridSpec, encode_cells
+from ..operators.extract import in_bounds_col
 
 DOC_STREAM_SCHEMA = (
     "doc_id bigint, x double, y double, value double, event_ts timestamp"
@@ -47,8 +49,13 @@ def stream_documents(
 
 
 def encode_stream(stream: DataFrame, grid: GridSpec) -> DataFrame:
-    """Cell-encode a streaming frame — the batch path's JVM encoder."""
-    return encode_cells(stream, grid)
+    """Cell-encode a streaming frame — the batch path's JVM encoder.
+
+    Documents outside the grid, or with a NULL or NaN coordinate, are
+    dropped first (as ``transform.match_layout`` does): the encoder clamps
+    them onto a border cell, so they would enter that tile's rollups and
+    sink files."""
+    return encode_cells(stream.filter(in_bounds_col(grid)), grid)
 
 
 def tile_rollup(

@@ -428,12 +428,10 @@ def test_ivf_recall_at_nprobe4(spark):
 
 
 def test_blocked_cosine_matches_numpy(spark, emb_df):
-    """method='block' (distributed block-pair matmul) is exact: identical
-    pair set and scores to a dense numpy matmul at any threshold."""
+    """The distributed block-pair matmul is exact: identical pair set and
+    scores to a dense numpy matmul at any threshold."""
     df, mat = emb_df
-    blk = dedup.embedding_neardup_pairs(
-        df, threshold=0.3, method="block", n_blocks=4
-    ).collect()
+    blk = dedup.embedding_neardup_pairs(df, threshold=0.3, n_blocks=4).collect()
     norm = mat / np.linalg.norm(mat, axis=1, keepdims=True)
     sims = dedup.round6(norm @ norm.T)
     ii, jj = np.nonzero(np.triu(sims >= 0.3, k=1))
@@ -503,6 +501,9 @@ def test_pq_codebooks_shape_and_determinism():
     b2 = ann.train_pq_codebooks(sample, 4, 8)
     assert b1.shape == (4, 8, 4)
     np.testing.assert_array_equal(b1, b2)
+    # the trailing dim % m_sub dimensions would drop out of every code
+    with pytest.raises(ValueError, match="m_sub=3"):
+        ann.train_pq_codebooks(sample, 3, 8)
 
 
 def test_cluster_embeddings_self_consistent(spark, corpus_dir):
@@ -523,35 +524,6 @@ def test_cluster_embeddings_self_consistent(spark, corpus_dir):
     assert (pdf["cluster"].values == expect).all()
 
 
-def test_embedding_neardup_cluster_method(spark):
-    """method='cluster' (SemDeDup-style cell blocking, multi-probe) finds
-    the same pairs as the exact blocked matmul at a near-dup threshold."""
-    from geowombat_spark.pipeline.dedup import embedding_neardup_pairs
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    id_col, vec_col = emb.columns[0], emb.columns[1]
-    exact = (
-        embedding_neardup_pairs(
-            emb, id_col=id_col, vec_col=vec_col, threshold=0.9, method="block"
-        )
-        .toPandas()
-        .sort_values(["vec_a", "vec_b"])
-        .reset_index(drop=True)
-    )
-    clus = (
-        embedding_neardup_pairs(
-            emb, id_col=id_col, vec_col=vec_col, threshold=0.9, method="cluster"
-        )
-        .toPandas()
-        .sort_values(["vec_a", "vec_b"])
-        .reset_index(drop=True)
-    )
-    e = set(zip(exact["vec_a"], exact["vec_b"]))
-    c = set(zip(clus["vec_a"], clus["vec_b"]))
-    assert c <= e                      # no false pairs (exact verify inside)
-    assert len(e) == 0 or len(c) / len(e) >= 0.8   # recall of the blocking
-
-
 # --- round-3: finite skew-guard defaults ----------------------------------
 
 
@@ -565,7 +537,6 @@ def test_default_skew_caps_are_finite():
         (dedup.lsh_candidate_pairs, "max_bucket_size"),
         (dedup.minhash_dedup_pairs, "max_bucket_size"),
         (dedup.simhash_pairs, "max_bucket_size"),
-        (dedup.embedding_neardup_pairs, "max_bucket_size"),
         (ann.hyperplane_lsh_pairs, "max_bucket_size"),
         (dedup.jaccard_pairs, "max_doc_freq"),
     ]:
@@ -643,13 +614,12 @@ def test_null_text_scores_as_empty_doc(spark):
     assert rep[1]["dup_line_frac"] == 0.0
 
 
-# --- round-3: cluster-cosine type preservation ---------------------------
+# --- round-3: blocked-cosine type preservation ---------------------------
 
 
-def test_cluster_cosine_preserves_input_types(spark):
-    """String ids and double embeddings survive the 'cluster' method (the
-    mapInPandas schemas derive from the input instead of hardcoding
-    bigint/array<float>)."""
+def test_blocked_cosine_preserves_input_types(spark):
+    """String ids and double embeddings survive the exact blocked plan (the
+    output schema derives from the input instead of hardcoding bigint)."""
     rng = np.random.default_rng(7)
     base = rng.standard_normal(8)
     vecs = [base, base + 1e-4, rng.standard_normal(8)]
@@ -662,7 +632,7 @@ def test_cluster_cosine_preserves_input_types(spark):
     df = spark.createDataFrame(pdf)  # array<double> + string id
     out = dedup.embedding_neardup_pairs(
         df, id_col="vec_id", vec_col="embedding",
-        threshold=0.99, method="cluster",
+        threshold=0.99,
     )
     rows = out.collect()
     assert [r.asDict() for r in rows] and rows[0]["vec_a"] == "doc-a"

@@ -317,8 +317,7 @@ def test_grouped_map_kernels_declare_their_eval_type(spark):
         )
         polygonize.connected_components_tiled(cells, "value", 2, 2)
         polygonize.trace_rings_tiled(comps, tile_rows=2, tile_cols=2)
-        dedup.embedding_neardup_pairs(emb, threshold=0.5, method="block")
-        dedup.embedding_neardup_pairs(emb, threshold=0.5, method="cluster")
+        dedup.embedding_neardup_pairs(emb, threshold=0.5)
         pack_sequences(text, max_tokens=4, n_shards=1, exact=True)
 
 
@@ -416,3 +415,47 @@ def test_tiled_cc_build_job_budget(spark):
         lambda: pz.trace_rings_tiled(comps, tile_rows=16, tile_cols=16),
     )
     assert jobs == set(), sorted(jobs)
+
+
+def _embeddings(spark):
+    rng = np.random.default_rng(11)
+    return spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(rng.standard_normal((80, 16)))],
+        "vec_id long, embedding array<double>",
+    )
+
+
+def test_embedding_pair_plans_build_without_a_job(spark):
+    """The exact (blocked matmul) and approximate (SRP-LSH) all-pairs plans
+    are lazy: building either starts no job."""
+    from geowombat_spark.pipeline import ann, dedup
+
+    emb = _embeddings(spark)
+    for name, build in {
+        "embedding_neardup_pairs": lambda: dedup.embedding_neardup_pairs(emb),
+        "hyperplane_lsh_pairs": lambda: ann.hyperplane_lsh_pairs(emb),
+    }.items():
+        _, jobs = _build(spark, f"test-{name}-build", build)
+        assert jobs == set(), f"{name}: building started jobs {sorted(jobs)}"
+
+
+@pytest.mark.parametrize(
+    "search,job_budget,python_scans",
+    [("brute_force_topk", 2, 1), ("ivf_topk", 3, 1), ("pq_topk", 3, 2)],
+)
+def test_topk_build_job_budget(spark, search, job_budget, python_scans):
+    """The top-k searches collect the query side on the driver while they
+    are built (``_collect_queries``), and IVF and PQ also their
+    hash-ordered training sample: that is the design, so the measured
+    build jobs on this fixed frame are pinned, and a hidden action shows
+    up as more. IVF assigns and probes in one Python pass over the
+    corpus; PQ makes two (the ADC scan and the shortlist rescore)."""
+    from geowombat_spark.pipeline import ann
+
+    emb = _embeddings(spark)
+    df, jobs = _build(
+        spark, f"test-{search}-build",
+        lambda: getattr(ann, search)(emb, emb.filter(F.col("vec_id") < 3), k=3),
+    )
+    assert 0 < len(jobs) <= job_budget, sorted(jobs)
+    assert _plan(df).count("MapInPandas") == python_scans

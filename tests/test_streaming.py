@@ -4,6 +4,7 @@ watermarked tile rollup → memory/file sinks; custom stateful running stats."""
 import os
 import shutil
 import tempfile
+import time
 
 import pandas as pd
 import pytest
@@ -16,6 +17,39 @@ GRID = GridSpec(
     left=0.0, top=0.0, cellx=30.0, celly=30.0, nrows=64, ncols=64,
     tile_rows=16, tile_cols=16, nodata=0.0,
 )
+
+
+@pytest.fixture(autouse=True)
+def no_leaked_queries(spark):
+    """Each test stops the streaming queries it starts: a query left
+    running keeps taking micro-batches for the rest of the session."""
+    yield
+    leaked = spark.streams.active
+    for q in leaked:
+        q.stop()
+    assert not leaked, f"streaming queries left running: {[q.name for q in leaked]}"
+
+
+def _stop_after_idle_batch(q, n_input, timeout=120):
+    """Stop ``q`` once it has read ``n_input`` source rows and then
+    completed a no-data batch. ``stream_lsh_neardup_flags``' processing-
+    time state timeout keeps an availableNow query running no-data
+    batches, so it never terminates by itself."""
+    deadline = time.monotonic() + timeout
+    try:
+        while time.monotonic() < deadline:
+            read, idle = 0, False
+            for p in q.recentProgress:
+                read += p.numInputRows
+                idle = read >= n_input and p.numInputRows == 0
+            if idle:
+                return
+            if q.exception() is not None:
+                raise q.exception()
+            time.sleep(0.2)
+        raise AssertionError(f"no idle batch after {n_input} rows in {timeout} s")
+    finally:
+        q.stop()
 
 
 @pytest.fixture()
@@ -31,11 +65,14 @@ def _batch(spark, path, docs, name):
     """Write one micro-batch as a single flat file in the stream dir (the
     file source treats subdirectories as partition dirs, so batches must be
     flat files)."""
-    import glob as _glob
-
     pdf = pd.DataFrame(docs, columns=["doc_id", "x", "y", "value", "event_ts"])
     pdf["event_ts"] = pd.to_datetime(pdf["event_ts"])
-    sdf = spark.createDataFrame(pdf)
+    _write_batch(spark.createDataFrame(pdf), path, name)
+
+
+def _write_batch(sdf, path, name):
+    import glob as _glob
+
     tmp = os.path.join(os.path.dirname(path), f"_stage_{name}")
     sdf.coalesce(1).write.mode("overwrite").parquet(tmp)
     part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
@@ -77,6 +114,40 @@ def test_stream_tile_rollup_to_memory(spark, stream_dirs):
     assert got[("2026-01-01 00:01:00", 0)] == (1, 40.0)
     # doc 5: col=16, row=16 → tile (1,1) = tile_rows block 1 * 4 tiles_x + 1
     assert got[("2026-01-01 00:01:00", 5)] == (1, 50.0)
+
+
+def test_stream_rollup_drops_off_grid_documents(spark, stream_dirs):
+    """Documents outside the grid or with a NaN/NULL coordinate get no
+    cell: only the in-grid document reaches the rollup. (Rows come from
+    tuples: a pandas NaN would arrive as NULL.)"""
+    from datetime import datetime
+
+    ts = datetime(2026, 1, 1, 0, 0, 10)
+    rows = [
+        (1, 15.0, -15.0, 10.0, ts),          # tile 0
+        (2, 500.0, 100.0, 20.0, ts),         # above the grid (would clamp to tile 1)
+        (3, float("nan"), -15.0, 30.0, ts),  # NaN x (would land on tile 0)
+        (4, 15.0, None, 40.0, ts),           # NULL y (would land on tile 0)
+    ]
+    _write_batch(
+        spark.createDataFrame(rows, ingest.DOC_STREAM_SCHEMA), stream_dirs["in"], "b1"
+    )
+    rollup = ingest.tile_rollup(
+        ingest.encode_stream(ingest.stream_documents(spark, stream_dirs["in"]), GRID)
+    )
+    q = (
+        rollup.writeStream.format("memory")
+        .queryName("rollup_off_grid_test")
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = {
+        (str(r["window_start"]), r["tile_id"]): (r["n_docs"], r["mean_value"])
+        for r in spark.sql("select * from rollup_off_grid_test").collect()
+    }
+    assert got == {("2026-01-01 00:00:00", 0): (1, 10.0)}
 
 
 def test_stream_write_tiled_and_resume(spark, stream_dirs):
@@ -138,16 +209,9 @@ TEXT_SCHEMA = "doc_id bigint, text string, event_ts timestamp"
 
 
 def _text_batch(spark, path, docs, name):
-    import glob as _glob
-
     pdf = pd.DataFrame(docs, columns=["doc_id", "text", "event_ts"])
     pdf["event_ts"] = pd.to_datetime(pdf["event_ts"])
-    sdf = spark.createDataFrame(pdf)
-    tmp = os.path.join(os.path.dirname(path), f"_stage_{name}")
-    sdf.coalesce(1).write.mode("overwrite").parquet(tmp)
-    part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-    shutil.copy(part, os.path.join(path, f"{name}.parquet"))
-    shutil.rmtree(tmp, ignore_errors=True)
+    _write_batch(spark.createDataFrame(pdf), path, name)
 
 
 def test_stream_exact_dedup(spark, stream_dirs):
@@ -209,7 +273,7 @@ def test_stream_lsh_neardup_flags(spark, stream_dirs):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _stop_after_idle_batch(q, 2)
     rows = spark.sql("select * from lsh_flags_test").collect()
     by_doc = {}
     for r in rows:
@@ -351,7 +415,7 @@ def test_stream_lsh_bucket_overflow_cap(spark, stream_dirs):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _stop_after_idle_batch(q, 5)
     rows = spark.sql("select * from lsh_cap_test").collect()
     assert len(rows) == 5 * 4  # every row still accounted for
     assert {r["status"] for r in rows} == {"overflow"}
@@ -385,7 +449,7 @@ def test_stream_lsh_negative_doc_ids(spark, stream_dirs):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _stop_after_idle_batch(q, 2)
     rows = spark.sql("select * from lsh_neg_test").collect()
     by_doc = {}
     for r in rows:
