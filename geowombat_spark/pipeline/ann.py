@@ -33,6 +33,8 @@ from pyspark.sql import functions as F
 
 from .dedup import (  # noqa: F401  (round6 re-exported: cosine numerics)
     DEFAULT_MAX_BUCKET,
+    _bucket_pairs,
+    _join_both_sides,
     capped_bucket_frame,
     round6,
 )
@@ -273,26 +275,11 @@ def hyperplane_lsh_pairs(
     # window-cap + MEMORY_AND_DISK persist: the matmul signature stage
     # runs exactly once, not once per join side + once for the size
     # aggregate (see dedup.capped_bucket_frame)
-    sig = capped_bucket_frame(sig, ["table", "bucket"], max_bucket_size)
-    a, b = sig.alias("a"), sig.alias("b")
-    cands = (
-        a.join(b, ["table", "bucket"])
-        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-        )
-        .distinct()
-    )
-    va = df.select(
-        F.col(id_col).alias("vec_a"), F.col(vec_col).alias("emb_a")
-    )
-    vb = df.select(
-        F.col(id_col).alias("vec_b"), F.col(vec_col).alias("emb_b")
-    )
+    keys, out = ["table", "bucket"], ("vec_a", "vec_b")
+    sig = capped_bucket_frame(sig, keys, max_bucket_size)
+    cands = _bucket_pairs(sig, "vec_id", keys, out).distinct()
     return (
-        cands.join(va, "vec_a")
-        .join(vb, "vec_b")
+        _join_both_sides(cands, df, id_col, F.col(vec_col), "emb", out)
         .withColumn("cosine", cosine_expr("emb_a", "emb_b"))
         .filter(F.col("cosine") >= threshold)
         .select("vec_a", "vec_b", "cosine")

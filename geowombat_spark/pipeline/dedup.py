@@ -17,6 +17,11 @@ Spark-first shapes:
               kernel, a blocked numpy matmul per block pair (grouped-map
               pandas UDF). The approximate SRP-LSH plan is in ``ann``.
 
+Each step is written once: the Jaccard index and the MinHash, SimHash and
+SRP-LSH (``ann``) bucket joins are one self-join, :func:`_bucket_pairs`;
+the batch pairs, the band index and the stream band with :func:`_band_rows`;
+every exact path keys on :func:`content_key`.
+
 All hash arithmetic is md5-based int64 math, exactly reproducible in SQL
 (the DuckDB oracle in ``__spark_entry__.py`` recomputes signatures bit-for-
 bit). MinHash permutation params are generated by a fixed formula so the
@@ -30,7 +35,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import cache as _cache
 from ..cache import bounded_persist
 from .text import md5_int, tokens
 
@@ -97,6 +101,61 @@ def norm_text(c: Column) -> Column:
     return F.lower(F.trim(F.coalesce(c, F.lit(""))))
 
 
+def content_key(text_col: str = "text") -> Column:
+    """Portable content hash: md5 of the normalized text. The one key of
+    :func:`exact_dedup`, :func:`exact_index`, :func:`dedup_against` and
+    ``streaming.dedup.stream_exact_dedup``."""
+    return F.md5(norm_text(F.col(text_col)))
+
+
+def _jaccard(n_inter: Column, na: Column, nb: Column) -> Column:
+    """Set Jaccard from the intersection and the two set sizes, 6 dp."""
+    return F.round(n_inter / (na + nb - n_inter), 6)
+
+
+def _bucket_pairs(
+    frame: DataFrame,
+    id_col: str,
+    keys: list[str],
+    out: tuple[str, str] = ("doc_a", "doc_b"),
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Every pair of ``frame`` rows that share ``keys``, once per shared
+    key, as ``(out[0], out[1])`` with ``out[0] < out[1]``, plus
+    ``<c>_a``/``<c>_b`` for each column ``c`` in ``carry``. The one bucket
+    self-join of the LSH family and of the Jaccard inverted index. The
+    caller caps and persists ``frame`` and de-duplicates pairs that share
+    several buckets."""
+    a, b = frame.alias("a"), frame.alias("b")
+    return (
+        a.join(b, keys)
+        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .select(
+            F.col(f"a.{id_col}").alias(out[0]),
+            F.col(f"b.{id_col}").alias(out[1]),
+            *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in carry for s in "ab"],
+        )
+    )
+
+
+def _join_both_sides(
+    pairs: DataFrame,
+    frame: DataFrame,
+    id_col: str,
+    value: Column,
+    name: str,
+    out: tuple[str, str] = ("doc_a", "doc_b"),
+) -> DataFrame:
+    """Join ``value``, evaluated per ``frame`` row, onto both ids of
+    ``pairs`` as ``<name>_a``/``<name>_b`` — the verify join of the
+    MinHash (shingle sets) and SRP-LSH (vectors) candidate pairs."""
+    for side, o in zip("ab", out):
+        pairs = pairs.join(
+            frame.select(F.col(id_col).alias(o), value.alias(f"{name}_{side}")), o
+        )
+    return pairs
+
+
 def round6(x, dp: int = 6):
     """Round half AWAY FROM ZERO — the numpy mirror of JVM ``F.round``
     (HALF_UP) and DuckDB ``round``. ``np.round`` is half-to-EVEN, so a
@@ -159,9 +218,7 @@ def exact_dedup(
 
     Returns one row per duplicate *group* (n_dupes ≥ 2), survivor = min id.
     """
-    keyed = df.select(
-        F.md5(norm_text(F.col(text_col))).alias("dup_key"), F.col(id_col)
-    )
+    keyed = df.select(content_key(text_col).alias("dup_key"), F.col(id_col))
     return (
         keyed.groupBy("dup_key")
         .agg(
@@ -310,6 +367,9 @@ def jaccard_pairs(
     # exists for on the LSH/SimHash paths)
     sh = bounded_persist(doc_shingles(df, text_col, id_col, n))
     if max_doc_freq is not None:
+        # a groupBy count, not capped_bucket_frame's window count: the
+        # partial aggregate never gathers all rows of a stopword shingle
+        # into one task (reasoned from WindowExec, not measured)
         freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_"))
         sh = bounded_persist(
             sh.join(
@@ -317,12 +377,9 @@ def jaccard_pairs(
             ).drop("df_")
         )
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.alias("a")
-    b = sh.alias("b")
     inter = (
-        a.join(b, "shingle")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        _bucket_pairs(sh, "doc_id", ["shingle"])
+        .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
@@ -330,14 +387,7 @@ def jaccard_pairs(
     out = (
         inter.join(sa, "doc_a")
         .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter")
-                / (F.col("na") + F.col("nb") - F.col("n_inter")),
-                6,
-            ),
-        )
+        .withColumn("jaccard", _jaccard(F.col("n_inter"), F.col("na"), F.col("nb")))
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
@@ -573,12 +623,14 @@ def capped_bucket_frame(
 ) -> DataFrame:
     """Bucket-size cap + persist so the upstream stage runs exactly ONCE.
 
-    The LSH-family pair generators (:func:`lsh_candidate_pairs`,
-    :func:`simhash_pairs`, ``ann.hyperplane_lsh_pairs``) self-join an
-    expensive frame — an Arrow signature UDF or a 60-aggregate shuffle —
-    on bucket keys. Without a persist, that stage re-executes once per
-    join side PLUS once for the bucket-size aggregate (3-4× the corpus
-    scan at 100 TB). Here the cap is a window count over the same frame
+    Its callers are the LSH-family pair generators
+    (:func:`lsh_candidate_pairs`, :func:`simhash_pairs`,
+    ``ann.hyperplane_lsh_pairs``), which self-join an expensive frame — an
+    Arrow signature UDF or a 60-aggregate shuffle — on bucket keys with
+    :func:`_bucket_pairs`. (:func:`jaccard_pairs` persists its shingle
+    frame with a groupBy-count cap instead.) Without a persist, that
+    stage re-executes once per join side PLUS once for the bucket-size
+    aggregate (3-4× the corpus scan at 100 TB). Here the cap is a window count over the same frame
     (no separate sizes join) and the capped frame is persisted
     MEMORY_AND_DISK (deserialized in memory while it fits — these frames
     are a few fixed-width columns per banded row — spilling to disk when
@@ -619,17 +671,10 @@ def bucket_cap_filter(frame: DataFrame, keys: list[str], cap: int | None) -> Dat
     )
 
 
-#: alias to the shared bounded-persist registry LIST (geowombat_spark.
-#: cache._LIVE — same object, mutated in place, so the alias stays live).
-#: The size knob is cache.MAX_LIVE itself: an int alias here would
-#: snapshot the value at import and turn the knob dead.
-_LIVE_CAPPED_FRAMES = _cache._LIVE
-
-
 def band_hash_structs(bands: int = 4, rows: int = 4) -> Column:
     """Array of (band_idx, band_hash) structs from mh0..mh{bands·rows-1}
-    columns — band hash = md5 over the band's signature components. Shared
-    by the batch self-join and the streaming stateful-bucket operator."""
+    columns — band hash = md5 over the band's signature components.
+    Exploded by :func:`_band_rows` only."""
     return F.array(
         *[
             F.struct(
@@ -642,6 +687,20 @@ def band_hash_structs(bands: int = 4, rows: int = 4) -> Column:
             )
             for bi in range(bands)
         ]
+    )
+
+
+def _band_rows(sig: DataFrame, bands: int, rows: int, *extra: Column) -> DataFrame:
+    """``(doc_id, band_idx, band_hash, *extra)``: one row per (doc, band)
+    of a ``doc_id, mh0..`` signature frame. The one banding step of the
+    batch pairs (:func:`lsh_candidate_pairs`), the band index
+    (:func:`minhash_band_index`) and the stream
+    (``streaming.dedup.band_stream``), so the three cannot drift."""
+    banded = sig.select(
+        "doc_id", F.explode(band_hash_structs(bands, rows)).alias("bh"), *extra
+    )
+    return banded.select(
+        "doc_id", "bh.band_idx", "bh.band_hash", *banded.columns[2:]
     )
 
 
@@ -663,23 +722,9 @@ def lsh_candidate_pairs(
     pathological head. Defaults to :data:`DEFAULT_MAX_BUCKET`; ``None``
     opts out (exact recall, unbounded worst case).
     """
-    band_structs = band_hash_structs(bands, rows)
-    banded = sig.select(
-        "doc_id", F.explode(band_structs).alias("bh")
-    ).select("doc_id", "bh.band_idx", "bh.band_hash")
-    banded = capped_bucket_frame(
-        banded, ["band_idx", "band_hash"], max_bucket_size
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(b, ["band_idx", "band_hash"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    keys = ["band_idx", "band_hash"]
+    banded = capped_bucket_frame(_band_rows(sig, bands, rows), keys, max_bucket_size)
+    return _bucket_pairs(banded, "doc_id", keys).distinct()
 
 
 def minhash_dedup_pairs(
@@ -703,31 +748,13 @@ def minhash_dedup_pairs(
     """
     sig = minhash_signatures(df, text_col, id_col, n, bands * rows)
     cands = lsh_candidate_pairs(sig, bands, rows, max_bucket_size=max_bucket_size)
-    sets_ = df.select(
-        F.col(id_col).alias("doc_id"), shingles_col(text_col, n).alias("sh_set")
-    )
-    sa = sets_.select(
-        F.col("doc_id").alias("doc_a"), F.col("sh_set").alias("sh_a")
-    )
-    sb = sets_.select(
-        F.col("doc_id").alias("doc_b"), F.col("sh_set").alias("sh_b")
-    )
     n_inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
     return (
-        cands.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _join_both_sides(cands, df, id_col, shingles_col(text_col, n), "sh")
         .withColumn("n_inter", n_inter)
         .withColumn(
             "jaccard",
-            F.round(
-                F.col("n_inter")
-                / (
-                    F.size(F.col("sh_a"))
-                    + F.size(F.col("sh_b"))
-                    - F.col("n_inter")
-                ),
-                6,
-            ),
+            _jaccard(F.col("n_inter"), F.size("sh_a"), F.size("sh_b")),
         )
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
@@ -822,19 +849,15 @@ def simhash_pairs(
     chunked = sig.select("doc_id", "simhash", F.explode(chunk_structs).alias("c")).select(
         "doc_id", "simhash", "c.chunk_idx", "c.chunk_val"
     )
-    chunked = capped_bucket_frame(
-        chunked, ["chunk_idx", "chunk_val"], max_bucket_size
-    )
-    a = chunked.alias("a")
-    b = chunked.alias("b")
+    keys = ["chunk_idx", "chunk_val"]
+    chunked = capped_bucket_frame(chunked, keys, max_bucket_size)
     return (
-        a.join(b, ["chunk_idx", "chunk_val"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        _bucket_pairs(chunked, "doc_id", keys, carry=("simhash",))
         .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
+            "doc_a",
+            "doc_b",
             F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
+                F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))
             ).alias("hamming"),
         )
         .distinct()
@@ -1048,10 +1071,7 @@ def exact_index(
     persistent side of :func:`dedup_against`. Store it bucketed by
     ``dup_key`` so batch joins never exchange the index."""
     return (
-        df.select(
-            F.md5(norm_text(F.col(text_col))).alias("dup_key"),
-            F.col(id_col),
-        )
+        df.select(content_key(text_col).alias("dup_key"), F.col(id_col))
         .groupBy("dup_key")
         .agg(F.min(id_col).alias("owner_id"))
     )
@@ -1101,7 +1121,6 @@ def dedup_against(
     index: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_index: bool = False,
 ) -> DataFrame:
     """Incremental exact dedup: audit a new ``batch`` against a corpus
     :func:`exact_index`.
@@ -1118,24 +1137,16 @@ def dedup_against(
     Plan: one window over the batch keyed on ``dup_key`` (batch-internal
     survivor), then a left join to the index on the same key — the batch
     is already hash-partitioned by ``dup_key`` from the window, so with a
-    ``dup_key``-bucketed index the join moves nothing. ``broadcast_index``
-    is an explicit opt-in for small indexes only; the default assumes the
-    index is corpus-sized (billions of keys) and streams it through a
-    shuffle hash join.
+    ``dup_key``-bucketed index the join moves nothing. A small index is
+    broadcast by AQE from its measured size; a corpus-sized one (billions
+    of keys) streams through a shuffle hash join.
     """
-    from pyspark.sql.window import Window
-
-    keyed = batch.select(
-        F.col(id_col),
-        F.md5(norm_text(F.col(text_col))).alias("dup_key"),
-    )
+    keyed = batch.select(F.col(id_col), content_key(text_col).alias("dup_key"))
     w = Window.partitionBy("dup_key")
     keyed = keyed.withColumn(
         "batch_survivor", F.col(id_col) == F.min(id_col).over(w)
     )
     idx = index.select("dup_key", F.col("owner_id").alias("corpus_owner"))
-    if broadcast_index:
-        idx = F.broadcast(idx)
     out = keyed.join(idx, "dup_key", "left")
     return out.select(
         F.col(id_col),
@@ -1170,11 +1181,7 @@ def minhash_band_index(
     k = bands * rows
     sig = minhash_signatures(df, text_col, id_col, n, k)
     sig_arr = F.array(*[F.col(f"mh{i}") for i in range(k)]).alias("sig")
-    return sig.select(
-        F.col("doc_id").alias(id_col) if id_col != "doc_id" else "doc_id",
-        F.explode(band_hash_structs(bands, rows)).alias("bh"),
-        sig_arr,
-    ).select(id_col, "bh.band_idx", "bh.band_hash", "sig")
+    return _band_rows(sig, bands, rows, sig_arr).withColumnRenamed("doc_id", id_col)
 
 
 def minhash_family_fingerprint(n: int, bands: int, rows: int) -> str:

@@ -14,11 +14,14 @@ bucket*:
   the min doc id ever seen in the bucket; a document whose every band
   bucket already existed is flagged as a near-dup candidate. This is the
   streaming analogue of LSH banding — state size is O(#live buckets),
-  and a processing-time timeout evicts idle buckets.
+  and a processing-time timeout evicts idle buckets. Doc ids may be
+  integers or strings, as in the batch path.
 
-Both run the same md5-based portable hash arithmetic as the batch path,
-so a document flagged by the stream matches the batch
-``minhash_dedup_pairs`` candidate set for the same (bands, rows) config.
+Both call the batch code: the content key is ``pipeline.dedup.content_key``
+and ``band_stream`` bands with ``pipeline.dedup._band_rows``, the banding
+step of ``lsh_candidate_pairs`` and ``minhash_band_index``. So a document
+flagged by the stream matches the batch ``minhash_dedup_pairs`` candidate
+set for the same (bands, rows) config.
 """
 
 from __future__ import annotations
@@ -28,19 +31,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import IntegralType
 
-from ..pipeline.dedup import (
+from ..pipeline.dedup import (  # noqa: F401  (content_key re-exported)
     DEFAULT_MAX_BUCKET,
-    band_hash_structs,
+    _band_rows,
+    content_key,
     minhash_sig_cols,
-    norm_text,
 )
-
-
-def content_key(text_col: str = "text") -> F.Column:
-    """Portable content hash (md5 of normalized text) — identical to the
-    batch ``exact_dedup`` key."""
-    return F.md5(norm_text(F.col(text_col)))
 
 
 def band_stream(
@@ -52,16 +50,15 @@ def band_stream(
     rows: int = 4,
 ) -> DataFrame:
     """Stream of (doc_id, band_idx, band_hash): the row-local MinHash
-    signature (``minhash_sig_cols`` — no stateful agg needed) exploded into
-    its LSH bands, hashed with the SAME expressions as the batch
-    ``lsh_candidate_pairs``, so streaming flags agree with batch pairs."""
+    signature (``minhash_sig_cols`` — no stateful agg needed) banded by
+    ``pipeline.dedup._band_rows``, the banding step of the batch
+    ``lsh_candidate_pairs``, so streaming flags agree with batch pairs.
+    ``doc_id`` keeps the type of ``id_col`` (integer or string)."""
     sig = stream.select(
         F.col(id_col).alias("doc_id"),
         *minhash_sig_cols(text_col, n, bands * rows),
     )
-    return sig.select(
-        "doc_id", F.explode(band_hash_structs(bands, rows)).alias("bh")
-    ).select("doc_id", "bh.band_idx", "bh.band_hash")
+    return _band_rows(sig, bands, rows)
 
 
 def stream_exact_dedup(
@@ -125,20 +122,22 @@ def stream_dedup_against(
     )
 
 
-_FLAG_SCHEMA = (
-    "doc_id bigint, band_idx int, band_hash string, seen_min bigint, "
-    "status string"
-)
-_STATE_SCHEMA = "min_doc bigint, n bigint, occupied boolean"
-
-#: legacy seen_min sentinel for over-cap buckets. ``status`` is the
-#: authoritative verdict ('fresh' | 'seen' | 'overflow'): sentinel values
-#: inside the id domain would collide with real negative doc ids, which
-#: the batch path (plain ``a.doc_id < b.doc_id`` joins) handles fine.
+#: legacy seen_min sentinel for over-cap buckets of integer ids. ``status``
+#: is the authoritative verdict ('fresh' | 'seen' | 'overflow'): sentinel
+#: values inside the id domain would collide with real negative doc ids,
+#: which the batch path (plain ``a.doc_id < b.doc_id`` joins) handles fine.
 BUCKET_OVERFLOW = -2
 
 
-def _make_update_bucket(max_bucket_size: int | None, timeout_ms: int):
+def _make_update_bucket(
+    max_bucket_size: int | None, timeout_ms: int, integral: bool
+):
+    # integer ids fold as int64 with the legacy -1/-2 seen_min sentinels;
+    # any other id type (strings) folds as objects with NULL sentinels
+    dtype, fresh, overflow = (
+        ("int64", -1, BUCKET_OVERFLOW) if integral else (object, None, None)
+    )
+
     def _update_bucket(key, pdfs, state: GroupState):
         if state.hasTimedOut:
             state.remove()
@@ -147,17 +146,17 @@ def _make_update_bucket(max_bucket_size: int | None, timeout_ms: int):
         # min_doc: negative doc ids are legal (the batch path accepts any
         # int64), so "min_doc < 0 means empty" would corrupt the fold
         min_doc, n_seen, occupied = (
-            state.get if state.exists else (0, 0, False)
+            state.get if state.exists else (0 if integral else None, 0, False)
         )
         # Drain EVERY Arrow chunk before sorting: chunk boundaries are a
         # transport artifact (arrow batch size, upstream slicing), and a
         # per-chunk sort would make seen_min depend on which chunk a doc
         # landed in — nondeterministic across replays. One concat + one
         # sort gives the same min-id-first fold the batch path uses.
-        parts = [pdf["doc_id"].to_numpy(dtype="int64") for pdf in pdfs]
-        ids = np.sort(np.concatenate(parts)) if parts else np.array([], "int64")
+        parts = [pdf["doc_id"].to_numpy(dtype=dtype) for pdf in pdfs]
+        ids = np.sort(np.concatenate(parts)) if parts else np.array([], dtype)
         m = len(ids)
-        seen = np.full(m, -1, dtype="int64")
+        seen = np.full(m, fresh, dtype=dtype)
         has_prior = np.empty(m, dtype=bool)
         if m:
             # seen_min[i] = min(state, ids[:i]) — a shifted prefix-min,
@@ -173,9 +172,7 @@ def _make_update_bucket(max_bucket_size: int | None, timeout_ms: int):
                     np.minimum(before, min_doc) if occupied else before
                 )
                 has_prior[1:] = True
-            new_min = int(
-                min(min_doc, prefix[-1]) if occupied else prefix[-1]
-            )
+            new_min = min(min_doc, prefix[-1]) if occupied else prefix[-1]
             new_occupied = True
         else:
             new_min, new_occupied = min_doc, occupied
@@ -186,9 +183,11 @@ def _make_update_bucket(max_bucket_size: int | None, timeout_ms: int):
             # every row this trigger gets the explicit OVERFLOW marker
             # rather than a false "fresh"/"seen" verdict, and the batch
             # path would have dropped the bucket's candidates entirely
-            seen[:] = BUCKET_OVERFLOW
+            seen[:] = overflow
             status = np.full(m, "overflow")
-        state.update((int(new_min), int(n_seen + m), bool(new_occupied)))
+        if integral:
+            new_min = int(new_min)
+        state.update((new_min, int(n_seen + m), bool(new_occupied)))
         state.setTimeoutDuration(timeout_ms)
         yield pd.DataFrame(
             {
@@ -209,23 +208,28 @@ def stream_lsh_neardup_flags(
     timeout_ms: int = 3600 * 1000,
 ) -> DataFrame:
     """Stateful LSH-bucket membership: input is a stream of
-    (doc_id, band_idx, band_hash) rows (the streaming side computes band
-    hashes with the same ``lsh_candidate_pairs`` banding expressions);
-    output marks each row with ``status`` ('fresh' = bucket had no prior
-    occupant, 'seen' = occupied, 'overflow' = skew cap tripped) and, for
-    'seen' rows, ``seen_min`` — the minimum doc id that previously
-    occupied the bucket. A doc whose every band emitted 'seen' is a
-    near-dup candidate against those prior docs. ``status`` is the
-    authoritative verdict; the -1/-2 values seen_min carries on
-    fresh/overflow rows are legacy conveniences that would be ambiguous
-    on their own for corpora with negative doc ids.
+    (doc_id, band_idx, band_hash) rows (:func:`band_stream`, which bands
+    with the batch ``lsh_candidate_pairs`` banding step); output marks
+    each row with ``status`` ('fresh' = bucket had no prior occupant,
+    'seen' = occupied, 'overflow' = skew cap tripped) and, for 'seen'
+    rows, ``seen_min`` — the minimum doc id that previously occupied the
+    bucket. A doc whose every band emitted 'seen' is a near-dup candidate
+    against those prior docs. ``status`` is the authoritative verdict.
+
+    Id types: ``doc_id`` and ``seen_min`` keep the input's ``doc_id`` type
+    when it is not an integer (string ids compare in string order, so
+    ``'doc-10' < 'doc-9'``); ``seen_min`` is then NULL on fresh and
+    overflow rows. Integer ids of any width come out as ``bigint`` with
+    the legacy -1 (fresh) and -2 (overflow) ``seen_min`` values, which
+    would be ambiguous on their own for corpora with negative doc ids.
 
     ``max_bucket_size`` is the same skew guard the batch path defaults ON
     (one boilerplate bucket would otherwise funnel every trigger into a
     single state key): once a bucket's cumulative membership exceeds the
-    cap, its rows carry ``seen_min = BUCKET_OVERFLOW`` (−2, "not
-    evaluated") — matching the batch path, which emits NO candidates for
-    over-cap buckets. Pass ``None`` to opt out.
+    cap, its rows carry status 'overflow' (for integer ids also
+    ``seen_min = BUCKET_OVERFLOW``, −2, "not evaluated") — matching the
+    batch path, which emits NO candidates for over-cap buckets. Pass
+    ``None`` to opt out.
 
     State per bucket is (min id, count); idle buckets are evicted by a
     processing-time timeout (``timeout_ms``) — the state store stays
@@ -249,12 +253,16 @@ def stream_lsh_neardup_flags(
        Recovery is a checkpoint reset, which discards bucket membership —
        previously-seen docs then re-flag 'fresh' once. Re-seed membership
        by replaying the corpus band index through the stream (or start
-       from a fresh checkpoint and accept one-time re-flags).
+       from a fresh checkpoint and accept one-time re-flags). Integer ids
+       keep the ``bigint`` schemas above, so their checkpoints restart.
     """
+    id_type = banded.schema["doc_id"].dataType
+    integral = isinstance(id_type, IntegralType)
+    t = "bigint" if integral else id_type.simpleString()
     return banded.groupBy("band_idx", "band_hash").applyInPandasWithState(
-        _make_update_bucket(max_bucket_size, timeout_ms),
-        _FLAG_SCHEMA,
-        _STATE_SCHEMA,
+        _make_update_bucket(max_bucket_size, timeout_ms, integral),
+        f"doc_id {t}, band_idx int, band_hash string, seen_min {t}, status string",
+        f"min_doc {t}, n bigint, occupied boolean",
         "append",
         GroupStateTimeout.ProcessingTimeTimeout,
     )

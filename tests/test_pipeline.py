@@ -1184,7 +1184,7 @@ def test_capped_bucket_frame_registry_bounded(spark):
     base = spark.createDataFrame(
         [(i, i % 3) for i in range(30)], "vec_id long, bucket long"
     )
-    before = list(dedup._LIVE_CAPPED_FRAMES)
+    before = list(cache._LIVE)
     frames = []
     for i in range(cache.MAX_LIVE + 4):
         f = dedup.capped_bucket_frame(
@@ -1192,7 +1192,7 @@ def test_capped_bucket_frame_registry_bounded(spark):
         )
         f.count()
         frames.append(f)
-    assert len(dedup._LIVE_CAPPED_FRAMES) <= cache.MAX_LIVE
+    assert len(cache._LIVE) <= cache.MAX_LIVE
     # the newest frames are still cached; the oldest were unpersisted
     assert frames[-1].storageLevel.useMemory or frames[-1].storageLevel.useDisk
     evicted = frames[0]
@@ -1200,7 +1200,7 @@ def test_capped_bucket_frame_registry_bounded(spark):
     # evicted frames still compute correctly (lazy recompute)
     assert evicted.count() == 30
     # cleanup so other tests see a quiet registry
-    for f in dedup._LIVE_CAPPED_FRAMES[len(before):]:
+    for f in cache._LIVE[len(before):]:
         f.unpersist(blocking=False)
 
 
@@ -1347,6 +1347,48 @@ def test_string_id_surfaces_ann_and_frames(spark):
     fr = multimodal.extract_frames(frames_df, every=1).collect()
     assert [r["frame_idx"] for r in fr] == [0, 1, 2]
     assert all(r["doc_id"] == "docA" for r in fr)
+
+
+def test_pair_generators_agree_on_string_ids(spark, emb_df):
+    """Jaccard, MinHash-LSH, SimHash and SRP-LSH give the same unordered
+    pairs and scores on string ids as on integer ids: the id only names
+    and orders a pair's ends ('d10' < 'd9' as strings, so pairs flip)."""
+    texts = [
+        (9, "the cat sat on the mat by the door today"),
+        (10, "the cat sat on the mat by the door today again"),
+        (11, "the cat sat on a mat by the door today"),
+        (100, "a dog ran in the park at noon with a ball"),
+        (12, "a dog ran in the park at noon with a ball"),
+        (2, "something else entirely with no shared words"),
+    ]
+    txt_int = spark.createDataFrame(texts, "doc_id long, text string")
+    txt_str = spark.createDataFrame(
+        [(f"d{i}", t) for i, t in texts], "doc_id string, text string"
+    )
+    emb_int, _ = emb_df
+    emb_str = emb_int.select(
+        F.concat(F.lit("d"), F.col("vec_id")).alias("vec_id"), "embedding"
+    )
+
+    def unordered(df, a, b, score):
+        name = lambda v: v if isinstance(v, str) else f"d{v}"  # noqa: E731
+        return {
+            frozenset((name(r[a]), name(r[b]))): r[score] for r in df.collect()
+        }
+
+    for run, ints, strs, cols in [
+        (lambda d: dedup.jaccard_pairs(d, threshold=0.3), txt_int, txt_str,
+         ("doc_a", "doc_b", "jaccard")),
+        (lambda d: dedup.minhash_dedup_pairs(d, threshold=0.3), txt_int,
+         txt_str, ("doc_a", "doc_b", "jaccard")),
+        (lambda d: dedup.simhash_pairs(d, max_hamming=3), txt_int, txt_str,
+         ("doc_a", "doc_b", "hamming")),
+        (lambda d: ann.hyperplane_lsh_pairs(d, threshold=0.4), emb_int,
+         emb_str, ("vec_a", "vec_b", "cosine")),
+    ]:
+        want = unordered(run(ints), *cols)
+        assert want, cols
+        assert unordered(run(strs), *cols) == want, cols
 
 
 def test_null_text_convention_quality_charlm_exact_dedup(spark):

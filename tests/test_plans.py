@@ -426,14 +426,27 @@ def _embeddings(spark):
 
 
 def test_embedding_pair_plans_build_without_a_job(spark):
-    """The exact (blocked matmul) and approximate (SRP-LSH) all-pairs plans
-    are lazy: building either starts no job."""
+    """The near-duplicate plans are lazy: building the exact (blocked
+    matmul) and approximate (SRP-LSH) embedding pairs, the Jaccard,
+    MinHash-LSH and SimHash text pairs, or an incremental audit against an
+    exact or a MinHash band index starts no job."""
     from geowombat_spark.pipeline import ann, dedup
 
     emb = _embeddings(spark)
+    txt = spark.createDataFrame(
+        [(i, f"doc {i % 7} shares these words {i % 3}") for i in range(40)],
+        "doc_id long, text string",
+    )
     for name, build in {
         "embedding_neardup_pairs": lambda: dedup.embedding_neardup_pairs(emb),
         "hyperplane_lsh_pairs": lambda: ann.hyperplane_lsh_pairs(emb),
+        "jaccard_pairs": lambda: dedup.jaccard_pairs(txt),
+        "minhash_dedup_pairs": lambda: dedup.minhash_dedup_pairs(txt),
+        "simhash_pairs": lambda: dedup.simhash_pairs(txt),
+        "dedup_against": lambda: dedup.dedup_against(txt, dedup.exact_index(txt)),
+        "neardup_against": lambda: dedup.neardup_against(
+            txt, dedup.minhash_band_index(txt)
+        ),
     }.items():
         _, jobs = _build(spark, f"test-{name}-build", build)
         assert jobs == set(), f"{name}: building started jobs {sorted(jobs)}"

@@ -456,3 +456,41 @@ def test_stream_lsh_negative_doc_ids(spark, stream_dirs):
         by_doc.setdefault(r["doc_id"], []).append((r["status"], r["seen_min"]))
     assert by_doc[-5] == [("fresh", -1)] * 4
     assert by_doc[7] == [("seen", -5)] * 4
+
+
+def test_stream_lsh_string_doc_ids(spark, stream_dirs):
+    """String doc ids fold in string order and keep their type:
+    'doc-9', then 'doc-10', then 'doc-2' in the same buckets. 'doc-10'
+    sees 'doc-9'; 'doc-2' sees 'doc-10', the string minimum (numeric order
+    would say 9). Fresh rows carry a NULL seen_min."""
+    from geowombat_spark.streaming import dedup as sdedup
+
+    text = "string identifier document shared text for the bucket fold"
+    for i, (doc, ts) in enumerate(
+        [("doc-9", "00:00:10"), ("doc-10", "00:01:10"), ("doc-2", "00:02:10")]
+    ):
+        _text_batch(
+            spark, stream_dirs["in"], [(doc, text, f"2026-01-01 {ts}")], f"t{i}"
+        )
+    stream = (
+        spark.readStream.schema("doc_id string, text string, event_ts timestamp")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(stream_dirs["in"])
+    )
+    flags = sdedup.stream_lsh_neardup_flags(sdedup.band_stream(stream))
+    assert dict(flags.dtypes)["seen_min"] == "string"
+    q = (
+        flags.writeStream.format("memory")
+        .queryName("lsh_str_test")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    _stop_after_idle_batch(q, 3)
+    rows = spark.sql("select * from lsh_str_test").collect()
+    by_doc = {}
+    for r in rows:
+        by_doc.setdefault(r["doc_id"], []).append((r["status"], r["seen_min"]))
+    assert by_doc["doc-9"] == [("fresh", None)] * 4
+    assert by_doc["doc-10"] == [("seen", "doc-9")] * 4
+    assert by_doc["doc-2"] == [("seen", "doc-10")] * 4
